@@ -69,19 +69,10 @@ object LabelStore {
   private def bucketCol(c: org.apache.spark.sql.Column, nBuckets: Int) =
     pmod(c, lit(nBuckets.toLong)).cast("int")
 
-  private def fsOf(spark: SparkSession, path: String) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
-  /** Fresh immutable pool dir for one write. */
-  private def newPoolDir(root: String): String =
-    Artifacts.newPoolDir(root)
-
   /** bucket → pool subdir for every non-empty bucket under `dataDir`. */
   private def listBucketDirs(spark: SparkSession,
       dataDir: String): Map[Int, String] = {
-    val (f, p) = fsOf(spark, dataDir)
+    val (f, p) = Artifacts.fs(spark, dataDir)
     if (!f.exists(p)) return Map.empty
     f.listStatus(p).toSeq.filter(_.isDirectory).flatMap { st =>
       val n = st.getPath.getName
@@ -92,12 +83,9 @@ object LabelStore {
   }
 
   // meta + manifest are tiny bucket-domain tables written ONCE PER
-  // TRIGGER by the streaming CC maintenance loop — since optimization
-  // r17 they are plain text files written/read straight through the
-  // FileSystem (zero Spark jobs; the r16 parquet pair cost two
-  // fixed-overhead write jobs and two read jobs per generation).
-  // Reads keep a parquet branch for layouts committed by earlier
-  // rounds (path is a DIRECTORY there, a FILE here).
+  // TRIGGER by the streaming CC maintenance loop — plain text files
+  // written/read straight through the FileSystem, so they cost no
+  // Spark job (optimization r17)
   private def writeGen(spark: SparkSession, root: String, nBuckets: Int,
       manifest: Map[Int, String]): Unit = {
     Artifacts.publish(spark, root) { gen =>
@@ -108,31 +96,15 @@ object LabelStore {
     prunePool(spark, root)
   }
 
-  private def isFile(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    f.exists(p) && f.getFileStatus(p).isFile
-  }
-
-  /** The bucket → dir manifest of ONE generation (spec-facing; format
-    * aware — text since r17, parquet for older layouts).
-    */
+  /** The bucket → dir manifest of ONE generation (spec-facing). */
   def manifestOfGen(spark: SparkSession, gen: String): Map[Int, String] =
     manifestOf(spark, gen)._2
 
   private def manifestOf(spark: SparkSession,
       gen: String): (Int, Map[Int, String]) =
-    if (isFile(spark, s"$gen/meta")) {
-      val n = Artifacts.readLinesFile(spark, s"$gen/meta").head.trim.toInt
-      val man = Artifacts.readLinesFile(spark, s"$gen/manifest")
-        .map(_.split("\t", 2)).map(a => a(0).toInt -> a(1)).toMap
-      (n, man)
-    } else {
-      val n = spark.read.parquet(s"$gen/meta").collect()(0).getInt(0)
-      val man = spark.read.parquet(s"$gen/manifest").collect()
-        .map(r => r.getInt(0) -> r.getString(1)).toMap
-      (n, man)
-    }
+    (Artifacts.readLinesFile(spark, s"$gen/meta").head.trim.toInt,
+      Artifacts.readLinesFile(spark, s"$gen/manifest")
+        .map(_.split("\t", 2)).map(a => a(0).toInt -> a(1)).toMap)
 
   /** Drop pool dirs no committed generation references (the previous
     * generation is retained by [[Artifacts.publish]], so its manifest
@@ -161,7 +133,7 @@ object LabelStore {
   def save(labels: DataFrame, root: String, nBuckets: Int = 64): Unit = {
     require(nBuckets >= 1)
     val spark = labels.sparkSession
-    val dataDir = newPoolDir(root)
+    val dataDir = Artifacts.newPoolDir(root)
     labels.select(col("id").cast("long").as("id"),
         col("component").cast("long").as("component"))
       .withColumn("bucket", bucketCol(col("component"), nBuckets))
@@ -212,7 +184,7 @@ object LabelStore {
     import spark.implicits._
     val (_, man) = manifestOf(spark, Artifacts.requireGen(spark, root))
     man.toSeq.sorted.map { case (b, dir) =>
-      val (f, p) = fsOf(spark, dir)
+      val (f, p) = Artifacts.fs(spark, dir)
       val st = f.listStatus(p).toSeq.filter(_.isFile)
         .filter(_.getPath.getName.endsWith(".parquet"))
       (b, st.map(_.getLen).sum, st.size)
@@ -249,7 +221,7 @@ object LabelStore {
   def rebucket(spark: SparkSession, root: String, newBuckets: Int): Unit = {
     require(newBuckets >= 1)
     val labels = load(spark, root)
-    val dataDir = newPoolDir(root)
+    val dataDir = Artifacts.newPoolDir(root)
     labels.withColumn("bucket", bucketCol(col("component"), newBuckets))
       .repartition(col("bucket"))
       .sortWithinPartitions(col("bucket"), col("id"))
@@ -323,7 +295,7 @@ object LabelStore {
         coalesce(col("_new"), col("component")).as("component"))
       .unionAll(newRows)
       .withColumn("bucket", bucketCol(col("component"), nB))
-    val deltaDir = newPoolDir(root)
+    val deltaDir = Artifacts.newPoolDir(root)
     updated.repartition(col("bucket"))
       .sortWithinPartitions(col("bucket"), col("id"))
       .write.partitionBy("bucket").parquet(deltaDir)
@@ -393,7 +365,7 @@ object LabelStore {
       .select(col("id"), col("component")) // USING join reordered cols
       .unionAll(replacement)
       .withColumn("bucket", bucketCol(col("component"), nB))
-    val deltaDir = newPoolDir(root)
+    val deltaDir = Artifacts.newPoolDir(root)
     newContent.repartition(col("bucket"))
       .sortWithinPartitions(col("bucket"), col("id"))
       .write.partitionBy("bucket").parquet(deltaDir)

@@ -3,6 +3,8 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.tools.Artifacts
+
 /** Build-once / classify-many MinHash+LSH index — the durable-artifact
   * half of [[Dedup.minhashIncremental]], completing the serving trio
   * with [[graft.similarity.IvfIndex]] (vectors) and
@@ -70,127 +72,76 @@ object MinHashIndex {
     */
   def save(index: Index, path: String): Unit = {
     val spark = index.buckets.sparkSession
-    val pool = graft.tools.Artifacts.newPoolDir(path)
-    index.buckets.write.mode("overwrite").parquet(s"$pool/buckets")
-    index.shingles.write.mode("overwrite").parquet(s"$pool/shingles")
-    publishGen(spark, path, index, Seq(pool), carryFrom = None)
-  }
-
-  private def publishGen(spark: SparkSession, path: String, index: => Index,
-      partDirs: Seq[String], carryFrom: Option[(String, Set[String])],
-      tag: Option[String] = None,
-      copyParamsFrom: Option[String] = None): Unit = {
-    import spark.implicits._
-    graft.tools.Artifacts.publish(spark, path) { gen =>
-      // frozen-params publishes (append/compact) re-commit the SAME
-      // params row — copy the parent's parquet bytes instead of paying
-      // a Spark write job per trigger (optimization r17)
-      copyParamsFrom match {
-        case Some(parent) =>
-          graft.tools.Artifacts.copyGenFile(spark, parent, gen, "params")
-        case None => Seq((index.shingleK, index.bands, index.rowsPerBand))
+    Artifacts.publishGen(spark, path,
+      Seq(PartDirs -> Seq(writeSides(index.buckets, index.shingles, path))),
+      write = { gen =>
+        import spark.implicits._
+        Seq((index.shingleK, index.bands, index.rowsPerBand))
           .toDF("shingle_k", "bands", "rows_per_band")
-          .repartition(1).write.mode("overwrite").parquet(s"$gen/params")
-      }
-      graft.tools.Artifacts.writeDirManifest(spark, gen, "part_dirs",
-        path, partDirs)
-      carryFrom.foreach { case (parent, folded) =>
-        graft.tools.Artifacts.carryTombstones(spark, gen, parent, folded)
-      }
-      tag.foreach(t => graft.tools.Artifacts.writeTag(spark, gen, t))
-    }
-    graft.tools.Artifacts.prunePool(spark, path,
-      graft.tools.Artifacts.committedGens(spark, path)
-        .flatMap(g => partDirsOf(spark, path, g)))
+          .repartition(1).write.parquet(s"$gen/params")
+      })
   }
 
-  /** The generation's part dirs in publish order; a pre-r14 layout
-    * (buckets/shingles inside the generation) falls back to the
-    * generation dir itself, whose `buckets`/`shingles` children are
-    * exactly the old layout.
-    */
-  private[graft] def partDirsOf(spark: SparkSession, root: String,
-      gen: String): Seq[String] =
-    graft.tools.Artifacts.readDirManifest(spark, root, gen,
-      "part_dirs", "")
-      .map(_.stripSuffix("/"))
+  private val PartDirs = "part_dirs"
 
-  private def readSide(spark: SparkSession, dirs: Seq[String],
+  /** Both sides under ONE fresh pool dir. */
+  private def writeSides(buckets: DataFrame, shingles: DataFrame,
+      path: String): String = {
+    val pool = Artifacts.newPoolDir(path)
+    buckets.write.parquet(s"$pool/buckets")
+    shingles.write.parquet(s"$pool/shingles")
+    pool
+  }
+
+  private def readSide(spark: SparkSession, path: String, gen: String,
       side: String): DataFrame =
-    spark.read.parquet(dirs.map(d => s"$d/$side"): _*)
+    spark.read.parquet(Artifacts.dirsOf(spark, path, gen, PartDirs)
+      .map(d => s"$d/$side"): _*)
 
   def load(spark: SparkSession, path: String, idCol: String): Index = {
-    val gen = graft.tools.Artifacts.requireGen(spark, path)
+    val gen = Artifacts.requireGen(spark, path)
     // by NAME, not position: a column reorder in save must fail loudly
     // here, never silently swap shingle_k/bands and band differently
     // than the saved index (ADVICE r10)
     val p = spark.read.parquet(s"$gen/params").collect()(0)
-    val dirs = partDirsOf(spark, path, gen)
-    val bucketsRaw = readSide(spark, dirs, "buckets")
-    val shinglesRaw = readSide(spark, dirs, "shingles")
-    // the tombstone sidecar (if any) is consulted HERE, so every
-    // classify over a loaded index sees the post-delete corpus with
-    // zero changes to the probe path — an anti-join against the
-    // bounded tombstone set (broadcast-sized by the compaction
-    // cadence), exactly the q_cdc tombstone shape applied to an index
-    val (buckets, shingles) = tombstones(spark, gen) match {
-      case Some(t) =>
-        (bucketsRaw.join(t, bucketsRaw(idCol) === t("id"), "left_anti"),
-          shinglesRaw.join(t, shinglesRaw(idCol) === t("id"), "left_anti"))
-      case None => (bucketsRaw, shinglesRaw)
-    }
-    Index(buckets, shingles,
+    def side(name: String) = Artifacts.dropTombstoned(spark, gen,
+      readSide(spark, path, gen, name), idCol)
+    Index(side("buckets"), side("shingles"),
       idCol, p.getAs[Int]("shingle_k"), p.getAs[Int]("bands"),
       p.getAs[Int]("rows_per_band"))
   }
 
-  private def tombstones(spark: SparkSession, path: String): Option[DataFrame] =
-    if (graft.tools.Artifacts.exists(spark, s"$path/tombstones"))
-      Some(spark.read.parquet(s"$path/tombstones"))
-    else None
-
   /** Logical delete (takedowns/retractions — the maintenance
-    * operation [[append]] cannot express): append the ids to a
-    * tombstone sidecar; no bucket or shingle file is touched
-    * (spec-asserted). [[load]] consults the sidecar, so classify
-    * after a delete behaves EXACTLY like a rebuild without the
-    * deleted docs (the hash family is corpus-independent — removing
-    * rows changes no other row's keys). Cost ∝ |ids| per call plus
-    * |tombstones| per classify; [[compact]] folds the sidecar into
-    * the layout on the retrain cadence. A tombstoned id stays deleted
-    * until compaction — re-ingesting it needs a compact first.
+    * operation [[append]] cannot express):
+    * [[graft.tools.Artifacts.delete]] appends the ids to a tombstone
+    * sidecar; no bucket or shingle file is touched (spec-asserted).
+    * [[load]] consults the sidecar, so classify after a delete behaves
+    * EXACTLY like a rebuild without the deleted docs (the hash family
+    * is corpus-independent — removing rows changes no other row's
+    * keys). [[compact]] folds the sidecar into the layout on the
+    * retrain cadence. A tombstoned id stays deleted until compaction —
+    * re-ingesting it needs a compact first.
     */
   def delete(spark: SparkSession, path: String, ids: DataFrame,
       idCol: String): Unit =
-    ids.select(col(idCol).as("id")).distinct()
-      .write.mode("append").parquet(
-        s"${graft.tools.Artifacts.requireGen(spark, path)}/tombstones")
+    Artifacts.delete(spark, path, ids, idCol)
 
   /** Fold the tombstone sidecar into the layout AND collapse the
     * manifest: rewrite buckets and shingles minus the snapshotted
     * tombstone ids into ONE fresh pool dir, publish a new generation
-    * pointing at it. The tombstone snapshot is FILE-level (ADVICE
-    * r12's protocol): a delete() landing mid-compact is carried
-    * forward into the new generation's sidecar instead of being
-    * resurrected or lost. Run on the retrain cadence — between
-    * compactions deletes stay O(|ids|).
+    * pointing at it. The tombstone snapshot is FILE-level
+    * ([[graft.tools.Artifacts.snapshot]]): a delete() landing
+    * mid-compact is carried forward into the new generation's sidecar
+    * instead of being resurrected or lost. Run on the retrain cadence
+    * — between compactions deletes stay O(|ids|).
     */
   def compact(spark: SparkSession, path: String, idCol: String): Unit = {
-    val gen = graft.tools.Artifacts.requireGen(spark, path)
-    val snapFiles = graft.tools.Artifacts.tombstoneFiles(spark, gen)
-    val dirs = partDirsOf(spark, path, gen)
-    val idx = load(spark, path, idCol)
-    def fold(df: DataFrame): DataFrame =
-      if (snapFiles.isEmpty) df
-      else {
-        val snap = spark.read.parquet(snapFiles.toSeq: _*).localCheckpoint()
-        df.join(snap, df(idCol) === snap("id"), "left_anti")
-      }
-    val pool = graft.tools.Artifacts.newPoolDir(path)
-    fold(readSide(spark, dirs, "buckets")).write.parquet(s"$pool/buckets")
-    fold(readSide(spark, dirs, "shingles")).write.parquet(s"$pool/shingles")
-    publishGen(spark, path, idx, Seq(pool),
-      carryFrom = Some((gen, snapFiles)), copyParamsFrom = Some(gen))
+    val gen = Artifacts.requireGen(spark, path)
+    val snap = Artifacts.snapshot(spark, gen)
+    def side(name: String) = snap.fold(readSide(spark, path, gen, name), idCol)
+    val pool = writeSides(side("buckets"), side("shingles"), path)
+    Artifacts.publishGen(spark, path, Seq(PartDirs -> Seq(pool)),
+      parent = Some(gen), folded = snap.files, copy = Seq("params"))
   }
 
   /** Δ banding under the SAVED params — the shared head of
@@ -220,22 +171,14 @@ object MinHashIndex {
     * previous generation.
     */
   def append(spark: SparkSession, path: String, newDocs: DataFrame,
-      idCol: String, textCol: String): Unit = {
-    val gens = graft.tools.Artifacts.committedGens(spark, path)
-    require(gens.nonEmpty,
-      s"no committed index generation under $path — publish (save) first")
-    val gen = gens.last
-    val curDirs = partDirsOf(spark, path, gen)
-    val prevDirs = gens.dropRight(1).lastOption
-      .map(g => partDirsOf(spark, path, g).toSet).getOrElse(Set.empty)
-    curDirs.filterNot(prevDirs).lastOption match {
-      case Some(target) =>
+      idCol: String, textCol: String): Unit =
+    Artifacts.appendTarget(spark, path, PartDirs) match {
+      case (gen, Some(target)) =>
         val delta = bandDelta(spark, gen, newDocs, idCol, textCol)
         delta.buckets.write.mode("append").parquet(s"$target/buckets")
         delta.shingles.write.mode("append").parquet(s"$target/shingles")
-      case None => appendPublish(spark, path, newDocs, idCol, textCol)
+      case (_, None) => appendPublish(spark, path, newDocs, idCol, textCol)
     }
-  }
 
   /** Incremental maintenance, GENERATION-PUBLISHED (VERDICT r13
     * next-round #4 — appendPublish parity for the lexical index):
@@ -249,16 +192,12 @@ object MinHashIndex {
     */
   def appendPublish(spark: SparkSession, path: String, newDocs: DataFrame,
       idCol: String, textCol: String, tag: Option[String] = None): Unit = {
-    val gen = graft.tools.Artifacts.requireGen(spark, path)
+    val gen = Artifacts.requireGen(spark, path)
     val delta = bandDelta(spark, gen, newDocs, idCol, textCol)
-    val pool = graft.tools.Artifacts.newPoolDir(path)
-    delta.buckets.write.parquet(s"$pool/buckets")
-    delta.shingles.write.parquet(s"$pool/shingles")
-    publishGen(spark, path, delta,
-      graft.tools.Artifacts.migrateToPool(spark, path,
-        partDirsOf(spark, path, gen)) :+ pool,
-      carryFrom = Some((gen, Set.empty)), tag = tag,
-      copyParamsFrom = Some(gen))
+    val pool = writeSides(delta.buckets, delta.shingles, path)
+    Artifacts.publishGen(spark, path,
+      Seq(PartDirs -> (Artifacts.dirsOf(spark, path, gen, PartDirs) :+ pool)),
+      parent = Some(gen), copy = Seq("params"), tag = tag)
   }
 
   /** Bucket-occupancy view: (band_idx, band_hash, n) over the LSH

@@ -3,6 +3,8 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.tools.Artifacts
+
 /** Build-once / classify-many SEMANTIC near-dup index — the durable
   * artifact of [[Dedup.semanticBlocking]] PLUS the pre-blocked corpus
   * ([[Dedup.blockCorpus]]'s output), completing the durable serving
@@ -75,67 +77,38 @@ object SemanticIndex {
     * and params (bounded) live inside the generation. A rebuild
     * racing a concurrent [[load]] can never be read torn.
     */
-  def save(index: Index, path: String): Unit = {
-    val spark = index.corpusBlocked.sparkSession
-    val repsPool = graft.tools.Artifacts.newPoolDir(path)
-    index.blocking.reps.write.mode("overwrite").parquet(repsPool)
-    val corpusPool = graft.tools.Artifacts.newPoolDir(path)
-    index.corpusBlocked.write.mode("overwrite").parquet(corpusPool)
-    publishGen(spark, path, index.blocking.centroids,
-      index.blocking.blockSize, index.blocking.signBits, index.threshold,
-      repsPool, Seq(corpusPool), carryFrom = None)
-  }
+  def save(index: Index, path: String): Unit =
+    publishBuilt(index, path, parent = None, Set.empty, tag = None)
 
-  private def publishGen(spark: SparkSession, path: String,
-      centroids: => Array[Array[Double]], blockSize: => Int,
-      signBits: => Int, threshold: => Double, repsDir: String,
-      corpusDirs: Seq[String],
-      carryFrom: Option[(String, Set[String])],
-      tag: Option[String] = None,
-      copyStructureFrom: Option[String] = None): Unit = {
-    import spark.implicits._
-    graft.tools.Artifacts.publish(spark, path) { gen =>
-      // frozen-structure publishes (append/compact) re-commit the SAME
-      // centroids + params — copy the parent's parquet bytes instead
-      // of paying two Spark write jobs per trigger (optimization r17)
-      copyStructureFrom match {
-        case Some(parent) =>
-          graft.tools.Artifacts.copyGenFile(spark, parent, gen, "centroids")
-          graft.tools.Artifacts.copyGenFile(spark, parent, gen, "params")
-        case None =>
-          centroids.zipWithIndex
-            .map { case (cv, i) => (i, cv.toSeq) }.toSeq.toDF("cell", "cv")
-            .repartition(1).write.mode("overwrite").parquet(s"$gen/centroids")
-          Seq((blockSize, signBits, threshold))
-            .toDF("block_size", "sign_bits", "threshold")
-            .repartition(1).write.mode("overwrite").parquet(s"$gen/params")
-      }
-      graft.tools.Artifacts.writeDirManifest(spark, gen, "reps_dirs",
-        path, Seq(repsDir))
-      graft.tools.Artifacts.writeDirManifest(spark, gen, "corpus_dirs",
-        path, corpusDirs)
-      carryFrom.foreach { case (parent, folded) =>
-        graft.tools.Artifacts.carryTombstones(spark, gen, parent, folded)
-      }
-      tag.foreach(t => graft.tools.Artifacts.writeTag(spark, gen, t))
-    }
-    graft.tools.Artifacts.prunePool(spark, path,
-      graft.tools.Artifacts.committedGens(spark, path)
-        .flatMap(g => corpusDirsOf(spark, path, g) :+ repsDirOf(spark, path, g)))
-  }
+  private val CorpusDirs = "corpus_dirs"
+  private val RepsDirs = "reps_dirs"
 
-  /** The generation's corpus dirs in publish order; pre-r14 layouts
-    * fall back to `gen/corpus`.
+  /** One generation for a freshly built index: reps and corpus in
+    * their own pool dirs, centroids and params written into it.
     */
-  private[graft] def corpusDirsOf(spark: SparkSession, root: String,
-      gen: String): Seq[String] =
-    graft.tools.Artifacts.readDirManifest(spark, root, gen,
-      "corpus_dirs", "corpus")
+  private def publishBuilt(index: Index, path: String,
+      parent: Option[String], folded: Set[String],
+      tag: Option[String]): Unit = {
+    val spark = index.corpusBlocked.sparkSession
+    val b = index.blocking
+    Artifacts.publishGen(spark, path,
+      Seq(RepsDirs -> Seq(Artifacts.writePool(b.reps, path)),
+        CorpusDirs -> Seq(Artifacts.writePool(index.corpusBlocked, path))),
+      parent = parent, folded = folded, tag = tag,
+      write = { gen =>
+        import spark.implicits._
+        b.centroids.zipWithIndex
+          .map { case (cv, i) => (i, cv.toSeq) }.toSeq.toDF("cell", "cv")
+          .repartition(1).write.parquet(s"$gen/centroids")
+        Seq((b.blockSize, b.signBits, index.threshold))
+          .toDF("block_size", "sign_bits", "threshold")
+          .repartition(1).write.parquet(s"$gen/params")
+      })
+  }
 
-  private[graft] def repsDirOf(spark: SparkSession, root: String,
-      gen: String): String =
-    graft.tools.Artifacts.readDirManifest(spark, root, gen,
-      "reps_dirs", "reps").head
+  private def readCorpus(spark: SparkSession, path: String,
+      gen: String): DataFrame =
+    spark.read.parquet(Artifacts.dirsOf(spark, path, gen, CorpusDirs): _*)
 
   /** The frozen halves only (params/centroids/reps — everything Δ
     * assignment needs, nothing corpus-sized): shared by [[load]] and
@@ -150,78 +123,53 @@ object SemanticIndex {
       .orderBy("cell").collect()
       .map(r => r.getSeq[Double](r.fieldIndex("cv")).toArray)
     val blocking = Dedup.SemanticBlocking(centroids,
-      spark.read.parquet(repsDirOf(spark, path, gen)),
+      spark.read.parquet(Artifacts.dirsOf(spark, path, gen, RepsDirs): _*),
       p.getAs[Int]("block_size"), p.getAs[Int]("sign_bits"))
     (blocking, p.getAs[Double]("threshold"))
   }
 
   def load(spark: SparkSession, path: String, idCol: String,
       vecCol: String): Index = {
-    val gen = graft.tools.Artifacts.requireGen(spark, path)
+    val gen = Artifacts.requireGen(spark, path)
     val (blocking, threshold) = loadBlocking(spark, path, gen)
-    val corpusRaw = spark.read.parquet(corpusDirsOf(spark, path, gen): _*)
-    // tombstone sidecar (if any) consulted HERE: an anti-join against
-    // the bounded tombstone set, so every classify sees the
-    // post-delete corpus with zero changes to the probe path
-    val corpus = tombstones(spark, gen) match {
-      case Some(t) =>
-        corpusRaw.join(t, corpusRaw(idCol) === t("id"), "left_anti")
-      case None => corpusRaw
-    }
-    Index(blocking, corpus, idCol, vecCol, threshold)
+    Index(blocking, Artifacts.dropTombstoned(spark, gen,
+      readCorpus(spark, path, gen), idCol), idCol, vecCol, threshold)
   }
 
-  private def tombstones(spark: SparkSession, path: String): Option[DataFrame] =
-    if (graft.tools.Artifacts.exists(spark, s"$path/tombstones"))
-      Some(spark.read.parquet(s"$path/tombstones"))
-    else None
-
-  /** Logical delete (takedowns/retractions): append the ids to the
-    * tombstone sidecar; no corpus/rep file is touched (spec-asserted).
-    * After a delete, [[classify]] ≡ the FROZEN structure applied to
-    * corpus ∖ ids — a deleted id can never be `dup_of` — but NOT ≡ a
-    * retrained rebuild (a rep whose source vector is deleted stays as
-    * block GEOMETRY; that is the frozen-centroid contract, and
-    * [[skewRatio]] is the observable that says when to retrain). Cost
-    * ∝ |ids| per call plus |tombstones| per classify; [[compact]]
-    * folds the sidecar in on the retrain cadence.
+  /** Logical delete (takedowns/retractions):
+    * [[graft.tools.Artifacts.delete]] appends the ids to the tombstone
+    * sidecar; no corpus/rep file is touched (spec-asserted). After a
+    * delete, [[classify]] ≡ the FROZEN structure applied to corpus ∖
+    * ids — a deleted id can never be `dup_of` — but NOT ≡ a retrained
+    * rebuild (a rep whose source vector is deleted stays as block
+    * GEOMETRY; that is the frozen-centroid contract, and [[skewRatio]]
+    * is the observable that says when to retrain). [[compact]] folds
+    * the sidecar in on the retrain cadence.
     */
   def delete(spark: SparkSession, path: String, ids: DataFrame,
       idCol: String): Unit =
-    ids.select(col(idCol).as("id")).distinct()
-      .write.mode("append").parquet(
-        s"${graft.tools.Artifacts.requireGen(spark, path)}/tombstones")
+    Artifacts.delete(spark, path, ids, idCol)
 
   /** Fold tombstones into the layout AND collapse the manifest:
     * rewrite the corpus minus the snapshotted tombstone ids into ONE
     * fresh pool dir, publish a new generation pointing at it. The
-    * tombstone snapshot is FILE-level (ADVICE r12's protocol): a
-    * delete() landing mid-compact is carried forward into the new
-    * generation's sidecar instead of being resurrected or lost.
-    * Centroids and reps stay frozen (the reps pool dir passes by
-    * reference).
+    * tombstone snapshot is FILE-level ([[graft.tools.Artifacts
+    * .snapshot]]): a delete() landing mid-compact is carried forward
+    * into the new generation's sidecar instead of being resurrected
+    * or lost. Centroids and reps stay frozen (the reps pool dir passes
+    * by reference).
     */
   def compact(spark: SparkSession, path: String, idCol: String,
       vecCol: String): Unit = {
-    val gen = graft.tools.Artifacts.requireGen(spark, path)
-    val snapFiles = graft.tools.Artifacts.tombstoneFiles(spark, gen)
-    val raw = spark.read.parquet(corpusDirsOf(spark, path, gen): _*)
-    val folded =
-      if (snapFiles.isEmpty) raw
-      else {
-        val snap = spark.read.parquet(snapFiles.toSeq: _*).localCheckpoint()
-        raw.join(snap, raw(idCol) === snap("id"), "left_anti")
-      }
-    val pool = graft.tools.Artifacts.newPoolDir(path)
-    folded.write.parquet(pool)
-    lazy val p = spark.read.parquet(s"$gen/params").collect()(0)
-    lazy val centroids = spark.read.parquet(s"$gen/centroids")
-      .orderBy("cell").collect()
-      .map(r => r.getSeq[Double](r.fieldIndex("cv")).toArray)
-    publishGen(spark, path, centroids, p.getAs[Int]("block_size"),
-      p.getAs[Int]("sign_bits"), p.getAs[Double]("threshold"),
-      repsDirOf(spark, path, gen), Seq(pool),
-      carryFrom = Some((gen, snapFiles)), copyStructureFrom = Some(gen))
+    val gen = Artifacts.requireGen(spark, path)
+    val snap = Artifacts.snapshot(spark, gen)
+    val pool = Artifacts.writePool(
+      snap.fold(readCorpus(spark, path, gen), idCol), path)
+    Artifacts.publishGen(spark, path,
+      Seq(RepsDirs -> Artifacts.dirsOf(spark, path, gen, RepsDirs),
+        CorpusDirs -> Seq(pool)),
+      parent = Some(gen), folded = snap.files,
+      copy = Seq("centroids", "params"))
   }
 
   /** The operational RETRAIN face — what the [[skewRatio]] cadence
@@ -237,28 +185,15 @@ object SemanticIndex {
     */
   def rebuildPublish(spark: SparkSession, path: String, idCol: String,
       vecCol: String, tag: Option[String] = None): Unit = {
-    val gen = graft.tools.Artifacts.requireGen(spark, path)
-    val snapFiles = graft.tools.Artifacts.tombstoneFiles(spark, gen)
-    val raw = spark.read.parquet(corpusDirsOf(spark, path, gen): _*)
-      .select(col(idCol), col(vecCol))
-    val live =
-      if (snapFiles.isEmpty) raw
-      else {
-        val snap = spark.read.parquet(snapFiles.toSeq: _*).localCheckpoint()
-        raw.join(snap, raw(idCol) === snap("id"), "left_anti")
-      }
+    val gen = Artifacts.requireGen(spark, path)
+    val snap = Artifacts.snapshot(spark, gen)
+    val live = snap.fold(
+      readCorpus(spark, path, gen).select(col(idCol), col(vecCol)), idCol)
     val p = spark.read.parquet(s"$gen/params").collect()(0)
     val idx = build(live.localCheckpoint(), idCol, vecCol,
       p.getAs[Double]("threshold"), p.getAs[Int]("block_size"),
       p.getAs[Int]("sign_bits"))
-    val repsPool = graft.tools.Artifacts.newPoolDir(path)
-    idx.blocking.reps.write.mode("overwrite").parquet(repsPool)
-    val corpusPool = graft.tools.Artifacts.newPoolDir(path)
-    idx.corpusBlocked.write.mode("overwrite").parquet(corpusPool)
-    publishGen(spark, path, idx.blocking.centroids,
-      idx.blocking.blockSize, idx.blocking.signBits, idx.threshold,
-      repsPool, Seq(corpusPool), carryFrom = Some((gen, snapFiles)),
-      tag = tag)
+    publishBuilt(idx, path, Some(gen), snap.files, tag)
   }
 
   /** Incremental maintenance: assign ONLY the new vectors through the
@@ -276,23 +211,15 @@ object SemanticIndex {
     * previous generation.
     */
   def append(spark: SparkSession, path: String, newVectors: DataFrame,
-      idCol: String, vecCol: String): Unit = {
-    val gens = graft.tools.Artifacts.committedGens(spark, path)
-    require(gens.nonEmpty,
-      s"no committed index generation under $path — publish (save) first")
-    val gen = gens.last
-    val curDirs = corpusDirsOf(spark, path, gen)
-    val prevDirs = gens.dropRight(1).lastOption
-      .map(g => corpusDirsOf(spark, path, g).toSet).getOrElse(Set.empty)
-    curDirs.filterNot(prevDirs).lastOption match {
-      case Some(target) =>
+      idCol: String, vecCol: String): Unit =
+    Artifacts.appendTarget(spark, path, CorpusDirs) match {
+      case (gen, Some(target)) =>
         val (blocking, _) = loadBlocking(spark, path, gen)
         Dedup.blockCorpus(blocking, newVectors, idCol, vecCol,
           blocking.signBits)
           .write.mode("append").parquet(target)
-      case None => appendPublish(spark, path, newVectors, idCol, vecCol)
+      case (_, None) => appendPublish(spark, path, newVectors, idCol, vecCol)
     }
-  }
 
   /** Incremental maintenance, GENERATION-PUBLISHED (VERDICT r13
     * next-round #4 — appendPublish parity for the semantic index):
@@ -307,19 +234,14 @@ object SemanticIndex {
   def appendPublish(spark: SparkSession, path: String,
       newVectors: DataFrame, idCol: String, vecCol: String,
       tag: Option[String] = None): Unit = {
-    val gen = graft.tools.Artifacts.requireGen(spark, path)
-    val (blocking, threshold) = loadBlocking(spark, path, gen)
-    val pool = graft.tools.Artifacts.newPoolDir(path)
-    Dedup.blockCorpus(blocking, newVectors, idCol, vecCol,
-      blocking.signBits).write.parquet(pool)
-    publishGen(spark, path, blocking.centroids, blocking.blockSize,
-      blocking.signBits, threshold,
-      graft.tools.Artifacts.migrateToPool(spark, path,
-        Seq(repsDirOf(spark, path, gen))).head,
-      graft.tools.Artifacts.migrateToPool(spark, path,
-        corpusDirsOf(spark, path, gen)) :+ pool,
-      carryFrom = Some((gen, Set.empty)), tag = tag,
-      copyStructureFrom = Some(gen))
+    val gen = Artifacts.requireGen(spark, path)
+    val (blocking, _) = loadBlocking(spark, path, gen)
+    val pool = Artifacts.writePool(Dedup.blockCorpus(blocking, newVectors,
+      idCol, vecCol, blocking.signBits), path)
+    Artifacts.publishGen(spark, path,
+      Seq(RepsDirs -> Artifacts.dirsOf(spark, path, gen, RepsDirs),
+        CorpusDirs -> (Artifacts.dirsOf(spark, path, gen, CorpusDirs) :+ pool)),
+      parent = Some(gen), copy = Seq("centroids", "params"), tag = tag)
   }
 
   /** Classify a batch against the indexed corpus — identical

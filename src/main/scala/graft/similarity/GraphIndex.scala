@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorOps
+import graft.tools.Artifacts
 
 /** Graph-based ANN — the fourth serving engine next to IVF
   * ([[IvfIndex]]), PQ ([[PqIndex]]) and the Matryoshka prefix cut
@@ -926,12 +927,8 @@ object GraphIndex {
     * into the generation — [[convergence]] reads it back.
     */
   def save(adj: DataFrame, path: String,
-      stats: Seq[BuildRound] = Nil): Unit = {
-    val spark = adj.sparkSession
-    val pool = graft.tools.Artifacts.newPoolDir(path)
-    adj.write.mode("overwrite").parquet(pool)
-    publishGen(spark, path, Seq(pool), vecDirs = None, stats = stats)
-  }
+      stats: Seq[BuildRound] = Nil): Unit =
+    saveGen(adj, None, path, stats, tag = None)
 
   /** [[save]] plus the CORPUS VECTORS in the same committed
     * generation (`vec_dirs` manifest) — the self-contained serving
@@ -944,82 +941,51 @@ object GraphIndex {
     */
   def saveWithVectors(adj: DataFrame, vectors: DataFrame, idCol: String,
       vecCol: String, path: String, stats: Seq[BuildRound] = Nil,
-      tag: Option[String] = None): Unit = {
+      tag: Option[String] = None): Unit =
+    saveGen(adj, Some(vectors.select(col(idCol), col(vecCol))), path,
+      stats, tag)
+
+  private val AdjDirs = "adj_dirs"
+  private val VecDirs = "vec_dirs"
+  private val BuildStats = "build_stats"
+
+  /** One generation for a built adjacency (+ optional vectors), with
+    * the build's convergence stats when it has any. Every stored edge
+    * carries its score `_c` — the [[capDegree]] ranking evidence.
+    */
+  private def saveGen(adj: DataFrame, vectors: Option[DataFrame],
+      path: String, stats: Seq[BuildRound], tag: Option[String]): Unit = {
+    require(adj.columns.contains("_c"),
+      "adjacency has no score column _c — save a build's output")
     val spark = adj.sparkSession
-    val pool = graft.tools.Artifacts.newPoolDir(path)
-    adj.write.mode("overwrite").parquet(pool)
-    val vpool = graft.tools.Artifacts.newPoolDir(path)
-    vectors.select(col(idCol), col(vecCol))
-      .write.mode("overwrite").parquet(vpool)
-    publishGen(spark, path, Seq(pool), vecDirs = Some(Seq(vpool)),
-      stats = stats, tag = tag)
+    val adjDirs = AdjDirs -> Seq(Artifacts.writePool(adj, path))
+    val vecDirs = vectors.map(v => VecDirs -> Seq(Artifacts.writePool(v, path)))
+    Artifacts.publishGen(spark, path, adjDirs +: vecDirs.toSeq, tag = tag,
+      write = { gen =>
+        import spark.implicits._
+        if (stats.nonEmpty)
+          stats.map(s => (s.round, s.freshEdges, s.totalEdges))
+            .toDF("round", "fresh_edges", "total_edges")
+            .repartition(1).write.parquet(s"$gen/$BuildStats")
+      })
   }
 
-  /** One generation publish: adjacency (+ optional vector) manifests,
-    * build stats, tombstones carried forward from `carryFrom` (minus
-    * files the caller already folded), and the optional idempotency
-    * `tag` — then pool prune against every committed generation's
-    * referenced dirs. `carryStatsFrom` keeps the last build's
-    * convergence trajectory readable across Δ publishes (a Δ insert
-    * doesn't re-run descent; the cadence signal is the last BUILD's).
+  /** Publish a maintenance generation derived from `gen`: the given
+    * manifests, tombstones carried forward (minus `folded`), and the
+    * last build's convergence stats copied — a Δ insert doesn't re-run
+    * descent; the cadence signal is the last BUILD's.
     */
-  private def publishGen(spark: SparkSession, path: String,
-      adjDirs: Seq[String], vecDirs: Option[Seq[String]],
-      carryFrom: Option[(String, Set[String])] = None,
-      tag: Option[String] = None,
-      stats: Seq[BuildRound] = Nil): Unit = {
-    import spark.implicits._
-    graft.tools.Artifacts.publish(spark, path) { gen =>
-      graft.tools.Artifacts.writeDirManifest(spark, gen, "adj_dirs",
-        path, adjDirs)
-      vecDirs.foreach(vd => graft.tools.Artifacts.writeDirManifest(spark,
-        gen, "vec_dirs", path, vd))
-      carryFrom.foreach { case (parent, folded) =>
-        graft.tools.Artifacts.carryTombstones(spark, gen, parent, folded)
-        // convergence stats travel with the generation until a new
-        // build overwrites them — copied as parquet bytes, not through
-        // a Spark read+write job pair (optimization r17)
-        if (stats.isEmpty &&
-            graft.tools.Artifacts.exists(spark, s"$parent/build_stats"))
-          graft.tools.Artifacts.copyGenFile(spark, parent, gen,
-            "build_stats")
-      }
-      if (stats.nonEmpty)
-        stats.map(s => (s.round, s.freshEdges, s.totalEdges))
-          .toDF("round", "fresh_edges", "total_edges")
-          .repartition(1).write.mode("overwrite")
-          .parquet(s"$gen/build_stats")
-      tag.foreach(t => graft.tools.Artifacts.writeTag(spark, gen, t))
-    }
-    val referenced = graft.tools.Artifacts.committedGens(spark, path)
-      .flatMap(g => adjDirsOf(spark, path, g) ++ vecDirsOf(spark, path, g))
-    graft.tools.Artifacts.prunePool(spark, path, referenced)
-  }
+  private def publishFrom(spark: SparkSession, path: String, gen: String,
+      adjDirs: Seq[String], vecDirs: Seq[String], folded: Set[String],
+      tag: Option[String]): Unit =
+    Artifacts.publishGen(spark, path,
+      (AdjDirs -> adjDirs) +: (if (vecDirs.isEmpty) Nil else Seq(VecDirs -> vecDirs)),
+      parent = Some(gen), folded = folded, copy = Seq(BuildStats), tag = tag)
 
-  /** The generation's adjacency dirs in PUBLISH ORDER (the `ord`
-    * column, not lexical dir names — ADVICE r13 on the IVF manifest);
-    * pre-r14 layouts (adjacency inside the generation) fall back to
-    * `gen/adj`.
-    */
-  private[graft] def adjDirsOf(spark: SparkSession, root: String,
-      gen: String): Seq[String] =
-    graft.tools.Artifacts.readDirManifest(spark, root, gen,
-      "adj_dirs", "adj")
-
-  /** The generation's vector dirs (publish order) — empty when the
-    * artifact is adjacency-only.
-    */
-  private[graft] def vecDirsOf(spark: SparkSession, root: String,
-      gen: String): Seq[String] =
-    if (!graft.tools.Artifacts.exists(spark, s"$gen/vec_dirs")) Nil
-    else graft.tools.Artifacts.readDirManifest(spark, root, gen,
-      "vec_dirs", "vec")
-
-  private def tombstonesOf(spark: SparkSession,
-      gen: String): Option[DataFrame] =
-    if (graft.tools.Artifacts.exists(spark, s"$gen/tombstones"))
-      Some(spark.read.parquet(s"$gen/tombstones"))
-    else None
+  private def readAdj(spark: SparkSession, path: String,
+      gen: String): DataFrame =
+    spark.read.parquet(Artifacts.dirsOf(spark, path, gen, AdjDirs): _*)
+      .select(col("src"), col("nb"), col("_c").cast("double"))
 
   /** Per-src degree cap by STORED edge score — the serve-cost bound
     * between rebuilds (VERDICT r15 next-round #1, the round's one
@@ -1031,12 +997,10 @@ object GraphIndex {
     * degree^hops per expansion. No file is rewritten — the cut is a
     * read-side view, so it works on already-published artifacts.
     * Null scores (zero-norm ring edges) coalesce to -2.0 and are cut
-    * first. FALLBACK: an adjacency with no `_c` column at all (in
-    * memory from a pre-r16 caller) passes through uncut — scores are
-    * the cut's ranking evidence and pre-score edges carry none.
+    * first.
     */
   def capDegree(adj: DataFrame, maxDegree: Int): DataFrame =
-    if (maxDegree <= 0 || !adj.columns.contains("_c")) adj
+    if (maxDegree <= 0) adj
     else topMEdges(adj.select(col("src"), col("nb"),
       coalesce(col("_c"), lit(-2.0)).as("_c")), maxDegree)
 
@@ -1051,33 +1015,14 @@ object GraphIndex {
     * [[capDegree]] on the way out — the serving read; pass 0 for the
     * RAW adjacency (the [[skewRatio]]/[[occupancy]] drift observables
     * must see true degree growth, and [[compact]]/rebuild seeds want
-    * every edge). Pre-r16 score-less generations load uncut (mixed
-    * generations score what they can: legacy dirs contribute
-    * null-score edges, cut last).
+    * every edge).
     */
   def load(spark: SparkSession, path: String,
       maxDegree: Int = DefaultServeDegreeCap): DataFrame = {
-    val gen = graft.tools.Artifacts.requireGen(spark, path)
-    val dirs = adjDirsOf(spark, path, gen)
-    var anyScored = false
-    val raw = dirs.map { d =>
-      val df = spark.read.parquet(d)
-      if (df.columns.contains("_c")) {
-        anyScored = true
-        df.select(col("src"), col("nb"), col("_c").cast("double"))
-      } else df.select(col("src"), col("nb"),
-        lit(null).cast("double").as("_c"))
-    }.reduce(_ unionAll _)
-    val live = tombstonesOf(spark, gen) match {
-      case Some(t) =>
-        val ts = t.select(col("id")).localCheckpoint()
-        raw.join(ts, raw("src") === ts("id"), "left_anti")
-          .join(ts, raw("nb") === ts("id"), "left_anti")
-      case None => raw
-    }
-    // a fully score-less (pre-r16) artifact carries no ranking
-    // evidence — cutting on it would drop arbitrary edges
-    if (!anyScored || maxDegree <= 0) live
+    val gen = Artifacts.requireGen(spark, path)
+    val live = Artifacts.dropTombstoned(spark, gen,
+      readAdj(spark, path, gen), "src", "nb")
+    if (maxDegree <= 0) live
     else {
       // one-aggregate guard (VERDICT r16 next-round #2): when no list
       // exceeds the cap — every FRESH build, whose degree is ~m·2 +
@@ -1098,97 +1043,53 @@ object GraphIndex {
     * side a self-contained probe serves from.
     */
   def loadVectors(spark: SparkSession, path: String): Option[DataFrame] = {
-    val gen = graft.tools.Artifacts.requireGen(spark, path)
-    val dirs = vecDirsOf(spark, path, gen)
+    val gen = Artifacts.requireGen(spark, path)
+    val dirs = Artifacts.dirsOf(spark, path, gen, VecDirs)
     if (dirs.isEmpty) None
     else {
       val raw = spark.read.parquet(dirs: _*)
-      Some(tombstonesOf(spark, gen) match {
-        case Some(t) =>
-          val ts = t.select(col("id")).localCheckpoint()
-          raw.join(ts, raw(raw.columns.head) === ts("id"), "left_anti")
-        case None => raw
-      })
+      Some(Artifacts.dropTombstoned(spark, gen, raw, raw.columns.head))
     }
   }
 
   /** Logical delete — the retraction half of graph-index maintenance
     * (VERDICT r14 next-round #4; the other four serving indexes'
-    * exact protocol): append ids to the current generation's
-    * tombstone sidecar, touch no adjacency or vector file
-    * (spec-asserted). [[load]]/[[loadVectors]] anti-join the bounded
-    * deleted-id set, so a probe over the loaded index equals a probe
-    * over the same graph with the deleted nodes and every edge
-    * touching them absent. Cost ∝ |ids|; [[compact]] folds the
-    * sidecar in on the retrain cadence. A tombstoned id stays deleted
-    * until compaction — maintenance publishes ([[insertPublish]])
-    * carry the sidecar forward.
+    * exact protocol): [[Artifacts.delete]] appends ids to
+    * the current generation's tombstone sidecar and touches no
+    * adjacency or vector file (spec-asserted). [[load]]/[[loadVectors]]
+    * anti-join the bounded deleted-id set, so a probe over the loaded
+    * index equals a probe over the same graph with the deleted nodes
+    * and every edge touching them absent. [[compact]] folds the
+    * sidecar in on the retrain cadence; until then maintenance
+    * publishes ([[insertPublish]]) carry it forward.
     */
   def delete(spark: SparkSession, path: String, ids: DataFrame,
       idCol: String): Unit =
-    ids.select(col(idCol).as("id")).distinct()
-      .write.mode("append").parquet(
-        s"${graft.tools.Artifacts.requireGen(spark, path)}/tombstones")
+    Artifacts.delete(spark, path, ids, idCol)
 
   /** Fold tombstones into the layout AND collapse the manifests:
     * rewrite the adjacency minus every edge touching a snapshotted
     * tombstone id (dangling edges OUT — the beam-budget waste the
     * r14 verdict named) and the vectors minus the ids into ONE fresh
     * pool dir each, publish a new generation pointing at them. The
-    * tombstone snapshot is FILE-level (the
-    * [[graft.tools.Artifacts.foldTombstones]] protocol): a delete()
-    * landing mid-compact is carried forward into the new generation's
-    * sidecar instead of being resurrected or lost.
+    * tombstone snapshot is FILE-level ([[graft.tools.Artifacts
+    * .snapshot]]): a delete() landing mid-compact is carried forward
+    * into the new generation's sidecar instead of being resurrected
+    * or lost.
     */
   def compact(spark: SparkSession, path: String): Unit = {
-    val gen = graft.tools.Artifacts.requireGen(spark, path)
-    val snapFiles = graft.tools.Artifacts.tombstoneFiles(spark, gen)
-    val snap =
-      if (snapFiles.isEmpty) None
-      else Some(spark.read.parquet(snapFiles.toSeq: _*)
-        .select(col("id")).localCheckpoint())
-    // normalize mixed generations (a pre-r16 score-less build dir +
-    // post-r16 scored Δ dirs) to the scored schema before the union —
-    // but ONLY when at least one source dir is scored (ADVICE r16
-    // medium): a fully score-less artifact must compact to the
-    // score-less schema, or the rewritten all-null `_c` column would
-    // make [[load]] apply [[capDegree]] with zero ranking evidence
-    // (every edge at the -2.0 sentinel, lists cut arbitrarily by id) —
-    // exactly the legacy-drift case the uncut fallback protects.
-    val dirDfs = adjDirsOf(spark, gen = gen, root = path)
-      .map(spark.read.parquet(_))
-    val anyScored = dirDfs.exists(_.columns.contains("_c"))
-    val rawAdj = dirDfs.map { df =>
-      if (!anyScored) df.select(col("src"), col("nb"))
-      else if (df.columns.contains("_c"))
-        df.select(col("src"), col("nb"), col("_c").cast("double"))
-      else df.select(col("src"), col("nb"),
-        lit(null).cast("double").as("_c"))
-    }.reduce(_ unionAll _)
-    val foldedAdj = snap match {
-      case Some(ts) =>
-        rawAdj.join(ts, rawAdj("src") === ts("id"), "left_anti")
-          .join(ts, rawAdj("nb") === ts("id"), "left_anti")
-      case None => rawAdj
-    }
-    val pool = graft.tools.Artifacts.newPoolDir(path)
-    foldedAdj.write.parquet(pool)
-    val vDirs = vecDirsOf(spark, path, gen)
-    val newVecDirs =
-      if (vDirs.isEmpty) None
+    val gen = Artifacts.requireGen(spark, path)
+    val snap = Artifacts.snapshot(spark, gen)
+    val adj = Artifacts.writePool(
+      snap.fold(readAdj(spark, path, gen), "src", "nb"), path)
+    val vDirs = Artifacts.dirsOf(spark, path, gen, VecDirs)
+    val vecs =
+      if (vDirs.isEmpty) Nil
       else {
-        val rawV = spark.read.parquet(vDirs: _*)
-        val foldedV = snap match {
-          case Some(ts) =>
-            rawV.join(ts, rawV(rawV.columns.head) === ts("id"), "left_anti")
-          case None => rawV
-        }
-        val vpool = graft.tools.Artifacts.newPoolDir(path)
-        foldedV.write.parquet(vpool)
-        Some(Seq(vpool))
+        val raw = spark.read.parquet(vDirs: _*)
+        Seq(Artifacts.writePool(snap.fold(raw, raw.columns.head), path))
       }
-    publishGen(spark, path, Seq(pool), newVecDirs,
-      carryFrom = Some((gen, snapFiles)))
+    publishFrom(spark, path, gen, Seq(adj), vecs, snap.files, tag = None)
   }
 
   /** Δ MAINTENANCE — the NSW add-node walk, batched and
@@ -1213,7 +1114,7 @@ object GraphIndex {
     * [[loadVectors]] serves corpus ∪ Δ — and the `corpus` argument
     * may be [[loadVectors]]' result. `tag` is the exactly-once
     * idempotency stamp for streaming triggers
-    * ([[graft.tools.Artifacts.writeTag]]).
+    * ([[Artifacts.publishGen]]).
     *
     * Honest divergences from a rebuild (the contract
     * GraphIndexInsertSpec pins): inserted nodes get their
@@ -1246,13 +1147,21 @@ object GraphIndex {
       maxBroadcastRows: Long = 4_000_000L,
       tag: Option[String] = None,
       maxProbeBatch: Int = 0): Unit = {
+    val newV = newVectors.select(col(idCol), col(vecCol)).localCheckpoint()
+    val dN = newV.count()
+    val gen = Artifacts.requireGen(spark, path)
+    val adjDirs = Artifacts.dirsOf(spark, path, gen, AdjDirs)
+    val vDirs = Artifacts.dirsOf(spark, path, gen, VecDirs)
+    // an empty Δ walks nothing: a tagged one still commits its tag
+    // (replays stay exactly-once), an untagged one publishes nothing
+    if (dN == 0L) {
+      tag.foreach(_ => publishFrom(spark, path, gen, adjDirs, vDirs, Set.empty, tag))
+      return
+    }
     // the walk reads the CAPPED serving adjacency (load's default):
     // insert cost under drift stays bounded by the cap, not by
     // accumulated hub degree
     val adj = load(spark, path)
-    val newV = newVectors.select(col(idCol), col(vecCol)).localCheckpoint()
-    val dN = newV.count()
-    if (dN == 0L) return
     // probeJoin's contract requires a BOUNDED query slice (it
     // broadcasts the batch and does nQ-scale driver collects per
     // round) — an oversized Δ is chunked through it in probe-batch
@@ -1311,22 +1220,10 @@ object GraphIndex {
     val delta = links.unionAll(
       links.select(col("nb").as("src"), col("src").as("nb"), col("_c")))
       .groupBy(col("src"), col("nb")).agg(max(col("_c")).as("_c"))
-    val gen = graft.tools.Artifacts.requireGen(spark, path)
-    val pool = graft.tools.Artifacts.newPoolDir(path)
-    delta.write.parquet(pool)
-    val adjDirs = graft.tools.Artifacts.migrateToPool(spark, path,
-      adjDirsOf(spark, path, gen)) :+ pool
     // vector-carrying artifacts append Δ vectors in the same publish
-    val vDirs = vecDirsOf(spark, path, gen)
-    val newVecDirs =
-      if (vDirs.isEmpty) None
-      else {
-        val vpool = graft.tools.Artifacts.newPoolDir(path)
-        newV.write.parquet(vpool)
-        Some(graft.tools.Artifacts.migrateToPool(spark, path, vDirs) :+ vpool)
-      }
-    publishGen(spark, path, adjDirs, newVecDirs,
-      carryFrom = Some((gen, Set.empty)), tag = tag)
+    publishFrom(spark, path, gen, adjDirs :+ Artifacts.writePool(delta, path),
+      if (vDirs.isEmpty) Nil else vDirs :+ Artifacts.writePool(newV, path),
+      Set.empty, tag)
   }
 
   /** Self-contained Δ publish for vector-carrying artifacts
@@ -1385,9 +1282,9 @@ object GraphIndex {
     * before the observable existed.
     */
   def buildRounds(spark: SparkSession, path: String): Seq[BuildRound] = {
-    val gen = graft.tools.Artifacts.requireGen(spark, path)
-    if (!graft.tools.Artifacts.exists(spark, s"$gen/build_stats")) Nil
-    else spark.read.parquet(s"$gen/build_stats")
+    val gen = Artifacts.requireGen(spark, path)
+    if (!Artifacts.exists(spark, s"$gen/$BuildStats")) Nil
+    else spark.read.parquet(s"$gen/$BuildStats")
       .orderBy("round").collect()
       .map(r => BuildRound(r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorOps
+import graft.tools.Artifacts
 
 /** Build-once / serve-many IVF index — the production half of
   * [[Similarity.ivfTopK]], which (deliberately, for the oracle)
@@ -77,84 +78,51 @@ object IvfIndex {
     */
   def save(index: Index, path: String): Unit = {
     val spark = index.corpus.sparkSession
-    val pool = graft.tools.Artifacts.newPoolDir(path)
-    try index.corpus.write.mode("overwrite")
-      .partitionBy("cell").parquet(pool)
+    val pool = try Artifacts.writePool(index.corpus, path, "cell")
     finally index.unpersist()
-    publishGen(spark, path, index.centroids, Seq(pool), carryFrom = None)
+    Artifacts.publishGen(spark, path, Seq(CorpusDirs -> Seq(pool)),
+      write = writeCentroids(spark, index.centroids))
   }
 
-  /** One generation write: centroids + the (ord, dir) corpus-dirs
-    * manifest (+ tombstones carried forward from `carryFrom`, + the
-    * optional idempotency `tag`), then pool prune. Dirs are stored
-    * root-relative in PUBLISH ORDER ([[graft.tools.Artifacts
-    * .writeDirManifest]]): the layout stays valid when copied or
-    * moved, and "the newest dir" is the highest ord — never a lexical
-    * sort of random pool tokens (ADVICE r13).
-    */
-  private def publishGen(spark: SparkSession, path: String,
-      centroids: => Array[Array[Double]], corpusDirs: Seq[String],
-      carryFrom: Option[(String, Set[String])],
-      tag: Option[String] = None,
-      copyCentroidsFrom: Option[String] = None): Unit = {
+  private val CorpusDirs = "corpus_dirs"
+
+  private def writeCentroids(spark: SparkSession,
+      centroids: Array[Array[Double]])(gen: String): Unit = {
     import spark.implicits._
-    graft.tools.Artifacts.publish(spark, path) { gen =>
-      // frozen-centroid publishes (append/compact) re-commit the SAME
-      // centroid table — copy the parent's parquet bytes instead of
-      // paying a Spark write job per trigger (optimization r17)
-      copyCentroidsFrom match {
-        case Some(parent) =>
-          graft.tools.Artifacts.copyGenFile(spark, parent, gen, "centroids")
-        case None => centroids.zipWithIndex
-          .map { case (c, i) => (i, c.toSeq) }.toSeq
-          .toDF("cell", "centroid")
-          .repartition(1).write.mode("overwrite").parquet(s"$gen/centroids")
-      }
-      graft.tools.Artifacts.writeDirManifest(spark, gen, "corpus_dirs",
-        path, corpusDirs)
-      // tombstones travel with the generation: copy the parent's
-      // sidecar files (minus any the caller already folded) so a
-      // delete stays deleted across maintenance publishes
-      carryFrom.foreach { case (parent, folded) =>
-        graft.tools.Artifacts.carryTombstones(spark, gen, parent, folded)
-      }
-      tag.foreach(t => graft.tools.Artifacts.writeTag(spark, gen, t))
-    }
-    graft.tools.Artifacts.prunePool(spark, path,
-      graft.tools.Artifacts.committedGens(spark, path)
-        .flatMap(g => corpusDirsOf(spark, path, g)))
+    centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+      .toDF("cell", "centroid")
+      .repartition(1).write.parquet(s"$gen/centroids")
   }
-
-  /** The generation's corpus data dirs in publish order, resolved
-    * against `root`; a pre-r13 layout (corpus inside the generation)
-    * falls back to `gen/corpus`.
-    */
-  private[graft] def corpusDirsOf(spark: SparkSession, root: String,
-      gen: String): Seq[String] =
-    graft.tools.Artifacts.readDirManifest(spark, root, gen,
-      "corpus_dirs", "corpus")
 
   /** The CURRENT committed generation's corpus dirs — the spec-facing
     * physical-layout accessor.
     */
   def corpusDirs(spark: SparkSession, path: String): Seq[String] =
-    corpusDirsOf(spark, path,
-      graft.tools.Artifacts.requireGen(spark, path))
+    Artifacts.dirsOf(spark, path, Artifacts.requireGen(spark, path),
+      CorpusDirs)
 
-  private def readCorpus(spark: SparkSession, dirs: Seq[String]): DataFrame =
+  private def readCorpus(spark: SparkSession, path: String,
+      gen: String): DataFrame =
     // one read PER pool dir, deliberately: the IVF pools are
     // cell-partitioned (partitionBy("cell")), and a single multi-root
     // read trips Spark's cross-root partition-structure check
     // ([CONFLICTING_DIRECTORY_STRUCTURES], IndexMaintStreamSpec) — the
     // flat-pool indexes (PQ/graph/semantic/minhash) use the one-shot
     // multi-path read instead
-    dirs.map(spark.read.parquet(_)).reduce(_ unionAll _)
+    Artifacts.dirsOf(spark, path, gen, CorpusDirs)
+      .map(spark.read.parquet(_)).reduce(_ unionAll _)
 
   private def centroidsOf(spark: SparkSession,
       gen: String): Array[Array[Double]] =
     spark.read.parquet(s"$gen/centroids")
       .orderBy("cell").collect()
       .map(_.getSeq[Double](1).toArray)
+
+  /** Δ rows at the frozen centroids: (id, vec, cell). */
+  private def assign(newVectors: DataFrame, idCol: String, vecCol: String,
+      centroids: Array[Array[Double]]): DataFrame =
+    newVectors.select(col(idCol), col(vecCol))
+      .withColumn("cell", Similarity.cellColumn(col(vecCol), centroids))
 
   /** Incremental maintenance, IN PLACE: assign ONLY the new vectors to
     * the FROZEN centroid layout and append them to the current
@@ -188,25 +156,13 @@ object IvfIndex {
     * [[build]]) when drift materializes, append between cadences.
     */
   def append(spark: SparkSession, path: String, newVectors: DataFrame,
-      idCol: String, vecCol: String): Unit = {
-    val gens = graft.tools.Artifacts.committedGens(spark, path)
-    require(gens.nonEmpty,
-      s"no committed index generation under $path — publish (save) first")
-    val gen = gens.last
-    val curDirs = corpusDirsOf(spark, path, gen)
-    val prevDirs = gens.dropRight(1).lastOption
-      .map(g => corpusDirsOf(spark, path, g).toSet).getOrElse(Set.empty)
-    // newest dir the previous generation does NOT reference — the one
-    // place an in-place append is invisible to its pinned readers
-    curDirs.filterNot(prevDirs).lastOption match {
-      case Some(target) =>
-        val centroids = centroidsOf(spark, gen)
-        newVectors.select(col(idCol), col(vecCol))
-          .withColumn("cell", Similarity.cellColumn(col(vecCol), centroids))
+      idCol: String, vecCol: String): Unit =
+    Artifacts.appendTarget(spark, path, CorpusDirs) match {
+      case (gen, Some(target)) =>
+        assign(newVectors, idCol, vecCol, centroidsOf(spark, gen))
           .write.mode("append").partitionBy("cell").parquet(target)
-      case None => appendPublish(spark, path, newVectors, idCol, vecCol)
+      case (_, None) => appendPublish(spark, path, newVectors, idCol, vecCol)
     }
-  }
 
   /** Incremental maintenance, GENERATION-PUBLISHED (VERDICT r12
     * next-round #3 + ADVICE r12): same frozen-centroid Δ-assignment
@@ -225,86 +181,56 @@ object IvfIndex {
   def appendPublish(spark: SparkSession, path: String,
       newVectors: DataFrame, idCol: String, vecCol: String,
       tag: Option[String] = None): Unit = {
-    val gen = graft.tools.Artifacts.requireGen(spark, path)
-    val centroids = centroidsOf(spark, gen)
-    val pool = graft.tools.Artifacts.newPoolDir(path)
-    newVectors.select(col(idCol), col(vecCol))
-      .withColumn("cell", Similarity.cellColumn(col(vecCol), centroids))
-      .write.partitionBy("cell").parquet(pool)
-    publishGen(spark, path, centroids,
-      graft.tools.Artifacts.migrateToPool(spark, path,
-        corpusDirsOf(spark, path, gen)) :+ pool,
-      carryFrom = Some((gen, Set.empty)), tag = tag,
-      copyCentroidsFrom = Some(gen))
+    val gen = Artifacts.requireGen(spark, path)
+    val pool = Artifacts.writePool(
+      assign(newVectors, idCol, vecCol, centroidsOf(spark, gen)), path, "cell")
+    Artifacts.publishGen(spark, path,
+      Seq(CorpusDirs -> (Artifacts.dirsOf(spark, path, gen, CorpusDirs) :+ pool)),
+      parent = Some(gen), copy = Seq("centroids"), tag = tag)
   }
 
   def load(spark: SparkSession, path: String,
       idCol: String, vecCol: String): Index = {
-    val gen = graft.tools.Artifacts.requireGen(spark, path)
-    val centroids = centroidsOf(spark, gen)
-    val raw = readCorpus(spark, corpusDirsOf(spark, path, gen))
-    // tombstone sidecar (if any) consulted at load: probes anti-join
-    // the bounded deleted-id set AFTER the cell partition filter (the
-    // cell predicate pushes through the anti-join's streamed side, so
-    // pruning is intact — IvfIndexSpec asserts PartitionFilters on the
-    // deleted index too)
-    val corpus = tombstones(spark, gen) match {
-      case Some(t) => raw.join(t, raw(idCol) === t("id"), "left_anti")
-      case None => raw
-    }
-    Index(centroids, corpus, idCol, vecCol, pruned = true)
+    val gen = Artifacts.requireGen(spark, path)
+    // the tombstone anti-join runs AFTER the cell partition filter (the
+    // cell predicate pushes through its streamed side, so pruning is
+    // intact — IvfIndexSpec asserts PartitionFilters on the deleted
+    // index too)
+    Index(centroidsOf(spark, gen), Artifacts.dropTombstoned(spark, gen,
+      readCorpus(spark, path, gen), idCol), idCol, vecCol, pruned = true)
   }
 
-  private def tombstoneFiles(spark: SparkSession, gen: String): Set[String] =
-    graft.tools.Artifacts.tombstoneFiles(spark, gen)
-
-  private def tombstones(spark: SparkSession, path: String): Option[DataFrame] =
-    if (graft.tools.Artifacts.exists(spark, s"$path/tombstones"))
-      Some(spark.read.parquet(s"$path/tombstones"))
-    else None
-
   /** Logical delete — the retraction half of index maintenance
-    * ([[append]] is the ingest half): append ids to the current
-    * generation's tombstone sidecar, touch no corpus file
-    * (spec-asserted). A probe over the loaded index then equals a
-    * probe over the SAME frozen centroids with the deleted vectors
-    * removed — centroids are deliberately NOT retrained (deletes
-    * shift the distribution exactly like appends do; [[skewRatio]]
-    * stays the retrain trigger for both). Cost ∝ |ids|; [[compact]]
-    * folds the sidecar in on the retrain cadence. A tombstoned id
-    * stays deleted until compaction — maintenance publishes
-    * ([[appendPublish]]) carry the sidecar forward.
+    * ([[append]] is the ingest half): [[graft.tools.Artifacts.delete]]
+    * appends the ids to the current generation's tombstone sidecar and
+    * touches no corpus file (spec-asserted). A probe over the loaded
+    * index then equals a probe over the SAME frozen centroids with the
+    * deleted vectors removed — centroids are deliberately NOT
+    * retrained (deletes shift the distribution exactly like appends
+    * do; [[skewRatio]] stays the retrain trigger for both). A
+    * tombstoned id stays deleted until [[compact]] folds it in.
     */
   def delete(spark: SparkSession, path: String, ids: DataFrame,
       idCol: String): Unit =
-    ids.select(col(idCol).as("id")).distinct()
-      .write.mode("append").parquet(
-        s"${graft.tools.Artifacts.requireGen(spark, path)}/tombstones")
+    Artifacts.delete(spark, path, ids, idCol)
 
   /** Fold tombstones into the layout AND collapse the manifest:
     * rewrite the corpus minus the snapshotted tombstone ids into ONE
     * fresh pool dir, publish a new generation pointing at it. The
-    * tombstone snapshot is FILE-level (the
-    * [[graft.tools.Artifacts.foldTombstones]] protocol): a delete()
-    * landing mid-compact is carried forward into the new generation's
-    * sidecar instead of being resurrected or lost. Centroids
-    * untouched — compaction is a physical cleanup, not a retrain.
+    * tombstone snapshot is FILE-level ([[graft.tools.Artifacts
+    * .snapshot]]): a delete() landing mid-compact is carried forward
+    * into the new generation's sidecar instead of being resurrected
+    * or lost. Centroids untouched — compaction is a physical cleanup,
+    * not a retrain.
     */
   def compact(spark: SparkSession, path: String,
       idCol: String, vecCol: String): Unit = {
-    val gen = graft.tools.Artifacts.requireGen(spark, path)
-    val snapFiles = tombstoneFiles(spark, gen)
-    val raw = readCorpus(spark, corpusDirsOf(spark, path, gen))
-    val folded =
-      if (snapFiles.isEmpty) raw
-      else {
-        val snap = spark.read.parquet(snapFiles.toSeq: _*).localCheckpoint()
-        raw.join(snap, raw(idCol) === snap("id"), "left_anti")
-      }
-    val pool = graft.tools.Artifacts.newPoolDir(path)
-    folded.write.partitionBy("cell").parquet(pool)
-    publishGen(spark, path, centroidsOf(spark, gen), Seq(pool),
-      carryFrom = Some((gen, snapFiles)), copyCentroidsFrom = Some(gen))
+    val gen = Artifacts.requireGen(spark, path)
+    val snap = Artifacts.snapshot(spark, gen)
+    val pool = Artifacts.writePool(
+      snap.fold(readCorpus(spark, path, gen), idCol), path, "cell")
+    Artifacts.publishGen(spark, path, Seq(CorpusDirs -> Seq(pool)),
+      parent = Some(gen), folded = snap.files, copy = Seq("centroids"))
   }
 
   /** The operational RETRAIN face — what the [[skewRatio]] cadence
@@ -322,23 +248,17 @@ object IvfIndex {
   def rebuildPublish(spark: SparkSession, path: String, idCol: String,
       vecCol: String, nCentroids: Int = 0, iters: Int = 2,
       tag: Option[String] = None): Unit = {
-    val gen = graft.tools.Artifacts.requireGen(spark, path)
-    val snapFiles = tombstoneFiles(spark, gen)
-    val raw = readCorpus(spark, corpusDirsOf(spark, path, gen))
-      .select(col(idCol), col(vecCol))
-    val live =
-      if (snapFiles.isEmpty) raw
-      else {
-        val snap = spark.read.parquet(snapFiles.toSeq: _*).localCheckpoint()
-        raw.join(snap, raw(idCol) === snap("id"), "left_anti")
-      }
+    val gen = Artifacts.requireGen(spark, path)
+    val snap = Artifacts.snapshot(spark, gen)
+    val live = snap.fold(
+      readCorpus(spark, path, gen).select(col(idCol), col(vecCol)), idCol)
     val k = if (nCentroids > 0) nCentroids else centroidsOf(spark, gen).length
     val idx = build(live, idCol, vecCol, k, iters)
-    val pool = graft.tools.Artifacts.newPoolDir(path)
-    try idx.corpus.write.mode("overwrite").partitionBy("cell").parquet(pool)
+    val pool = try Artifacts.writePool(idx.corpus, path, "cell")
     finally idx.unpersist()
-    publishGen(spark, path, idx.centroids, Seq(pool),
-      carryFrom = Some((gen, snapFiles)), tag = tag)
+    Artifacts.publishGen(spark, path, Seq(CorpusDirs -> Seq(pool)),
+      parent = Some(gen), folded = snap.files, tag = tag,
+      write = writeCentroids(spark, idx.centroids))
   }
 
   /** Cell-occupancy view of an index: (cell, n) for every trained

@@ -1,9 +1,10 @@
 package graft.similarity
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorOps
+import graft.tools.Artifacts
 
 /** Product quantization (PQ) ANN — the memory-compression scale path
   * complementing [[IvfIndex]]'s scan reduction: each corpus vector is
@@ -183,71 +184,31 @@ object PqIndex {
     */
   def save(cb: Codebook, codes: DataFrame, path: String): Unit = {
     val spark = codes.sparkSession
-    val pool = graft.tools.Artifacts.newPoolDir(path)
-    codes.write.mode("overwrite").parquet(pool)
-    publishGen(spark, path, cb, Seq(pool), carryFrom = None)
+    Artifacts.publishGen(spark, path,
+      Seq(CodesDirs -> Seq(Artifacts.writePool(codes, path))),
+      write = { gen =>
+        import spark.implicits._
+        (for (s <- cb.centroids.indices; c <- cb.centroids(s).indices)
+          yield (s, c, cb.centroids(s)(c).toSeq))
+          .toDF("subspace", "code", "centroid")
+          .repartition(1).write.parquet(s"$gen/codebook")
+      })
   }
 
-  private def publishGen(spark: org.apache.spark.sql.SparkSession,
-      path: String, cb: => Codebook, codesDirs: Seq[String],
-      carryFrom: Option[(String, Set[String])],
-      tag: Option[String] = None,
-      copyCodebookFrom: Option[String] = None): Unit = {
-    import spark.implicits._
-    graft.tools.Artifacts.publish(spark, path) { gen =>
-      // frozen-codebook publishes (append/compact) re-commit the SAME
-      // codebook — copy the parent's parquet bytes instead of paying a
-      // Spark write job per trigger (optimization r17)
-      copyCodebookFrom match {
-        case Some(parent) =>
-          graft.tools.Artifacts.copyGenFile(spark, parent, gen, "codebook")
-        case None =>
-          (for (s <- cb.centroids.indices; c <- cb.centroids(s).indices)
-            yield (s, c, cb.centroids(s)(c).toSeq))
-            .toDF("subspace", "code", "centroid")
-            .repartition(1).write.mode("overwrite").parquet(s"$gen/codebook")
-      }
-      graft.tools.Artifacts.writeDirManifest(spark, gen, "codes_dirs",
-        path, codesDirs)
-      carryFrom.foreach { case (parent, folded) =>
-        graft.tools.Artifacts.carryTombstones(spark, gen, parent, folded)
-      }
-      tag.foreach(t => graft.tools.Artifacts.writeTag(spark, gen, t))
-    }
-    graft.tools.Artifacts.prunePool(spark, path,
-      graft.tools.Artifacts.committedGens(spark, path)
-        .flatMap(g => codesDirsOf(spark, path, g)))
-  }
+  private val CodesDirs = "codes_dirs"
 
-  /** The generation's codes dirs in publish order; pre-r14 layouts
-    * (codes inside the generation) fall back to `gen/codes`.
-    */
-  private[graft] def codesDirsOf(spark: org.apache.spark.sql.SparkSession,
-      root: String, gen: String): Seq[String] =
-    graft.tools.Artifacts.readDirManifest(spark, root, gen,
-      "codes_dirs", "codes")
+  private def readCodes(spark: SparkSession, path: String,
+      gen: String): DataFrame =
+    spark.read.parquet(Artifacts.dirsOf(spark, path, gen, CodesDirs): _*)
 
   /** The current committed generation's RAW codes scan (tombstones
     * NOT applied — [[load]] is the serving accessor); the bench/spec
     * face of the physical layout.
     */
-  def codesOf(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = {
-    val gen = graft.tools.Artifacts.requireGen(spark, path)
-    codesDirsOf(spark, path, gen).map(spark.read.parquet(_))
-      .reduce(_ unionAll _)
-  }
+  def codesOf(spark: SparkSession, path: String): DataFrame =
+    readCodes(spark, path, Artifacts.requireGen(spark, path))
 
-  /** Load a saved artifact: (codebook, codes). Codebook collect is
-    * bounded by M×K rows. The tombstone sidecar (if any) is consulted
-    * HERE — an anti-join on the codes table's id column (the one
-    * column [[encode]] writes besides `codes`), so every ADC scan
-    * over a loaded index sees the post-delete corpus with zero
-    * changes to the probe path.
-    */
-  def load(spark: org.apache.spark.sql.SparkSession,
-      path: String): (Codebook, DataFrame) = {
-    val gen = graft.tools.Artifacts.requireGen(spark, path)
+  private def codebookOf(spark: SparkSession, gen: String): Codebook = {
     val rows = spark.read.parquet(s"$gen/codebook")
       .orderBy("subspace", "code").collect()
     val m = rows.map(_.getInt(0)).max + 1
@@ -255,64 +216,57 @@ object PqIndex {
     val cents = Array.ofDim[Array[Double]](m, k)
     rows.foreach(r => cents(r.getInt(0))(r.getInt(1)) =
       r.getSeq[Double](2).toArray)
-    val subDim = cents(0)(0).length
-    val codesRaw = spark.read.parquet(codesDirsOf(spark, path, gen): _*)
-    val idName = codesRaw.columns.filter(_ != "codes").head
-    val codes = tombstones(spark, gen) match {
-      case Some(t) =>
-        codesRaw.join(t, codesRaw(idName) === t("id"), "left_anti")
-      case None => codesRaw
-    }
-    (Codebook(subDim, cents), codes)
+    Codebook(cents(0)(0).length, cents)
   }
 
-  private def tombstones(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[DataFrame] =
-    if (graft.tools.Artifacts.exists(spark, s"$path/tombstones"))
-      Some(spark.read.parquet(s"$path/tombstones"))
-    else None
+  /** The codes table's id column — the one column [[encode]] writes
+    * besides `codes`.
+    */
+  private def idOf(codes: DataFrame): String =
+    codes.columns.filter(_ != "codes").head
+
+  /** Load a saved artifact: (codebook, codes). Codebook collect is
+    * bounded by M×K rows. The tombstone sidecar (if any) is consulted
+    * HERE — an anti-join on the codes table's id column, so every ADC
+    * scan over a loaded index sees the post-delete corpus with zero
+    * changes to the probe path.
+    */
+  def load(spark: SparkSession, path: String): (Codebook, DataFrame) = {
+    val gen = Artifacts.requireGen(spark, path)
+    val cb = codebookOf(spark, gen)
+    val codes = readCodes(spark, path, gen)
+    (cb, Artifacts.dropTombstoned(spark, gen, codes, idOf(codes)))
+  }
 
   /** Logical delete (takedowns — the maintenance operation [[append]]
-    * cannot express): append the ids to the tombstone sidecar; no
-    * codes/codebook file is touched (spec-asserted). A tombstoned id
-    * can never surface from [[adcScores]]/[[topK]] over a loaded
-    * index; because [[encode]] is per-row pure, delete-then-scan ≡ a
-    * re-encode without the ids at the same codebook (the codebook
-    * itself stays frozen — a RETRAIN would move centroids, same
-    * caveat as [[append]]). Cost ∝ |ids| per call plus |tombstones|
-    * per load; [[compact]] folds the sidecar in on the retrain
-    * cadence.
+    * cannot express): [[graft.tools.Artifacts.delete]] appends the ids
+    * to the tombstone sidecar; no codes/codebook file is touched
+    * (spec-asserted). A tombstoned id can never surface from
+    * [[adcScores]]/[[topK]] over a loaded index; because [[encode]] is
+    * per-row pure, delete-then-scan ≡ a re-encode without the ids at
+    * the same codebook (the codebook itself stays frozen — a RETRAIN
+    * would move centroids, same caveat as [[append]]). [[compact]]
+    * folds the sidecar in on the retrain cadence.
     */
-  def delete(spark: org.apache.spark.sql.SparkSession, path: String,
+  def delete(spark: SparkSession, path: String,
       ids: DataFrame, idCol: String): Unit =
-    ids.select(col(idCol).as("id")).distinct()
-      .write.mode("append").parquet(
-        s"${graft.tools.Artifacts.requireGen(spark, path)}/tombstones")
+    Artifacts.delete(spark, path, ids, idCol)
 
   /** Fold tombstones into the layout AND collapse the manifest:
     * rewrite the codes minus the snapshotted tombstone ids into ONE
     * fresh pool dir, publish a new generation pointing at it. The
-    * tombstone snapshot is FILE-level (ADVICE r12's protocol): a
-    * delete() landing mid-compact is carried forward into the new
-    * generation's sidecar instead of being resurrected or lost. The
-    * codebook stays frozen.
+    * tombstone snapshot is FILE-level ([[graft.tools.Artifacts
+    * .snapshot]]): a delete() landing mid-compact is carried forward
+    * into the new generation's sidecar instead of being resurrected
+    * or lost. The codebook stays frozen.
     */
-  def compact(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val gen = graft.tools.Artifacts.requireGen(spark, path)
-    val snapFiles = graft.tools.Artifacts.tombstoneFiles(spark, gen)
-    val raw = spark.read.parquet(codesDirsOf(spark, path, gen): _*)
-    val folded =
-      if (snapFiles.isEmpty) raw
-      else {
-        val idName = raw.columns.filter(_ != "codes").head
-        val snap = spark.read.parquet(snapFiles.toSeq: _*).localCheckpoint()
-        raw.join(snap, raw(idName) === snap("id"), "left_anti")
-      }
-    val pool = graft.tools.Artifacts.newPoolDir(path)
-    folded.write.parquet(pool)
-    publishGen(spark, path, load(spark, path)._1, Seq(pool),
-      carryFrom = Some((gen, snapFiles)), copyCodebookFrom = Some(gen))
+  def compact(spark: SparkSession, path: String): Unit = {
+    val gen = Artifacts.requireGen(spark, path)
+    val snap = Artifacts.snapshot(spark, gen)
+    val raw = readCodes(spark, path, gen)
+    val pool = Artifacts.writePool(snap.fold(raw, idOf(raw)), path)
+    Artifacts.publishGen(spark, path, Seq(CodesDirs -> Seq(pool)),
+      parent = Some(gen), folded = snap.files, copy = Seq("codebook"))
   }
 
   /** Incremental maintenance, the [[IvfIndex.append]] twin: encode
@@ -330,23 +284,14 @@ object PqIndex {
     * current generation, or degrades to one [[appendPublish]] when
     * every dir is shared with the retained previous generation.
     */
-  def append(spark: org.apache.spark.sql.SparkSession, path: String,
-      newVectors: DataFrame, idCol: String, vecCol: String): Unit = {
-    val gens = graft.tools.Artifacts.committedGens(spark, path)
-    require(gens.nonEmpty,
-      s"no committed index generation under $path — publish (save) first")
-    val gen = gens.last
-    val curDirs = codesDirsOf(spark, path, gen)
-    val prevDirs = gens.dropRight(1).lastOption
-      .map(g => codesDirsOf(spark, path, g).toSet).getOrElse(Set.empty)
-    val (cb, _) = load(spark, path)
-    curDirs.filterNot(prevDirs).lastOption match {
-      case Some(target) =>
-        encode(cb, newVectors, idCol, vecCol)
+  def append(spark: SparkSession, path: String,
+      newVectors: DataFrame, idCol: String, vecCol: String): Unit =
+    Artifacts.appendTarget(spark, path, CodesDirs) match {
+      case (gen, Some(target)) =>
+        encode(codebookOf(spark, gen), newVectors, idCol, vecCol)
           .write.mode("append").parquet(target)
-      case None => appendPublish(spark, path, newVectors, idCol, vecCol)
+      case (_, None) => appendPublish(spark, path, newVectors, idCol, vecCol)
     }
-  }
 
   /** Incremental maintenance, GENERATION-PUBLISHED (VERDICT r13
     * next-round #4 — [[IvfIndex.appendPublish]] parity for the
@@ -358,18 +303,15 @@ object PqIndex {
     * mix — the per-trigger ingest shape
     * [[graft.streaming.IndexMaintStream]] drives.
     */
-  def appendPublish(spark: org.apache.spark.sql.SparkSession, path: String,
+  def appendPublish(spark: SparkSession, path: String,
       newVectors: DataFrame, idCol: String, vecCol: String,
       tag: Option[String] = None): Unit = {
-    val gen = graft.tools.Artifacts.requireGen(spark, path)
-    val (cb, _) = load(spark, path)
-    val pool = graft.tools.Artifacts.newPoolDir(path)
-    encode(cb, newVectors, idCol, vecCol).write.parquet(pool)
-    publishGen(spark, path, cb,
-      graft.tools.Artifacts.migrateToPool(spark, path,
-        codesDirsOf(spark, path, gen)) :+ pool,
-      carryFrom = Some((gen, Set.empty)), tag = tag,
-      copyCodebookFrom = Some(gen))
+    val gen = Artifacts.requireGen(spark, path)
+    val pool = Artifacts.writePool(
+      encode(codebookOf(spark, gen), newVectors, idCol, vecCol), path)
+    Artifacts.publishGen(spark, path,
+      Seq(CodesDirs -> (Artifacts.dirsOf(spark, path, gen, CodesDirs) :+ pool)),
+      parent = Some(gen), copy = Seq("codebook"), tag = tag)
   }
 
   /** Batched online ADC probe — the [[IvfIndex.probeJoin]] twin for

@@ -22,8 +22,8 @@ import org.apache.spark.sql.functions._
   * stream commit replays the trigger, and a blind re-publish would
   * duplicate Δ. Each publish is stamped with the trigger's batchId as
   * the generation's idempotency tag
-  * ([[graft.tools.Artifacts.writeTag]], committed atomically with the
-  * generation); a replayed trigger sees its own tag on the current
+  * ([[graft.tools.Artifacts.publishGen]]'s `tag`, committed atomically
+  * with the generation); a replayed trigger sees its own tag on the current
   * committed generation and SKIPS the re-publish. With a durable
   * `checkpoint` the loop therefore survives restarts with no
   * duplicates — the [[CcStream.labelStoreFile]] recovery contract
@@ -44,6 +44,7 @@ object IndexMaintStream {
     */
   sealed trait Kind {
     def table: String
+    def idCol: String
     def cols: Seq[String]
     def publish(spark: SparkSession, indexPath: String, mb: DataFrame,
         tag: Option[String]): Unit
@@ -55,9 +56,11 @@ object IndexMaintStream {
       * from `appendFile`'s `onTrigger`): the current generation's
       * sidecar grows, every subsequent Δ publish carries it forward,
       * and a reader never sees the deleted ids again. Cost ∝ |ids|.
+      * The same [[graft.tools.Artifacts.delete]] serves every kind.
       */
     def takedown(spark: SparkSession, indexPath: String,
-        ids: DataFrame): Unit
+        ids: DataFrame): Unit =
+      graft.tools.Artifacts.delete(spark, indexPath, ids, idCol)
 
     /** The artifact's own drift observable — the number the retrain
       * cadence compares against [[RetrainPolicy.threshold]] (each
@@ -90,9 +93,6 @@ object IndexMaintStream {
         tag: Option[String]): Unit =
       graft.similarity.IvfIndex.appendPublish(spark, indexPath, mb,
         idCol, vecCol, tag)
-    def takedown(spark: SparkSession, indexPath: String,
-        ids: DataFrame): Unit =
-      graft.similarity.IvfIndex.delete(spark, indexPath, ids, idCol)
     override def observe(spark: SparkSession,
         indexPath: String): Option[Double] =
       Some(graft.similarity.IvfIndex.skewRatio(
@@ -111,9 +111,6 @@ object IndexMaintStream {
         tag: Option[String]): Unit =
       graft.similarity.PqIndex.appendPublish(spark, indexPath, mb,
         idCol, vecCol, tag)
-    def takedown(spark: SparkSession, indexPath: String,
-      ids: DataFrame): Unit =
-      graft.similarity.PqIndex.delete(spark, indexPath, ids, idCol)
     // observable yes (code-usage skew over the stored codes); retrain
     // deliberately NOT overridden: a PQ artifact stores codes, not the
     // vectors a codebook retrain needs — the default throws
@@ -132,9 +129,6 @@ object IndexMaintStream {
         tag: Option[String]): Unit =
       graft.dedup.MinHashIndex.appendPublish(spark, indexPath, mb,
         idCol, textCol, tag)
-    def takedown(spark: SparkSession, indexPath: String,
-      ids: DataFrame): Unit =
-      graft.dedup.MinHashIndex.delete(spark, indexPath, ids, idCol)
     // observable yes (hot-bucket skew); retrain deliberately NOT
     // overridden: the banding is HASH-derived, not trained — there is
     // no structure a rebuild would re-fit (skew is a property of the
@@ -154,9 +148,6 @@ object IndexMaintStream {
         tag: Option[String]): Unit =
       graft.dedup.SemanticIndex.appendPublish(spark, indexPath, mb,
         idCol, vecCol, tag)
-    def takedown(spark: SparkSession, indexPath: String,
-      ids: DataFrame): Unit =
-      graft.dedup.SemanticIndex.delete(spark, indexPath, ids, idCol)
     override def observe(spark: SparkSession,
         indexPath: String): Option[Double] =
       Some(graft.dedup.SemanticIndex.skewRatio(
@@ -189,9 +180,6 @@ object IndexMaintStream {
         tag: Option[String]): Unit =
       graft.similarity.GraphIndex.insertPublishSelf(spark, indexPath, mb,
         idCol, vecCol, m = m, budget = budget, tag = tag)
-    def takedown(spark: SparkSession, indexPath: String,
-      ids: DataFrame): Unit =
-      graft.similarity.GraphIndex.delete(spark, indexPath, ids, idCol)
     // the RAW (uncapped) degree view: the serve-time cap must not hide
     // the hub growth the cadence exists to catch
     override def observe(spark: SparkSession,

@@ -1,17 +1,31 @@
 package graft.tools
 
+import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Hadoop-FS helpers for DURABLE serving artifacts (saved indexes) —
   * unlike [[Scratch]]'s java.io locals, these resolve the path's own
   * FileSystem, so the same maintenance code runs against HDFS/object
   * stores at cluster scale.
+  *
+  * It also owns the generation LIFECYCLE the five serving indexes
+  * (IVF, PQ, MinHash, Semantic, Graph) share — [[publishGen]],
+  * [[dirsOf]], [[dropTombstoned]], [[delete]], [[snapshot]] and
+  * [[appendTarget]]. Each index keeps only its format: its frozen
+  * structure and how it assigns and reads Δ rows. Layout:
+  * {{{
+  * root/pool/<token>/…             immutable data dirs, shared by reference
+  * root/g%08d/<name>_dirs          manifests: "ord\tpool/<token>" lines
+  * root/g%08d/tombstones/…parquet  deleted ids (column `id`)
+  * root/g%08d/_TAG_<tag>           idempotency tag of the publish
+  * root/g%08d/_COMMITTED           commit marker, created last
+  * }}}
   */
 object Artifacts {
 
-  private def fs(spark: SparkSession,
-      path: String): (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
-    val p = new org.apache.hadoop.fs.Path(path)
+  private[graft] def fs(spark: SparkSession, path: String): (FileSystem, Path) = {
+    val p = new Path(path)
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
@@ -25,74 +39,6 @@ object Artifacts {
     f.delete(p, true)
     ()
   }
-
-  /** Replace a parquet directory with `df`'s rows: write to a
-    * `_compact_tmp` sibling FIRST (the expensive, failure-prone step —
-    * the original layout stays intact if it dies), then swap by
-    * RENAME-ASIDE: `dir` → `dir_compact_old`, tmp → `dir`, delete the
-    * old. A crash at any point leaves a recoverable layout on disk
-    * (either the live dir, or the complete old layout under
-    * `_compact_old` plus the complete new one under `_compact_tmp`) —
-    * never "data only in tmp" (ADVICE r11). The remaining window is
-    * the instant BETWEEN the two renames, where a concurrent reader
-    * sees a missing path; renames are also not atomic on object
-    * stores — single-writer maintenance plus the generation/manifest
-    * publish protocol ([[publish]]/[[currentGen]]) is the
-    * concurrent-reader-safe path.
-    */
-  def replaceDir(spark: SparkSession, dir: String, df: DataFrame,
-      partitionCols: Seq[String] = Nil): Unit = {
-    val tmp = dir + "_compact_tmp"
-    val w = df.write.mode("overwrite")
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(tmp)
-    val (f, dP) = fs(spark, dir)
-    val oldP = new org.apache.hadoop.fs.Path(dir + "_compact_old")
-    f.delete(oldP, true) // stale leftover from a prior crash
-    if (f.exists(dP)) f.rename(dP, oldP)
-    f.rename(new org.apache.hadoop.fs.Path(tmp), dP)
-    f.delete(oldP, true)
-    ()
-  }
-
-  /** Tombstone-fold protocol shared by the four serving indexes'
-    * `compact`: snapshot the tombstone sidecar AT THE FILE LEVEL
-    * (list its part files once — ADVICE r12; the r12 version
-    * snapshotted ids and anti-joined the sidecar afterwards, which
-    * silently dropped a delete() landing between that read and the
-    * sidecar rewrite), rewrite each data directory with the
-    * snapshotted files' ids anti-joined out, then delete ONLY the
-    * listed files. A delete() appending new part files mid-compact
-    * survives untouched in the sidecar for the next fold; every data
-    * rewrite filters against the SAME frozen id set (localCheckpoint
-    * of the listed files). The final empty-dir cleanup is a
-    * NON-RECURSIVE delete — if a concurrent append landed after the
-    * listing, the dir is non-empty and the delete is a no-op instead
-    * of destroying the new tombstones. `dirs` = (subdir, id column in
-    * that subdir's rows, partition columns for the rewrite).
-    */
-  def foldTombstones(spark: SparkSession, path: String,
-      dirs: Seq[(String, String, Seq[String])]): Unit =
-    if (exists(spark, s"$path/tombstones")) {
-      val (f, tp) = fs(spark, s"$path/tombstones")
-      val listed = f.listStatus(tp).toSeq.filter(_.isFile)
-        .map(_.getPath)
-      val dataFiles = listed.filter(_.getName.endsWith(".parquet"))
-      if (dataFiles.nonEmpty) {
-        val snap = spark.read
-          .parquet(dataFiles.map(_.toString): _*).localCheckpoint()
-        dirs.foreach { case (sub, idName, parts) =>
-          val raw = spark.read.parquet(s"$path/$sub")
-          replaceDir(spark, s"$path/$sub",
-            raw.join(snap, raw(idName) === snap("id"), "left_anti"), parts)
-        }
-      }
-      // drop the snapshotted files (and their job markers); anything
-      // appended since the listing stays
-      listed.foreach(p => f.delete(p, false))
-      try { f.delete(tp, false); () }
-      catch { case _: java.io.IOException => () } // non-empty: appended since
-    }
 
   // ----------------------------------------------------- generations
   // Atomic index publish (VERDICT r11 next-round #2): a rebuild that
@@ -117,14 +63,14 @@ object Artifacts {
     * `root`, ascending.
     */
   private def listGens(spark: SparkSession,
-      root: String): Seq[(Long, org.apache.hadoop.fs.Path, Boolean)] = {
+      root: String): Seq[(Long, Path, Boolean)] = {
     val (f, p) = fs(spark, root)
     if (!f.exists(p)) return Nil
     f.listStatus(p).toSeq.filter(_.isDirectory).flatMap { st =>
       st.getPath.getName match {
         case GenPattern(n) =>
           Some((n.toLong, f.makeQualified(st.getPath),
-            f.exists(new org.apache.hadoop.fs.Path(st.getPath, Committed))))
+            f.exists(new Path(st.getPath, Committed))))
         case _ => None
       }
     }.sortBy(_._1)
@@ -140,9 +86,7 @@ object Artifacts {
 
   /** ALL committed generations under `root`, ascending — at most the
     * previous and current after any [[publish]] (older ones are
-    * pruned). Manifest-based layouts ([[graft.dedup.LabelStore]]) use
-    * this to compute the union of still-referenced data dirs before
-    * pruning their shared pool.
+    * pruned). Pool pruning takes the union of their manifests.
     */
   def committedGens(spark: SparkSession, root: String): Seq[String] =
     listGens(spark, root).filter(_._3).map(_._2.toString)
@@ -165,13 +109,50 @@ object Artifacts {
     catch { case _: java.net.URISyntaxException => qualified }
 
   /** Fresh immutable data dir under `root/pool` for one write —
-    * manifest-pool layouts ([[graft.dedup.LabelStore]], the IVF
-    * corpus) write data here and publish generations that point at
-    * it, so untouched data passes between generations BY REFERENCE.
+    * generations point at pool dirs through manifests, so untouched
+    * data passes between generations BY REFERENCE.
     */
   def newPoolDir(root: String): String =
     s"$root/pool/" +
       java.util.UUID.randomUUID().toString.replace("-", "").take(16)
+
+  /** Write `df` into a fresh pool dir and return the dir. A
+    * partitioned write of an empty frame leaves no file to read a
+    * schema from ([UNABLE_TO_INFER_SCHEMA] at load); the frame's
+    * schema is then written as one zero-row flat file instead, so
+    * every pool dir reads back.
+    */
+  private[graft] def writePool(df: DataFrame, root: String,
+      partitionBy: String*): String = {
+    val dir = newPoolDir(root)
+    if (partitionBy.isEmpty) df.write.parquet(dir)
+    else {
+      df.write.partitionBy(partitionBy: _*).parquet(dir)
+      if (!holdsRows(df.sparkSession, dir))
+        df.limit(0).write.mode("overwrite").parquet(dir)
+    }
+    dir
+  }
+
+  /** True when some parquet file under `dir` holds a row — footer
+    * reads on the driver, stopping at the first non-empty file; no
+    * Spark job.
+    */
+  private def holdsRows(spark: SparkSession, dir: String): Boolean = {
+    val (f, p) = fs(spark, dir)
+    val files = f.listFiles(p, true)
+    var found = false
+    while (!found && files.hasNext) {
+      val st = files.next()
+      if (st.getPath.getName.endsWith(".parquet")) {
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st,
+            spark.sparkContext.hadoopConfiguration))
+        try found = r.getRecordCount > 0 finally r.close()
+      }
+    }
+    found
+  }
 
   /** Delete pool subdirs whose token appears in none of
     * `referencedDirs` (each a path of the form
@@ -191,13 +172,6 @@ object Artifacts {
       }
   }
 
-  // ------------------------------------------------ manifest helpers
-  // Shared by the manifest-pool indexes (IVF/PQ/MinHash/Semantic/
-  // Graph corpora + the LabelStore): a generation's corpus-sized data
-  // lives in immutable pool dirs and the generation stores an
-  // (ord, root-relative dir) manifest — untouched dirs pass between
-  // generations BY REFERENCE, so Δ maintenance writes Δ bytes only.
-
   /** Write a tiny metadata FILE (UTF-8 lines) directly through the
     * path's FileSystem — a one-line manifest does not need a Spark
     * job (optimization r17: each `repartition(1).write.parquet`
@@ -215,7 +189,7 @@ object Artifacts {
     finally out.close()
   }
 
-  /** Read a [[writeLinesFile]] file back (empty Seq when absent). */
+  /** Read a [[writeLinesFile]] file back. */
   def readLinesFile(spark: SparkSession, path: String): Seq[String] = {
     val (f, p) = fs(spark, path)
     val in = f.open(p)
@@ -224,125 +198,22 @@ object Artifacts {
     finally in.close()
   }
 
-  /** Write the (ord, dir) manifest `name` into `gen`, dirs stored
-    * root-relative (the layout stays valid when copied or moved) in
-    * PUBLISH ORDER — readers that need "the newest dir" sort by ord,
-    * never lexically (ADVICE r13: pool tokens are random, `.last` of
-    * a lexical sort is an arbitrary dir).
-    *
-    * Since optimization r17 the manifest is a plain tab-separated
-    * text FILE (`ord\tdir` per line, [[writeLinesFile]]) — zero Spark
-    * jobs on either side; pool tokens and `bucket=N` dirs carry no
-    * tabs or newlines by construction. [[readDirManifest]] keeps the
-    * parquet branch for layouts written by earlier rounds.
+  /** The dirs of manifest `name` in `gen`, in PUBLISH ORDER, resolved
+    * against `root` — empty when the generation has no such manifest.
+    * Dirs are stored root-relative (the layout stays valid when
+    * copied or moved) as `ord\tdir` lines; readers that need "the
+    * newest dir" take the highest ord, never a lexical sort of random
+    * pool tokens (ADVICE r13).
     */
-  def writeDirManifest(spark: SparkSession, gen: String, name: String,
-      root: String, dirs: Seq[String]): Unit =
-    writeLinesFile(spark, s"$gen/$name",
-      dirs.zipWithIndex.map { case (d, i) =>
-        s"$i\t${d.stripPrefix(root).stripPrefix("/")}"
-      })
-
-  /** Read manifest `name` back in publish order, resolved against
-    * `root`. Pre-manifest layouts fall back to `gen/<fallback>`.
-    * Handles the r17+ text-file manifest, the parquet (ord, dir)
-    * manifest, and the pre-r14 single-column manifest (dir only,
-    * lexical order).
-    */
-  def readDirManifest(spark: SparkSession, root: String, gen: String,
-      name: String, fallback: String): Seq[String] = {
-    val (f, p) = fs(spark, s"$gen/$name")
-    val rel =
-      if (!f.exists(p)) return Seq(s"$gen/$fallback")
-      else if (f.getFileStatus(p).isFile)
-        readLinesFile(spark, s"$gen/$name")
-          .map(_.split("\t", 2)).map(a => (a(0).toInt, a(1)))
-          .sortBy(_._1).map(_._2)
-      else {
-        val df = spark.read.parquet(s"$gen/$name")
-        if (df.columns.contains("ord"))
-          df.orderBy("ord").collect().map(_.getAs[String]("dir")).toSeq
-        else df.collect().map(_.getString(0)).toSeq.sorted
-      }
-    rel.map(d => if (d.startsWith("pool/")) s"$root/$d" else d)
-  }
-
-  /** Copy an UNCHANGED frozen-structure file/dir (centroids, codebook,
-    * band params) from the parent generation instead of re-writing it
-    * through a Spark job — Δ-maintenance publishes re-commit the same
-    * structure every trigger, and the parquet bytes are already on
-    * disk (optimization r17). Byte-identical by construction.
-    */
-  def copyGenFile(spark: SparkSession, parentGen: String, gen: String,
-      name: String): Unit = {
-    val (f, srcP) = fs(spark, s"$parentGen/$name")
-    org.apache.hadoop.fs.FileUtil.copy(f, srcP, f,
-      new org.apache.hadoop.fs.Path(s"$gen/$name"), false, false,
-      spark.sparkContext.hadoopConfiguration)
-    ()
-  }
-
-  /** The tombstone sidecar's data files under `gen` — the FILE-level
-    * snapshot unit of the fold protocol.
-    */
-  def tombstoneFiles(spark: SparkSession, gen: String): Set[String] =
-    if (!exists(spark, s"$gen/tombstones")) Set.empty
-    else {
-      val (f, p) = fs(spark, s"$gen/tombstones")
-      f.listStatus(p).toSeq.filter(_.isFile).map(_.getPath.toString)
-        .filter(_.endsWith(".parquet")).toSet
-    }
-
-  /** Copy the parent generation's tombstone sidecar (minus any files
-    * the caller already folded) into `gen` — deletes stay deleted
-    * across maintenance publishes.
-    */
-  def carryTombstones(spark: SparkSession, gen: String, parent: String,
-      folded: Set[String]): Unit = {
-    val files = tombstoneFiles(spark, parent).filterNot(folded)
-    if (files.nonEmpty)
-      spark.read.parquet(files.toSeq: _*)
-        .write.mode("overwrite").parquet(s"$gen/tombstones")
-  }
-
-  /** Ensure every data dir is POOL-resident: a pre-manifest layout's
-    * data lives INSIDE a generation dir, and generation rotation
-    * (publish retains only previous + current) would prune it out
-    * from under a newer manifest that references it. Non-pool dirs
-    * are byte-copied into fresh pool dirs ONCE (first maintenance
-    * publish over an old-layout artifact — a migration cost, never
-    * recurring); pool dirs pass through untouched.
-    */
-  def migrateToPool(spark: SparkSession, root: String,
-      dirs: Seq[String]): Seq[String] =
-    dirs.map { d =>
-      if (d.contains("/pool/")) d
-      else {
-        val dst = newPoolDir(root)
-        val (f, srcP) = fs(spark, d)
-        org.apache.hadoop.fs.FileUtil.copy(f, srcP, f,
-          new org.apache.hadoop.fs.Path(dst), false, false,
-          spark.sparkContext.hadoopConfiguration)
-        dst
-      }
-    }
+  private[graft] def dirsOf(spark: SparkSession, root: String, gen: String,
+      name: String): Seq[String] =
+    if (!exists(spark, s"$gen/$name")) Nil
+    else readLinesFile(spark, s"$gen/$name").map(_.split("\t", 2))
+      .sortBy(_(0).toInt).map(a => s"$root/${a(1)}")
 
   private val TagPrefix = "_TAG_"
 
-  /** Stamp `gen` with an idempotency tag (one atomic empty-file
-    * create; called INSIDE [[publish]]'s write so the tag commits
-    * with the generation). The streaming maintenance loop uses this
-    * to make at-least-once trigger replays exactly-once (ADVICE r13):
-    * a replayed foreachBatch sees its own batch tag on the current
-    * committed generation and skips the re-publish.
-    */
-  def writeTag(spark: SparkSession, gen: String, tag: String): Unit = {
-    val (f, _) = fs(spark, gen)
-    f.mkdirs(new org.apache.hadoop.fs.Path(gen))
-    f.create(new org.apache.hadoop.fs.Path(gen, TagPrefix + tag), true).close()
-  }
-
-  /** The idempotency tag of `gen`, if any. */
+  /** The idempotency tag of `gen`, if any (see [[publishGen]]). */
   def tagOf(spark: SparkSession, gen: String): Option[String] = {
     val (f, p) = fs(spark, gen)
     if (!f.exists(p)) None
@@ -361,12 +232,11 @@ object Artifacts {
     val gens = listGens(spark, root)
     val next = gens.lastOption.map(_._1 + 1).getOrElse(0L)
     val (f, _) = fs(spark, root)
-    val genPath = f.makeQualified(
-      new org.apache.hadoop.fs.Path(root, f"g$next%08d"))
+    val genPath = f.makeQualified(new Path(root, f"g$next%08d"))
     f.delete(genPath, true) // impossible by numbering, but be safe
     write(genPath.toString)
     f.mkdirs(genPath) // a write() that wrote nothing still commits
-    f.create(new org.apache.hadoop.fs.Path(genPath, Committed), true).close()
+    f.create(new Path(genPath, Committed), true).close()
     // retain the previous committed generation for in-flight readers;
     // prune older ones and any stale uncommitted dirs
     val keep = gens.filter(_._3).map(_._1).lastOption
@@ -375,5 +245,148 @@ object Artifacts {
         f.delete(p, true)
     }
     genPath.toString
+  }
+
+  // ------------------------------------------- serving-index lifecycle
+
+  /** Publish one serving-index generation — the lifecycle every index
+    * shares. Inside the new generation: `write` writes the frozen
+    * structure that changed, the `copy` files that exist in `parent`
+    * are byte-copied from it (a frozen structure re-committed
+    * unchanged — no Spark job per trigger, optimization r17), the
+    * parent's tombstone files minus the `folded` ones are carried
+    * forward (a delete stays deleted across maintenance publishes),
+    * each `manifests` entry (name → pool dirs) is written, and `tag`
+    * is stamped. Then the commit marker, then the pool is pruned to
+    * the union of every committed generation's manifests.
+    *
+    * A dir new to this generation that holds no row (an empty Δ) is
+    * left out of its manifest, so an empty trigger still commits its
+    * tag — replays stay exactly-once — without referencing an empty
+    * dir; only a manifest that would end up with no dir at all (an
+    * emptied index) keeps its last, zero-row dir, which reads back as
+    * zero rows.
+    *
+    * The streaming maintenance loop uses `tag` to make at-least-once
+    * trigger replays exactly-once (ADVICE r13): a replayed
+    * foreachBatch sees its own tag on the current committed generation
+    * and skips the re-publish.
+    */
+  private[graft] def publishGen(spark: SparkSession, root: String,
+      manifests: Seq[(String, Seq[String])], parent: Option[String] = None,
+      folded: Set[String] = Set.empty, copy: Seq[String] = Nil,
+      tag: Option[String] = None,
+      write: String => Unit = _ => ()): String = {
+    val kept = manifests.map { case (name, dirs) =>
+      val old = parent.map(dirsOf(spark, root, _, name).toSet)
+        .getOrElse(Set.empty[String])
+      val live = dirs.filter(d => old(d) || holdsRows(spark, d))
+      name -> (if (live.isEmpty) dirs.takeRight(1) else live)
+    }
+    val (f, _) = fs(spark, root)
+    val gen = publish(spark, root) { gen =>
+      write(gen)
+      parent.foreach { p =>
+        def cp(src: String, dst: String): Unit = {
+          FileUtil.copy(f, new Path(src), f, new Path(dst), false, false,
+            spark.sparkContext.hadoopConfiguration)
+          ()
+        }
+        copy.filter(n => exists(spark, s"$p/$n"))
+          .foreach(n => cp(s"$p/$n", s"$gen/$n"))
+        (tombstoneFiles(spark, p) -- folded)
+          .foreach(t => cp(t, s"$gen/tombstones/${new Path(t).getName}"))
+      }
+      kept.foreach { case (name, dirs) =>
+        writeLinesFile(spark, s"$gen/$name",
+          dirs.zipWithIndex.map { case (d, i) =>
+            s"$i\t${d.stripPrefix(root).stripPrefix("/")}"
+          })
+      }
+      tag.foreach(t => f.create(new Path(gen, TagPrefix + t), true).close())
+    }
+    prunePool(spark, root, committedGens(spark, root).flatMap { g =>
+      val (gf, gp) = fs(spark, g)
+      gf.listStatus(gp).map(_.getPath.getName).filter(_.endsWith("_dirs"))
+        .flatMap(dirsOf(spark, root, g, _))
+    })
+    gen
+  }
+
+  /** The tombstone sidecar's data files under `gen` — the FILE-level
+    * snapshot unit of [[snapshot]] and the tombstone carry.
+    */
+  def tombstoneFiles(spark: SparkSession, gen: String): Set[String] =
+    if (!exists(spark, s"$gen/tombstones")) Set.empty
+    else {
+      val (f, p) = fs(spark, s"$gen/tombstones")
+      f.listStatus(p).toSeq.filter(_.isFile).map(_.getPath.toString)
+        .filter(_.endsWith(".parquet")).toSet
+    }
+
+  private def antiJoin(df: DataFrame, ids: DataFrame,
+      idCols: Seq[String]): DataFrame =
+    idCols.foldLeft(df)((d, c) => d.join(ids, d(c) === ids("id"), "left_anti"))
+
+  /** The load-side tombstone anti-join: `df` minus every row whose
+    * `idCols` (each one) name an id tombstoned in `gen`, so every
+    * probe over a loaded index sees the post-delete corpus with zero
+    * changes to the probe path. The sidecar is small by the
+    * compaction cadence, so the join rides a broadcast; a partition
+    * filter on `df` still pushes through the streamed side.
+    */
+  private[graft] def dropTombstoned(spark: SparkSession, gen: String,
+      df: DataFrame, idCols: String*): DataFrame =
+    if (!exists(spark, s"$gen/tombstones")) df
+    else antiJoin(df, spark.read.parquet(s"$gen/tombstones"), idCols)
+
+  /** Logical delete, the retraction half of index maintenance: append
+    * the distinct ids in `idCol` to the current generation's tombstone
+    * sidecar; no data file is touched. Cost ∝ |ids|; [[publishGen]]
+    * carries the sidecar forward and compaction folds it in.
+    */
+  private[graft] def delete(spark: SparkSession, root: String, ids: DataFrame,
+      idCol: String): Unit =
+    ids.select(col(idCol).as("id")).distinct()
+      .write.mode("append").parquet(s"${requireGen(spark, root)}/tombstones")
+
+  /** A FILE-level tombstone snapshot: the sidecar files listed once and
+    * their ids checkpointed once (ADVICE r12 — snapshotting ids and
+    * anti-joining the sidecar afterwards silently dropped a delete
+    * landing in between). Compaction and rebuilds [[fold]] every data
+    * rewrite against the same frozen ids and pass `files` as
+    * [[publishGen]]'s `folded`: a delete landing mid-compact is
+    * carried into the new generation instead of being lost.
+    */
+  private[graft] final case class Snapshot(files: Set[String],
+      ids: Option[DataFrame]) {
+    def fold(df: DataFrame, idCols: String*): DataFrame =
+      ids.fold(df)(antiJoin(df, _, idCols))
+  }
+
+  private[graft] def snapshot(spark: SparkSession, gen: String): Snapshot = {
+    val files = tombstoneFiles(spark, gen)
+    Snapshot(files,
+      if (files.isEmpty) None
+      else Some(spark.read.parquet(files.toSeq: _*).select(col("id"))
+        .localCheckpoint()))
+  }
+
+  /** (current generation, in-place append target) — the target is the
+    * newest dir of manifest `name` that holds rows and that the
+    * previous committed generation does NOT reference: the one place
+    * an in-place append is invisible to readers pinned to the
+    * retained previous generation (ADVICE r13). None when every dir
+    * is shared; the caller then publishes a generation instead.
+    */
+  private[graft] def appendTarget(spark: SparkSession, root: String,
+      name: String): (String, Option[String]) = {
+    val gens = committedGens(spark, root)
+    require(gens.nonEmpty,
+      s"no committed index generation under $root — publish (save) first")
+    val prev = gens.dropRight(1).lastOption
+      .map(dirsOf(spark, root, _, name).toSet).getOrElse(Set.empty[String])
+    (gens.last, dirsOf(spark, root, gens.last, name).filterNot(prev)
+      .reverseIterator.find(holdsRows(spark, _)))
   }
 }

@@ -11,8 +11,8 @@ class MinHashIndexSpec extends SparkTestBase {
   /** All files across the current generation's part pool dirs for one
     * side, keyed dir-qualified. */
   private def sideFiles(root: String, side: String): Map[String, Long] =
-    MinHashIndex.partDirsOf(spark, root,
-      graft.tools.Artifacts.requireGen(spark, root)).flatMap { d =>
+    graft.tools.Artifacts.dirsOf(spark, root,
+      graft.tools.Artifacts.requireGen(spark, root), "part_dirs").flatMap { d =>
       val local = graft.tools.Artifacts.localPath(d)
       allFiles(s"$local/$side").map { case (k, v) => (s"$d/$side/$k", v) }
     }.toMap

@@ -11,15 +11,15 @@ class SemanticIndexSpec extends SparkTestBase {
   /** All files across the current generation's corpus pool dirs,
     * keyed dir-qualified. */
   private def corpusFiles(root: String): Map[String, Long] =
-    SemanticIndex.corpusDirsOf(spark, root,
-      graft.tools.Artifacts.requireGen(spark, root)).flatMap { d =>
+    graft.tools.Artifacts.dirsOf(spark, root,
+      graft.tools.Artifacts.requireGen(spark, root), "corpus_dirs").flatMap { d =>
       val local = graft.tools.Artifacts.localPath(d)
       allFiles(local).map { case (k, v) => (s"$d/$k", v) }
     }.toMap
 
   private def repsFiles(root: String): Map[String, Long] = {
-    val d = SemanticIndex.repsDirOf(spark, root,
-      graft.tools.Artifacts.requireGen(spark, root))
+    val d = graft.tools.Artifacts.dirsOf(spark, root,
+      graft.tools.Artifacts.requireGen(spark, root), "reps_dirs").head
     allFiles(graft.tools.Artifacts.localPath(d))
       .map { case (k, v) => (s"$d/$k", v) }
   }

@@ -32,8 +32,8 @@ class GraphIndexInsertSpec extends SparkTestBase {
       val base = emb.filter($"vec_id" <= cut).localCheckpoint()
       val delta = emb.filter($"vec_id" > cut).localCheckpoint()
       GraphIndex.save(GraphIndex.build(base, "vec_id", "embedding"), path)
-      val beforeDirs = GraphIndex.adjDirsOf(spark, path,
-        graft.tools.Artifacts.requireGen(spark, path))
+      val beforeDirs = graft.tools.Artifacts.dirsOf(spark, path,
+        graft.tools.Artifacts.requireGen(spark, path), "adj_dirs")
       val frozen = beforeDirs.map(d =>
         filesUnder(graft.tools.Artifacts.localPath(d))).reduce(_ ++ _)
       // generous efConstruction for the near-random fixture (the
@@ -43,8 +43,8 @@ class GraphIndexInsertSpec extends SparkTestBase {
         "vec_id", "embedding",
         budget = math.max(400L, base.count() / 2).toInt)
       // Δ publish: parent dirs pass by reference, bytes untouched
-      val afterDirs = GraphIndex.adjDirsOf(spark, path,
-        graft.tools.Artifacts.requireGen(spark, path))
+      val afterDirs = graft.tools.Artifacts.dirsOf(spark, path,
+        graft.tools.Artifacts.requireGen(spark, path), "adj_dirs")
       assert(beforeDirs.toSet.subsetOf(afterDirs.toSet),
         "parent adjacency dirs were not carried by reference")
       assert(afterDirs.size == beforeDirs.size + 1, "expected exactly one Δ dir")

@@ -37,14 +37,14 @@ class GraphIndexMaintSpec extends SparkTestBase {
       val before = GraphIndex.load(spark, path, maxDegree = 0)
         .select("src", "nb").as[(Long, Long)].collect().toSet
       val victims = emb.select($"vec_id").as[Long].collect().sorted.take(5).toSet
-      val dataFiles = GraphIndex.adjDirsOf(spark, path,
-        graft.tools.Artifacts.requireGen(spark, path))
+      val dataFiles = graft.tools.Artifacts.dirsOf(spark, path,
+        graft.tools.Artifacts.requireGen(spark, path), "adj_dirs")
         .map(d => filesUnder(graft.tools.Artifacts.localPath(d)))
         .reduce(_ ++ _)
       GraphIndex.delete(spark, path, victims.toSeq.toDF("vec_id"), "vec_id")
       // delete is sidecar-only: same generation, same data files
-      val afterFiles = GraphIndex.adjDirsOf(spark, path,
-        graft.tools.Artifacts.requireGen(spark, path))
+      val afterFiles = graft.tools.Artifacts.dirsOf(spark, path,
+        graft.tools.Artifacts.requireGen(spark, path), "adj_dirs")
         .map(d => filesUnder(graft.tools.Artifacts.localPath(d)))
         .reduce(_ ++ _)
       assert(afterFiles == dataFiles, "delete rewrote adjacency files")
@@ -68,7 +68,7 @@ class GraphIndexMaintSpec extends SparkTestBase {
       // adjacency unchanged vs the pre-compact view
       GraphIndex.compact(spark, path)
       val gen = graft.tools.Artifacts.requireGen(spark, path)
-      assert(GraphIndex.adjDirsOf(spark, path, gen).size == 1)
+      assert(graft.tools.Artifacts.dirsOf(spark, path, gen, "adj_dirs").size == 1)
       assert(graft.tools.Artifacts.tombstoneFiles(spark, gen).isEmpty,
         "compact did not fold the sidecar")
       val compacted = GraphIndex.load(spark, path, maxDegree = 0)

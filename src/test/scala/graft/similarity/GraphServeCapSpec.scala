@@ -15,7 +15,7 @@ class GraphServeCapSpec extends SparkTestBase {
   private lazy val emb = graft.Tables.embeddings(spark, sf)
     .select($"vec_id", $"embedding").cache()
 
-  test("capDegree: per-src top-maxDegree by stored score, deterministic ties; score-less adjacency passes through") {
+  test("capDegree: per-src top-maxDegree by stored score, deterministic ties") {
     val adj = Seq(
       // src 1: five scored edges — cap 3 keeps the best three
       (1L, 10L, 0.9), (1L, 11L, 0.8), (1L, 12L, 0.7), (1L, 13L, 0.6),
@@ -32,9 +32,6 @@ class GraphServeCapSpec extends SparkTestBase {
       (1L, 12L, Some(0.5))).toDF("src", "nb", "_c")
     assert(GraphIndex.capDegree(withNull, 2)
       .select("nb").as[Long].collect().toSet == Set(10L, 12L))
-    // fallback: no _c column at all → uncut (no ranking evidence)
-    val legacy = Seq((1L, 10L), (1L, 11L), (1L, 12L)).toDF("src", "nb")
-    assert(GraphIndex.capDegree(legacy, 1).count() == 3)
     // maxDegree = 0 disables
     assert(GraphIndex.capDegree(adj, 0).count() == adj.count())
   }
@@ -199,29 +196,6 @@ class GraphServeCapSpec extends SparkTestBase {
     val (warm, cold) = (recallOf(warmAdj), recallOf(coldAdj))
     assert(warm >= cold - 0.1 && warm >= 0.8,
       s"warm rebuild recall $warm vs cold $cold")
-  }
-
-  test("compact preserves the score-less schema: a pre-r16 artifact stays uncut after compaction (ADVICE r16)") {
-    val path = java.nio.file.Files.createTempDirectory("graph_legacy").toString
-    try {
-      // a legacy (score-less) adjacency with one maintenance-grown hub
-      // at degree 80 > the serve cap — the exact case the uncut
-      // fallback protects: no ranking evidence, cutting would drop
-      // arbitrary edges
-      val hub = (1L to 80L).map(nb => (0L, nb)) ++
-        (1L to 80L).map(nb => (nb, 0L))
-      GraphIndex.save(hub.toDF("src", "nb"), path)
-      GraphIndex.delete(spark, path, Seq(5L).toDF("id"), "id")
-      GraphIndex.compact(spark, path)
-      // compact rewrote the layout — but must NOT have normalized the
-      // score-less dir to an all-null _c column, which load would cut
-      // on (every edge at the -2.0 sentinel, tie-broken by id)
-      val served = GraphIndex.load(spark, path) // default serve cap 64
-      val hubDegree = served.filter($"src" === 0L).count()
-      assert(hubDegree == 79L, // 80 minus the tombstoned id
-        s"score-less hub cut to $hubDegree after compact — " +
-          "compaction must not manufacture ranking evidence")
-    } finally graft.tools.Scratch.deleteRecursively(new java.io.File(path))
   }
 
   test("warm seed sentinel scores are re-scored, never trusted or committed (ADVICE r16)") {

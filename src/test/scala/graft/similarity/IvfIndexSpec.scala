@@ -252,7 +252,7 @@ class IvfIndexSpec extends SparkTestBase {
     assert(gen(path).endsWith("g00000002"))
     // previous committed generation retained for in-flight readers —
     // manifest AND every pool dir it references
-    IvfIndex.corpusDirsOf(spark, path, g1).foreach { d =>
+    graft.tools.Artifacts.dirsOf(spark, path, g1, "corpus_dirs").foreach { d =>
       assert(graft.tools.Artifacts.exists(spark, d), s"pruned $d")
     }
   }

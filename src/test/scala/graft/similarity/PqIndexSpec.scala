@@ -10,8 +10,8 @@ class PqIndexSpec extends SparkTestBase {
     * keyed dir-qualified (pool tokens are random — same-named part
     * files in different dirs must not collide). */
   private def codesFiles(root: String): Map[String, Long] =
-    PqIndex.codesDirsOf(spark, root,
-      graft.tools.Artifacts.requireGen(spark, root)).flatMap { d =>
+    graft.tools.Artifacts.dirsOf(spark, root,
+      graft.tools.Artifacts.requireGen(spark, root), "codes_dirs").flatMap { d =>
       val local = graft.tools.Artifacts.localPath(d)
       graft.tools.Scratch.listParquetFiles(local)
         .map { case (k, v) => (s"$d/$k", v) }

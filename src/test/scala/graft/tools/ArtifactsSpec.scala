@@ -8,64 +8,6 @@ class ArtifactsSpec extends SparkTestBase {
   private def scratch(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toAbsolutePath.toString
 
-  test("replaceDir swaps content and leaves no tmp/old siblings") {
-    val root = scratch("artifacts_replace")
-    try {
-      val dir = s"$root/data"
-      Seq(1L, 2L, 3L).toDF("id").write.parquet(dir)
-      Artifacts.replaceDir(spark, dir, Seq(7L, 8L).toDF("id"))
-      assert(spark.read.parquet(dir).as[Long].collect().sorted.toSeq ==
-        Seq(7L, 8L))
-      assert(!Artifacts.exists(spark, dir + "_compact_tmp"))
-      assert(!Artifacts.exists(spark, dir + "_compact_old"))
-      // a stale _compact_old from a prior crash must not break the swap
-      Seq(0L).toDF("id").write.parquet(dir + "_compact_old")
-      Artifacts.replaceDir(spark, dir, Seq(9L).toDF("id"))
-      assert(spark.read.parquet(dir).as[Long].collect().toSeq == Seq(9L))
-      assert(!Artifacts.exists(spark, dir + "_compact_old"))
-    } finally Scratch.deleteRecursively(new java.io.File(root))
-  }
-
-  test("foldTombstones removes only the snapshotted ids from the sidecar") {
-    val root = scratch("artifacts_fold")
-    try {
-      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("doc_id", "text")
-        .write.parquet(s"$root/corpus")
-      Seq(2L).toDF("id").write.parquet(s"$root/tombstones")
-      Artifacts.foldTombstones(spark, root, Seq(("corpus", "doc_id", Nil)))
-      assert(spark.read.parquet(s"$root/corpus")
-        .select("doc_id").as[Long].collect().sorted.toSeq == Seq(1L, 3L))
-      // fully folded: sidecar gone
-      assert(!Artifacts.exists(spark, s"$root/tombstones"))
-      // no-op when there is no sidecar
-      Artifacts.foldTombstones(spark, root, Seq(("corpus", "doc_id", Nil)))
-      assert(spark.read.parquet(s"$root/corpus").count() == 2L)
-    } finally Scratch.deleteRecursively(new java.io.File(root))
-  }
-
-  test("foldTombstones is file-scoped: only the listed sidecar files fold and drop") {
-    val root = scratch("artifacts_fold_files")
-    try {
-      Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")).toDF("doc_id", "text")
-        .write.parquet(s"$root/corpus")
-      // two separately-appended sidecar files
-      Seq(2L).toDF("id").write.mode("append").parquet(s"$root/tombstones")
-      Seq(4L).toDF("id").write.mode("append").parquet(s"$root/tombstones")
-      Artifacts.foldTombstones(spark, root, Seq(("corpus", "doc_id", Nil)))
-      assert(spark.read.parquet(s"$root/corpus")
-        .select("doc_id").as[Long].collect().sorted.toSeq == Seq(1L, 3L))
-      assert(!Artifacts.exists(spark, s"$root/tombstones"))
-      // a delete landing AFTER a fold survives for the next fold — the
-      // file-scoped protocol never rewrites or re-reads the sidecar,
-      // so later appends are structurally untouchable
-      Seq(3L).toDF("id").write.mode("append").parquet(s"$root/tombstones")
-      Artifacts.foldTombstones(spark, root, Seq(("corpus", "doc_id", Nil)))
-      assert(spark.read.parquet(s"$root/corpus")
-        .select("doc_id").as[Long].collect().toSeq == Seq(1L))
-      assert(!Artifacts.exists(spark, s"$root/tombstones"))
-    } finally Scratch.deleteRecursively(new java.io.File(root))
-  }
-
   test("publish/currentGen: commit marker protocol, previous gen retained") {
     val root = scratch("artifacts_publish")
     try {
