@@ -978,7 +978,7 @@ object Core {
     * promotes the row from `no_oracle` to hash-checked; a source
     * regression now fails the driver gate, not just DocxSourceSpec).
     */
-  private val fixtureDocx = "/root/reference/chemistry_form_1_2.docx"
+  private[graft] val fixtureDocx = "/root/reference/chemistry_form_1_2.docx"
 
   private val qDocx: Q = (s, _) =>
     s.read.format("docx").load(fixtureDocx)

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, SyllabusFixture}
 
 /** Test double simulating transient API failures: every `everyNth`-th
   * input (selected by a stable key hash) throws on its first
@@ -47,7 +47,7 @@ object FlakyQuestionModel {
   */
 class FlakyModelSpec extends SparkTestBase {
 
-  private val fixture = "/root/reference/chemistry_form_1_2.docx"
+  private val fixture = SyllabusFixture.path
   private val stub = new StubQuestionModel
 
   private def pipelineWith(m: QuestionModel) = new SyllabusPipeline(

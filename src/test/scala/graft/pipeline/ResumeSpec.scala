@@ -3,7 +3,7 @@ package graft.pipeline
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, SyllabusFixture}
 
 /** Counts model invocations per topic title and optionally throws on
   * a designated title — the "kill after topic N" fault injector for
@@ -41,9 +41,10 @@ final class CountingPoisonModel extends QuestionModel {
   */
 class ResumeSpec extends SparkTestBase {
 
-  private val fixture = "/root/reference/chemistry_form_1_2.docx"
-  // the fixture's 6 distinct titles (13 marker occurrences), sorted =
-  // the pipeline's deterministic replay order (FIXTURES.md)
+  private val fixture = SyllabusFixture.path
+  // the synthetic syllabus's 6 distinct titles (13 marker occurrences,
+  // the reference's titles), sorted = the pipeline's deterministic
+  // replay order (FIXTURES.md §4)
   private val titles = Seq(
     "Analytical skills in chemistry", "Chemical composition of matter",
     "Chemical reactions", "Environmental chemistry",

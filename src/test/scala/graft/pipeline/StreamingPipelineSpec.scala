@@ -2,7 +2,7 @@ package graft.pipeline
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, SyllabusFixture}
 
 /** Incremental ingestion: documents dropped into the watch dir are
   * discovered exactly once (source offsets) and append to the sink; a
@@ -11,7 +11,7 @@ import graft.SparkTestBase
   */
 class StreamingPipelineSpec extends SparkTestBase {
 
-  private val fixture = Paths.get("/root/reference/chemistry_form_1_2.docx")
+  private val fixture = Paths.get(SyllabusFixture.path)
 
   test("newly arrived docx files flow through the pipeline incrementally") {
     val watch = Files.createTempDirectory("graft_watch").toString

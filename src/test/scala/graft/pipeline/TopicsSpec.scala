@@ -1,9 +1,10 @@
 package graft.pipeline
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, SyllabusFixture}
 
 /** O4 edge cases from SURVEY.md §5.2(1), on synthetic elements, plus
-  * the golden census on the reference fixture.
+  * the golden census on the reference fixture (cancelled where it is
+  * absent, FIXTURES.md §1).
   */
 class TopicsSpec extends SparkTestBase {
   import spark.implicits._
@@ -59,7 +60,8 @@ class TopicsSpec extends SparkTestBase {
   }
 
   test("golden: reference fixture census (13 topics, 6 titles)") {
-    val t = Topics.fromDocx(spark, "/root/reference/chemistry_form_1_2.docx").collect()
+    SyllabusFixture.assumeReference()
+    val t = Topics.fromDocx(spark, SyllabusFixture.Reference).collect()
     assert(t.length == 13)
     assert(t.map(_.title).distinct.sorted.toSeq == Seq(
       "Analytical skills in chemistry", "Chemical composition of matter",
@@ -68,7 +70,7 @@ class TopicsSpec extends SparkTestBase {
     // every kept element after the first marker lands in exactly one
     // topic: 29 non-empty paragraphs + 18 tables minus the preamble
     val kept = t.map(_.elements.size).sum
-    val all = spark.read.format("docx").load("/root/reference/chemistry_form_1_2.docx")
+    val all = spark.read.format("docx").load(SyllabusFixture.Reference)
     val nonEmpty = all.filter(
       "element_type = 'table' or (element_type = 'paragraph' and trim(text) <> '')").count()
     val firstMarkerIdx = t.map(_.elements.map(_.element_idx).min).min
