@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
@@ -14,6 +15,11 @@ import graft.functions.{AdcScoreExpr, ArgminCellExpr, BloomContainsExpr, CmsEsti
   * SQL surface: `graft_simhash64(text)`,
   * `graft_minhash_sig(text, k, numHashes)` — also reachable through
   * the typed helpers in [[graft.functions.HashExprs]].
+  *
+  * It also binds `file:` on the context's Hadoop configuration to the
+  * fork-free [[graft.io.LocalFs]], unless `fs.file.impl` is already set.
+  * Spark applies `spark.sql.extensions` at `getOrCreate` with the
+  * context active, before the session's first FileSystem lookup.
   */
 final class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -24,6 +30,10 @@ final class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    // SparkContext.getActive is private[spark]
+    SparkContext.getClass.getMethod("getActive").invoke(SparkContext)
+      .asInstanceOf[Option[SparkContext]]
+      .foreach(sc => graft.io.LocalFs.bind(sc.hadoopConfiguration))
     // native as-of join: marker condition → logical rewrite → strategy
     ext.injectFunction((
       new FunctionIdentifier("graft_asof_marker"),
