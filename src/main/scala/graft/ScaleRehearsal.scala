@@ -3,20 +3,23 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.streaming.ConfScope
+
 /** Scale rehearsal above the driver's sf0.1: replicate the sf0.1
   * tables K× with per-replica key strides (disjoint key spaces, so
   * joins/graphs scale linearly and expected answers are K× the base
-  * where counting is additive), then time the heaviest queries and
-  * dump the plans whose SHAPE must change with scale — the
-  * triangle-count 20M-edge broadcast cutoff and the AQE skew-join
-  * split. Run:
+  * where counting is additive), then time the heavy query set at base
+  * and at scale and dump the plans whose SHAPE must change with scale
+  * — the triangle-count broadcast cutoff and the AQE skew-join split.
+  * Run:
   *
   *   gen  — write replicated parquet to SPARK_GRAFT_SCALE_DIR
-  *   run  — time heavy queries there, write SCALE_REHEARSAL.md
+  *   run  — time the heavy set there, write SPARK_GRAFT_SCALE_OUT
+  *   all  — gen, then run (the default)
   *
   * Key strides keep every replica's keyspace disjoint (1e7 per
   * replica, far above any sf0.1 key). TWO corpus modes for the
-  * text/embedding tables (VERDICT r7 next-round #6):
+  * text/embedding tables:
   *
   *  - default (near-dup): document text gets a per-replica suffix
   *    token so replicas are NEAR-duplicates (exact dedup keeps them
@@ -34,46 +37,25 @@ import org.apache.spark.sql.functions._
   *    mode that attributes growth correctly.
   */
 object ScaleRehearsal {
-  private val Stride = 10_000_000L
-
-  private def disjointMode: Boolean =
-    sys.env.get("SPARK_GRAFT_SCALE_DISJOINT").exists(v => v == "1" || v == "true")
+  private[graft] val Stride = 10_000_000L
 
   def main(args: Array[String]): Unit = {
     val mode = if (args.nonEmpty) args(0) else "all"
+    require(Set("gen", "run", "all")(mode), s"unknown mode '$mode' (gen | run | all)")
     val src = sys.env.getOrElse("SPARK_GRAFT_SCALE_SRC", "/root/testdata/sf0.1")
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/root/repo/scale_data")
+    val dir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "scale_data")
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val disjoint =
+      sys.env.get("SPARK_GRAFT_SCALE_DISJOINT").exists(v => v == "1" || v == "true")
+    val out = java.nio.file.Paths.get(
+      sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "SCALE_REHEARSAL.md"))
+    val spark = SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    // K× sf0.1 shuffles: 32 partitions whatever the core count (AQE
+    // coalesces the small ones)
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
     spark.sparkContext.setLogLevel("WARN")
-    if (mode == "gen" || mode == "all") gen(spark, src, dir, factor)
-    if (mode == "run" || mode == "all") run(spark, src, dir, factor)
-    if (mode == "skew") println(skewCheck(spark, dir, factor))
-    if (mode == "ivf") println(ivfServeCheck(spark, dir))
-    if (mode == "ivfdrift") println(ivfDriftCheck(spark, dir))
-    if (mode == "mediadiag") println(mediaDiag(spark, dir))
-    if (mode == "pq") println(pqServeCheck(spark, dir))
-    if (mode == "semidx") println(semanticServeCheck(spark, dir))
-    if (mode == "annserve") println(annServeCheck(spark, dir))
-    if (mode == "chaincc") println(chainCcCheck(spark,
-      sys.env.getOrElse("SPARK_GRAFT_CHAIN_N", "1000000").toLong))
-    if (mode == "deltacc") println(deltaCcCheck(spark,
-      sys.env.getOrElse("SPARK_GRAFT_DELTACC_N", "1000000").toLong))
-    if (mode == "labelstore") println(labelStoreCheck(spark,
-      sys.env.getOrElse("SPARK_GRAFT_DELTACC_N", "1000000").toLong))
-    if (mode == "adc") println(adcKernelCheck(spark, dir))
-    if (mode == "graphbuild") println(graphBuildCheck(spark, src, dir))
-    if (mode == "graphdrift") println(graphDriftCheck(spark, dir))
-    if (mode == "retrainloop") println(retrainLoopCheck(spark, dir))
-    if (mode == "graphmaint") println(graphMaintCheck(spark, dir))
-    if (mode == "qualitytrain") println(qualityTrainCheck(spark, dir))
+    if (mode == "gen" || mode == "all") gen(spark, src, dir, factor, disjoint)
+    if (mode == "run" || mode == "all") run(spark, src, dir, factor, heavy, out, disjoint)
     spark.stop()
   }
 
@@ -93,171 +75,119 @@ object ScaleRehearsal {
   private def writeT(df: DataFrame, dir: String, name: String): Unit =
     df.write.mode("overwrite").parquet(s"$dir/$name.parquet")
 
-  def gen(spark: SparkSession, src: String, dir: String, factor: Int): Unit = {
+  /** The replicated fact tables and the long key columns each one
+    * shifts by rep*Stride; every other table is copied as-is.
+    */
+  private[graft] val replicatedKeys: Seq[(String, Seq[String])] = Seq(
+    "customer" -> Seq("c_custkey"),
+    "supplier" -> Seq("s_suppkey"),
+    "part" -> Seq("p_partkey"),
+    "orders" -> Seq("o_orderkey", "o_custkey"),
+    "lineitem" -> Seq("l_orderkey", "l_partkey", "l_suppkey"),
+    "events" -> Seq("event_id", "user_id"),
+    "documents" -> Seq("doc_id"),
+    "embeddings" -> Seq("vec_id"))
+
+  /** Write `src`'s tables to `dir`: dimensions as-is, facts `factor`×
+    * with strided keys and, for text and embeddings, the corpus mode
+    * the header describes.
+    */
+  def gen(spark: SparkSession, src: String, dir: String, factor: Int,
+      disjoint: Boolean): Unit = {
     def t(n: String) = Tables.load(spark, src, n)
     // dims stay as-is: every replica shares nations/regions, which is
     // what a real scale-up looks like (dims grow much slower than facts)
     writeT(t("region"), dir, "region")
     writeT(t("nation"), dir, "nation")
-    writeT(replicate(t("customer"), factor, Seq("c_custkey"))
-      .drop("graft_rep"), dir, "customer")
-    writeT(replicate(t("supplier"), factor, Seq("s_suppkey"))
-      .drop("graft_rep"), dir, "supplier")
-    writeT(replicate(t("part"), factor, Seq("p_partkey"))
-      .drop("graft_rep"), dir, "part")
-    writeT(replicate(t("orders"), factor, Seq("o_orderkey", "o_custkey"))
-      .drop("graft_rep"), dir, "orders")
-    writeT(replicate(t("lineitem"), factor,
-      Seq("l_orderkey", "l_partkey", "l_suppkey"))
-      .drop("graft_rep"), dir, "lineitem")
-    // events.ts generation-dependent: ns data reads as raw long under
-    // nanosAsLong (harmless for µs data, which passes through as
-    // TIMESTAMP_NTZ); either form round-trips and Tables.normalizeTs
-    // handles both on read
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try writeT(replicate(t("events"), factor, Seq("event_id", "user_id"))
-      .drop("graft_rep"), dir, "events")
-    finally spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
     // replica text: near-dup suffix token (default) or fully disjoint
-    // per-token suffixes (SPARK_GRAFT_SCALE_DISJOINT=1 — see header);
-    // n_chars recomputed to stay consistent with the text either way
+    // per-token suffixes (disjoint mode — see header); n_chars
+    // recomputed to stay consistent with the text either way
     val repText =
-      if (disjointMode)
+      if (disjoint)
         when(col("graft_rep") === 0, col("text"))
           .otherwise(array_join(transform(split(col("text"), " "),
             tk => concat(tk, lit("_r"), col("graft_rep"))), " "))
       else
         when(col("graft_rep") === 0, col("text"))
           .otherwise(concat(col("text"), lit(" rep"), col("graft_rep")))
-    writeT(replicate(t("documents"), factor, Seq("doc_id"))
-      .withColumn("text", repText)
-      .withColumn("n_chars", length(col("text")).cast("long"))
-      .drop("graft_rep"), dir, "documents")
     // replica embeddings: verbatim (default — K× bucket occupancy) or
     // per-rep deterministic sign flips (disjoint — cross-replica
     // cosines far from 1, so near-dup structure stays base-sized
     // per replica)
     val repEmb =
-      if (disjointMode)
+      if (disjoint)
         when(col("graft_rep") === 0, col("embedding"))
           .otherwise(transform(col("embedding"), (x, i) =>
             when(((i + col("graft_rep")) % 3) === 0, -x).otherwise(x)))
       else col("embedding")
-    writeT(replicate(t("embeddings"), factor, Seq("vec_id"))
-      .withColumn("embedding", repEmb)
-      .drop("graft_rep"), dir, "embeddings")
+    replicatedKeys.foreach { case (name, keys) =>
+      val r = replicate(t(name), factor, keys)
+      val shaped = name match {
+        case "documents" => r.withColumn("text", repText)
+          .withColumn("n_chars", length(col("text")).cast("long"))
+        case "embeddings" => r.withColumn("embedding", repEmb)
+        case _ => r
+      }
+      // events.ts generation-dependent: ns data reads as raw long under
+      // nanosAsLong (harmless for µs data, which passes through as
+      // TIMESTAMP_NTZ); either form round-trips and Tables.normalizeTs
+      // handles both on read
+      ConfScope.nanosAsLong(spark)(writeT(shaped.drop("graft_rep"), dir, name))
+    }
     println(s"[scale] wrote $factor x $src -> $dir" +
-      (if (disjointMode) " (disjoint-text mode)" else " (near-dup mode)"))
+      (if (disjoint) " (disjoint-text mode)" else " (near-dup mode)"))
   }
 
-  /** The heavy set from the round-2 bench tail plus every dedup/ANN
-    * path — the queries whose plan shape is the 100 TB risk.
+  /** The heavy set: names in [[SparkEntry.benchQueries]], so every row
+    * times the body Bench times (serve overrides included — an
+    * override that builds its index on the first call per dir pays
+    * that build in the first pass, and the min of 2 is the serve).
     */
-  private val heavy = Seq(
+  private val heavy: Seq[String] = Seq(
+    // relational: joins, aggregation, windows, top-k, graph operators
     "q_join_broadcast", "q_join_salted", "q_join_semi", "q_agg", "q_window",
+    "q_topk_grouped", "q_pagerank", "q_triangles", "q_shortest_path",
+    "q_communities", "q_cooccur", "q_recs", "q_dpp", "q_zorder_prune",
+    "q_attribution", "q_stats_refresh", "q_ks_test", "q_asof_native",
+    "q_length_buckets",
+    // dedup: MinHash/SimHash/shingle/substring, candidate → CC chains,
+    // incremental classify against a built index
     "q_dedup_minhash", "q_dedup_near", "q_ngram_jaccard", "q_simhash_near",
-    "q_embed_neardup", "q_knn_join", "q_sim_ivf", "q_decontaminate",
-    "q_dedup_groups", "q_dedup_groups2", "q_dedup_drop", "q_topk_grouped",
-    "q_pagerank", "q_triangles",
-    // round-5 compositions: generation + search over 1M docs (brute
-    // fused scan vs postings explode+join — the sparse crossover), and
-    // the full LSH→verify→CC→survivors dedup pipeline
-    "q_embed_search", "q_embed_search_postings",
-    // round-7: rolling-window substring dedup (window-md5 shuffle is
-    // the O(tokens) risk), k-means census (per-round argmin scans ×
-    // K× corpus), and the retrieval-metrics probe join (sign buckets
-    // at K× occupancy)
-    "q_substr_dedup", "q_cluster", "q_eval_retrieval",
-    // late round-7: leakage-proof split = the full candidate→CC chain
-    // on a corpus whose replicas form K-member near-dup clusters (the
-    // worst-case cluster shape for the split), and image search =
-    // 20× real decode+featurize feeding the rank
-    "q_split_leakproof", "q_image_search",
-    // round-8/9: semantic dedup — since r9 on the hierarchical
-    // blocking (coarse sqrt(k) literal + cell-keyed fine hash join) —
-    // and the stats-pruned z-order scan
-    "q_semdedup", "q_zorder_prune",
-    // late round-8: the new iterative graph ops (BFS frontier joins,
-    // LPA argmax rounds), the corpus pair generators (PMI self-join,
-    // CF co-occurrence), and the stateful streaming fold (per-user
-    // EWMA state at K× users)
-    "q_shortest_path", "q_communities", "q_cooccur", "q_recs",
-    "q_stream_anomaly",
-    // the demoted flat single-level blocking, kept in the rehearsal
-    // as the CONTRAST row: its O(n·k) broadcast argmin should show
-    // the super-linear x-factor the hier q_semdedup no longer has
-    "q_semdedup_flat",
-    // dynamic partition pruning: per-call partitioned write + pruned
-    // join — the write scales with data, the join with matching
-    // partitions
-    "q_dpp",
-    // round-9 coverage (VERDICT r8 #5): the remaining round-8 family —
-    // vocab heap-k, digest-keyed incremental dedup, probe-bounded
-    // hard negatives, md5-coin mixture apply, first/last-touch
-    // windows, stateless stream-static ingest dedup — plus the new
-    // round-9 operators (20-round BPE training over the word-type
-    // table, incremental stats refresh + pruned read)
-    "q_vocab", "q_dedup_incremental", "q_hard_negatives", "q_mix_apply",
-    "q_attribution", "q_stream_ingest", "q_bpe_train", "q_stats_refresh",
-    // late round-9: trained-tokenizer apply (vocab-domain hash join at
-    // K× corpus), the exact-ECDF prefix scan (range exchange +
-    // per-partition offsets at K× distinct values), and the custom
-    // sorted-merge as-of SparkPlan (per-key merge state at K× events)
-    "q_bpe_apply", "q_ks_test", "q_asof_native", "q_length_buckets",
-    // round-10: image near-dedup (decode → hier blocking → alternating
-    // star CC — the multimodal dedup member; edge chains grow with the
-    // corpus, which is exactly what the star rounds are for), and the
-    // frozen-blocking incremental semantic classify (per-batch-row
-    // candidate count ≈ blockSize must stay constant as BOTH sides
-    // grow — the daily-ingest economics)
-    "q_image_neardup", "q_semdedup_incremental",
-    // late round-10: the lexical incremental classify (batch band
-    // keys × corpus bucket join — candidate domain grows with bucket
-    // occupancy, the q_dedup_minhash growth law restricted to
-    // cross-side pairs) and Matryoshka two-stage ANN (prefix-cosine
-    // corpus scan + C ∝ n exact re-rank; the in-query recall gate
-    // must hold at 20× too, so the rehearsal row proves BOTH cost and
-    // quality scaling), plus the cluster-accounting rollup over the
-    // full LSH→CC chain
-    "q_neardup_incremental", "q_sim_mrl", "q_dedup_audit",
-    // round-11: audio/video near-dedup (the r10 open scale risk —
-    // audio's τ-verified pair density grew superlinearly with corpus
-    // density at sf0.01→0.1; the disjoint-mode 20× row bounds it, and
-    // the per-block cap now bounds the worst case), the streaming
-    // MinHash classify (per-trigger bucket joins at 20× index size),
-    // and the trained quality gate (12 GD aggregation passes over a
-    // 20× feature frame — linear per pass by construction)
-    "q_audio_neardup", "q_video_neardup", "q_stream_neardup",
-    "q_quality_trained",
-    // late round-11: the streaming semantic classify now serves the
-    // SAVED SemanticIndex (pre-blocked corpus + frozen reps) — the
-    // row prices stream overhead + per-trigger candidate joins at
-    // 20× index size, the exact q_stream_neardup economics on the
-    // embedding side (the one-time index build lands on the untimed
-    // first call, as in Bench)
-    "q_stream_semdedup",
-    // round-12: the trained langid (5 one-vs-rest chains × 8 GD
-    // aggregation passes over a 20× cached feature frame — the
-    // q_quality_trained economics × 5 classes) and the serving-engine
-    // retrieval eval (3 engine builds + 20 fixed probes × corpus —
-    // probe count does NOT scale with the corpus here, unlike the
-    // streamed slice, so the row prices exactly what a per-retrain
-    // eval pays at 20×)
-    "q_langid_trained", "q_eval_ann")
-    // q_stream_ann / q_stream_ann_pq are deliberately NOT heavy rows:
-    // their correctness bodies' recall gates are queries × corpus BY
-    // CONTRACT and the fixture's query count scales WITH the corpus,
-    // so the rows would price a 400× product no production serving
-    // tier pays (query rate does not scale with corpus size). The
-    // serving economics — right-sized cells, per-trigger probe cost,
-    // recall on a bounded sample — are measured in annServeCheck /
-    // pqServeCheck below instead.
+    "q_dedup_groups", "q_dedup_groups2", "q_dedup_drop", "q_decontaminate",
+    "q_substr_dedup", "q_split_leakproof", "q_dedup_incremental",
+    "q_neardup_incremental", "q_dedup_audit",
+    // semantic dedup: hierarchical blocking, and the demoted flat
+    // single-level blocking as the CONTRAST row (its O(n·k) broadcast
+    // argmin is expected to go super-linear)
+    "q_embed_neardup", "q_semdedup", "q_semdedup_flat", "q_semdedup_incremental",
+    // search and serving indexes: brute/postings search, IVF, PQ,
+    // Matryoshka, graph, the eval over three engine builds
+    "q_knn_join", "q_embed_search", "q_embed_search_postings", "q_sim_ivf",
+    "q_sim_pq", "q_sim_mrl", "q_sim_graph", "q_eval_retrieval", "q_eval_ann",
+    "q_cluster", "q_hard_negatives",
+    // corpus statistics and trained text models
+    "q_vocab", "q_mix_apply", "q_bpe_train", "q_bpe_apply",
+    "q_quality_trained", "q_langid_trained",
+    // media near-dedup: decode → blocking → alternating-star CC
+    "q_image_search", "q_image_neardup", "q_audio_neardup", "q_video_neardup",
+    // streams: stateful fold, ingest dedup, index classify, the Δ
+    // index maintenance and the durable CC label store
+    "q_stream_anomaly", "q_stream_ingest", "q_stream_neardup",
+    "q_stream_semdedup", "q_stream_index_maint", "q_stream_cc_store")
+  // q_stream_ann / q_stream_ann_pq are deliberately NOT heavy rows:
+  // the fixture's query slice scales WITH the corpus, so their rows
+  // would price a queries × corpus product no serving tier pays
+  // (query rate does not scale with corpus size)
 
-  def run(spark: SparkSession, src: String, dir: String, factor: Int): Unit = {
+  /** Time each of `heavy` on `src` and on `dir` (the `gen` output),
+    * run the plan-shape checks on `dir`, and write the report to `out`.
+    */
+  def run(spark: SparkSession, src: String, dir: String, factor: Int,
+      heavy: Seq[String], out: java.nio.file.Path, disjoint: Boolean): Unit = {
     val sb = new StringBuilder
     sb ++= s"# SCALE REHEARSAL — ${factor}x sf0.1 (~sf${factor / 10.0})\n\n"
-    sb ++= s"Data: `$dir` = sf0.1 replicated ${factor}x with disjoint key strides,\n"
-    sb ++= (if (disjointMode)
+    sb ++= s"Data: `$dir` = `$src` replicated ${factor}x with disjoint key strides,\n"
+    sb ++= (if (disjoint)
       "**disjoint-text mode**: replica tokens carry per-replica suffixes and\n" +
       "replica embeddings per-replica sign flips, so true-duplicate structure\n" +
       s"is ${factor}x the base's (not quadratic in replica count) — any\n" +
@@ -267,22 +197,11 @@ object ScaleRehearsal {
       "stress case) — candidate-pair growth includes true quadratic\n" +
       "duplication growth by definition.\n")
     sb ++= "Timings are min of 2 passes after one untimed warmup at sf0.001;\n"
-    sb ++= "`x/sf0.1` is the heavy-set slowdown vs the same query on sf0.1 in\n"
-    sb ++= "THIS run (same JVM, same session) — linear-or-better at 10x data\n"
-    sb ++= s"on a fixed 32-core box means the plan has no super-linear shuffle.\n\n"
-    sb ++= "| query | sf0.1 s | scale s | x | rows(scale) |\n|---|---|---|---|---|\n"
-    // correctness bodies, EXCEPT q_bpe_train, which takes its bench
-    // override (clear-cache-then-train): the rehearsal row must price
-    // real training, and using the same override as Bench keeps the
-    // cache-clear inside the timed window with ONE definition (the
-    // other serve-path overrides are deliberately NOT taken — their
-    // rehearsal rows measure the build/training body by design, with
-    // ivfServeCheck/pqServeCheck as the serving numbers)
-    // benchOverrides(...) — not a filtered view — so a future rename
-    // of the override key fails HERE loudly instead of silently
-    // re-timing the cached-merges body (the ADVICE-r9 mispricing)
-    val qs = SparkEntry.queries +
-      ("q_bpe_train" -> graft.queries.TrainingData.benchOverrides("q_bpe_train"))
+    sb ++= "`x` is the slowdown vs the same query on the base in THIS run\n"
+    sb ++= s"(same JVM, same session) — at or under ${factor} on a fixed core\n"
+    sb ++= "count means the plan has no super-linear term.\n\n"
+    sb ++= "| query | base s | scale s | x | rows(scale) |\n|---|---|---|---|---|\n"
+    val qs = SparkEntry.benchQueries
     // warmup on the SMALLEST available slice of the configured source
     // (codegen+JIT, untimed): hardcoding /root/testdata/sf0.001 made
     // warmup silently no-op on any box without that path, letting the
@@ -299,11 +218,10 @@ object ScaleRehearsal {
       }
       Bench.scrub(spark)
     }
-    // between-pass scrub, same as Bench (round 5): ~100 plans execute
-    // in this one JVM, and without it leaked persisted blocks /
-    // state-store providers compound into 10-100x slowdowns on LATER
-    // queries (the round-3/-4 contamination class) — the rehearsal
-    // must measure plan shape, not harness debris
+    // between-pass scrub, same as Bench: ~100 plans execute in this
+    // one JVM, and leaked persisted blocks / state-store providers
+    // would otherwise compound into slowdowns on LATER queries — the
+    // rehearsal must measure plan shape, not harness debris
     def time(n: String, d: String): (Double, Long) = {
       var rows = 0L
       val ts = (0 until 2).map { _ =>
@@ -323,148 +241,52 @@ object ScaleRehearsal {
       println(f"[scale] $n base=$base%.2fs scaled=$scaled%.2fs x=$x%.1f rows=$rows")
       System.gc() // drain ContextCleaner debris between queries
     }
-    sb ++= "\nAttributions for rows whose x-factor needs context:\n\n"
-    sb ++= "- `q_recs`: co-purchase pair growth is basket-size-bounded\n" +
-      "  (pairs per order ≤ C(|basket|, 2) and baskets do not grow with\n" +
-      "  SF), so the pair stream — and the output — grow LINEARLY in\n" +
-      "  orders; the x-factor prices the K× pair/aggregation domain on a\n" +
-      "  fixed core count, not a super-linear plan.\n"
-    sb ++= "- `q_semdedup_flat`: the DEMOTED single-level blocking, kept in\n" +
-      "  the rehearsal as the contrast row — its O(n·k) broadcast argmin is\n" +
-      "  EXPECTED to go super-linear here; the production `q_semdedup` /\n" +
-      "  `q_embed_neardup` rows above run the hierarchical path that\n" +
-      "  replaced it (r8: 11.1x/25.0x on the flat path; now ~3-4x).\n"
-    sb ++= "- `q_bpe_train`: the trained-merges cache is CLEARED before each\n" +
-      "  timed pass, so both passes pay full training (corpus word-count\n" +
-      "  scan + 20 argmax rounds) — ADVICE r9 flagged the earlier row as\n" +
-      "  timing only the post-cache artifact read. Disjoint-mode `_r<rep>`\n" +
-      "  token suffixes fall outside the `^[a-z]{2,}$` training filter, so\n" +
-      "  reps 1..K-1 add no word types: the 20 rounds run on a base-sized\n" +
-      "  vocabulary and the expected growth is the corpus-side word-count\n" +
-      "  scan, the one stage that is corpus-proportional by design.\n"
-    sb ++= "- `q_dedup_minhash`: 16×2 complete-recall bands make the candidate\n" +
-      "  domain grow with bucket occupancy by design (the declared query\n" +
-      "  fixes recall, not cost); the production cost point is the banded\n" +
-      "  index + incremental classify (`q_neardup_incremental`, ~1× here),\n" +
-      "  which touches only batch-side collisions.\n"
-    sb ++= "- `q_eval_ann`: the eval's graph arm is ORACLE-PINNED to the\n" +
-      "  exact-kNN build (`GraphIndex.buildExact` — the DuckDB oracle\n" +
-      "  unrolls true kNN, so the adjacency must BE true kNN), which is\n" +
-      "  quadratic by construction; at 20× the row prices that arm, not\n" +
-      "  serving (the serving builds are NN-descent — see the graph-index\n" +
-      "  section). An operator runs this eval per RETRAIN on a BOUNDED\n" +
-      "  probe/corpus sample at 100 TB — the cost is capped by the sample\n" +
-      "  exactly like q_quality_trained's sampled-GD hatch.\n"
-    sb ++= "- media near-dedup (`q_image/audio/video_neardup`): r11's one\n" +
-      "  superlinear scaler — audio's 8-dim amplitude features crowded\n" +
-      "  pair cosines at ≈1, yielding 468,704 verified edges (46× base)\n" +
-      "  at τ=0.99999 — is CLOSED by the r12 four-band featurizer: the\n" +
-      "  zero-mean bands spread unrelated cosines (median ~0.66), τ\n" +
-      "  dropped to 0.97, and the media-diag section below now counts\n" +
-      "  11,244 audio edges at 20× — fewer than image or video at the\n" +
-      "  same scale — with a τ-sweep row separating the statistical\n" +
-      "  tail from the near-identity structure. Remaining stage costs\n" +
-      "  are decode (linear, embarrassingly parallel, SPI cached\n" +
-      "  per JVM) and the flat-path kmeans (O(n·k) BY DISPATCH; hands\n" +
-      "  over to O(n·√k) hier above 65536 clips). The per-block cap\n" +
-      "  (1024) bounds any single block's pair contribution; CC ingests\n" +
-      "  the bounded edge set through the adaptive dispatch.\n"
-
-    // --- media growth diagnostic (edge/survivor accounting) --------
-    sb ++= mediaDiag(spark, dir)
-
-    // --- shape check 1: triangle broadcast cutoff ------------------
-    // run the scaled graph through BOTH plan shapes: the default
-    // cutoff (50M edges — broadcast adjacency) and a forced 1M-edge
-    // cutoff (shuffled fallback with edge-scaled partitioning).
-    // disjoint replicas ⇒ both must report exactly factor x the base.
-    sb ++= "\n## Triangle-count cutoff check (both paths at scale)\n\n"
-    val baseTri = qs("q_triangles")(spark, src).collect()(0)
-    val be = baseTri.getLong(0); val bt = baseTri.getLong(1)
-    def timedTri(): (Double, Long, Long) = {
-      val t0 = System.nanoTime()
-      val r = qs("q_triangles")(spark, dir).collect()(0)
-      val out = ((System.nanoTime() - t0) / 1e9, r.getLong(0), r.getLong(1))
-      Bench.scrub(spark)
-      out
-    }
-    val (tB, seB, stB) = timedTri() // default cutoff: broadcast path
-    spark.conf.set("spark.graft.triangles.broadcastMaxEdges", "1000000")
-    val (tS, seS, stS) =
-      try timedTri() // forced fallback: shuffled path
-      finally spark.conf.unset("spark.graft.triangles.broadcastMaxEdges")
-    val triOk = seB == factor * be && stB == factor * bt &&
-      seS == seB && stS == stB
-    sb ++= s"- base: $be edges / $bt triangles\n"
-    sb ++= f"- scaled, broadcast path (default 50M cutoff): $seB edges / $stB triangles in $tB%.1f s\n"
-    sb ++= f"- scaled, shuffled path (cutoff forced to 1M): $seS edges / $stS triangles in $tS%.1f s\n"
-    sb ++= s"- both paths equal and exactly ${factor}x base: ${if (triOk) "OK" else "MISMATCH"}\n"
-    println(f"[scale] triangles broadcast=$tB%.1fs shuffled=$tS%.1fs ok=$triOk")
-
-    // --- shape check 2: AQE skew-join split ------------------------
+    sb ++= triangleCheck(spark, src, dir, factor)
     sb ++= skewCheck(spark, dir, factor)
-
-    // --- shape check 3: IVF build-once serving path ----------------
-    sb ++= ivfServeCheck(spark, dir)
-
-    // --- shape check 3a: IVF incremental append (cost ∝ Δ) ---------
-    sb ++= ivfAppendCheck(spark, dir)
-
-    // --- shape check 3b: PQ encode-once serving path ---------------
-    sb ++= pqServeCheck(spark, dir)
-
-    // --- shape check 3b': semantic dedup index serve/append --------
-    sb ++= semanticServeCheck(spark, dir)
-
-    // --- shape check 3b'': streaming ANN serving (right-sized) -----
-    sb ++= annServeCheck(spark, dir)
-
-    // --- shape check 3c: drift → retrain-trigger → rebuild ---------
-    sb ++= ivfDriftCheck(spark, dir)
-
-    // --- shape check 4: long-chain CC (alternating star ops) -------
-    sb ++= chainCcCheck(spark,
-      sys.env.getOrElse("SPARK_GRAFT_CHAIN_N", "1000000").toLong)
-
-    // --- shape check 4a: delta-CC label maintenance ----------------
-    sb ++= deltaCcCheck(spark,
-      sys.env.getOrElse("SPARK_GRAFT_DELTACC_N", "1000000").toLong)
-
-    // --- shape check 4aa: durable bucketed label-store appends -----
-    sb ++= labelStoreCheck(spark,
-      sys.env.getOrElse("SPARK_GRAFT_DELTACC_N", "1000000").toLong)
-
-    // --- shape check 4b: trained-model train/score economics -------
-    sb ++= qualityTrainCheck(spark, dir)
-
-    // --- shape check 5: graph-index build/insert economics ----------
-    sb ++= graphBuildCheck(spark, src, dir)
-
-    // --- shape check 5a: graph drift → retrain trigger → rebuild ----
-    sb ++= graphDriftCheck(spark, dir)
-
-    // --- shape check 6: native ADC kernel vs closure UDF ------------
-    sb ++= adcKernelCheck(spark, dir)
-
     sb ++= planDump(spark, dir)
-
-    val out = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "/root/repo/SCALE_REHEARSAL.md"))
     java.nio.file.Files.write(out,
       sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     println(s"[scale] wrote $out")
   }
 
+  /** Run the scaled graph through BOTH triangle-count plan shapes: the
+    * default cutoff (50M edges — broadcast adjacency) and a forced
+    * 1M-edge cutoff (shuffled fallback with edge-scaled partitioning).
+    * Disjoint replicas ⇒ both must report exactly factor x the base.
+    */
+  private def triangleCheck(spark: SparkSession, src: String, dir: String,
+      factor: Int): String = {
+    val tri = SparkEntry.queries("q_triangles")
+    val baseTri = tri(spark, src).collect()(0)
+    val be = baseTri.getLong(0); val bt = baseTri.getLong(1)
+    def timedTri(): (Double, Long, Long) = {
+      val t0 = System.nanoTime()
+      val r = tri(spark, dir).collect()(0)
+      val out = ((System.nanoTime() - t0) / 1e9, r.getLong(0), r.getLong(1))
+      Bench.scrub(spark)
+      out
+    }
+    val (tB, seB, stB) = timedTri() // default cutoff: broadcast path
+    val (tS, seS, stS) = // forced fallback: shuffled path
+      ConfScope.withConf(spark, "spark.graft.triangles.broadcastMaxEdges", "1000000")(timedTri())
+    val triOk = seB == factor * be && stB == factor * bt &&
+      seS == seB && stS == stB
+    println(f"[scale] triangles broadcast=$tB%.1fs shuffled=$tS%.1fs ok=$triOk")
+    "\n## Triangle-count cutoff check (both paths at scale)\n\n" +
+      s"- base: $be edges / $bt triangles\n" +
+      f"- scaled, broadcast path (default 50M cutoff): $seB edges / $stB triangles in $tB%.1f s\n" +
+      f"- scaled, shuffled path (cutoff forced to 1M): $seS edges / $stS triangles in $tS%.1f s\n" +
+      s"- both paths equal and exactly ${factor}x base: ${if (triOk) "OK" else "MISMATCH"}\n"
+  }
+
   /** 40% of the probe side lands on ONE key; AQE must split the
     * skewed partition rather than let one task carry 40% of the
-    * rows. Returns the markdown section (also printed by mode=skew).
+    * rows. Returns the markdown section.
     */
-  def skewCheck(spark: SparkSession, dir: String, factor: Int): String = {
+  private def skewCheck(spark: SparkSession, dir: String, factor: Int): String = {
     // same measurement contract as the heavy table: scrub first (in a
     // full rehearsal this runs right after the triangle section's
-    // shuffled-path storm) and report min of 2 scrubbed passes — the
-    // first r5 run published a single unscrubbed 198 s pass for a
-    // join whose clean floor is ~8 s
+    // shuffled-path storm) and report min of 2 scrubbed passes
     Bench.scrub(spark)
     val sb = new StringBuilder
     sb ++= "\n## AQE skew-join check\n\n"
@@ -507,7 +329,7 @@ object ScaleRehearsal {
       val (skewSec, n, plan) = passes.minBy(_._1)
       val split = plan.contains("skew=true")
       val aqeRead = plan.contains("AQEShuffleRead")
-      sb ++= f"- 40%% of ${factor * 600000} probe rows on one key, sort-merge forced: $skewSec%.2f s, $n joined rows\n"
+      sb ++= f"- 40%% of the scaled lineitem's probe rows on one key, sort-merge forced: $skewSec%.2f s, $n joined rows\n"
       sb ++= s"- final adaptive plan contains `skew=true`: ${if (split) "YES — skewed partition was split" else "NO"}\n"
       sb ++= s"- plan contains AQEShuffleRead: $aqeRead\n"
       if (!split) {
@@ -523,1523 +345,6 @@ object ScaleRehearsal {
       spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
-    sb.toString
-  }
-
-  /** Build+save the cell-partitioned IVF index on the scaled corpus
-    * ONCE, then time topK probes against the loaded layout — the
-    * serving cost a user pays per query. The per-call `q_sim_ivf`
-    * body retrains every call (by design, for the DuckDB oracle), so
-    * its rehearsal row measures training, not serving — this section
-    * is the 100 TB-relevant number (VERDICT r3 next-round #2).
-    */
-  def ivfServeCheck(spark: SparkSession, dir: String): String = {
-    import graft.similarity.IvfIndex
-    // the build is a timed section and runs right after skewCheck's
-    // ~200 s shuffle storm in a full rehearsal — start from a clean
-    // session or its number measures harness debris (first r5 run:
-    // 581 s contaminated vs ~40 s scrubbed)
-    Bench.scrub(spark)
-    val sb = new StringBuilder
-    sb ++= "\n## IVF serving path at scale (build-once / probe-many)\n\n"
-    val emb = Tables.embeddings(spark, dir)
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_scale")
-      .toAbsolutePath.toString
-    try {
-      val t0 = System.nanoTime()
-      IvfIndex.save(
-        IvfIndex.build(emb, "vec_id", "embedding", nCentroids = 16, iters = 2), path)
-      val buildSec = (System.nanoTime() - t0) / 1e9
-      // headOption, not head(): a scaled corpus without vec_id 0 must
-      // degrade to a logged row, not abort the whole rehearsal report
-      // (ADVICE r4 low)
-      emb.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<float>"))
-        .limit(1).collect().headOption.map(_.getSeq[Float](0)) match {
-        case None =>
-          sb ++= f"- build+save (amortized once per corpus): $buildSec%.1f s\n"
-          sb ++= "- probe: SKIPPED — no query vector (vec_id 0 absent from scaled corpus)\n"
-        case Some(q) =>
-          val idx = IvfIndex.load(spark, path, "vec_id", "embedding")
-          val probes = (0 until 3).map { _ =>
-            val p0 = System.nanoTime()
-            IvfIndex.topK(idx, q, k = 10, nProbe = 4).count()
-            (System.nanoTime() - p0) / 1e9
-          }
-          sb ++= f"- build+save (amortized once per corpus): $buildSec%.1f s\n"
-          sb ++= f"- probe topK(k=10, nProbe=4/16) on the loaded cell-partitioned layout: ${probes.min}%.2f s (min of 3)\n"
-          println(f"[scale] ivf build=$buildSec%.1fs probe=${probes.min}%.2fs")
-      }
-    } finally { // the index is rehearsal scratch — never leave it behind
-      graft.tools.Scratch.deleteRecursively(new java.io.File(path))
-    }
-    sb.toString
-  }
-
-  /** Streaming ANN serving at scale — q_stream_ann's 100 TB story
-    * priced honestly. The declared query's recall gate runs an exact
-    * scan over queries × corpus BY CONTRACT (the driver needs a
-    * hash-checkable emit) and shares the sf-sized 16-cell index, so a
-    * heavy-set row would price a 400× fixture product at 20× (both
-    * sides scale with SF; a production serving tier's query RATE does
-    * not scale with corpus SIZE). Here the serving tier is sized for
-    * THIS corpus: nCells = 64 (cells ∝ √n keeps per-cell population —
-    * and so per-query probe cost — bounded as the corpus grows),
-    * nProbe = 8 ⇒ a 12.5% scan cut at the partition level, the full
-    * query slice streams through [[graft.streaming.AnnStream]], and
-    * quality is checked on a BOUNDED 64-query sample against the
-    * exact scan — per-query serving cost and recall are the numbers
-    * that must hold at scale, and both are printed.
-    */
-  def annServeCheck(spark: SparkSession, dir: String): String = {
-    import graft.similarity.IvfIndex
-    Bench.scrub(spark)
-    val sb = new StringBuilder
-    sb ++= "\n## Streaming ANN serving at scale (right-sized index, bounded recall sample)\n\n"
-    val emb = Tables.embeddings(spark, dir)
-    val path = java.nio.file.Files.createTempDirectory("graft_ann_scale")
-      .toAbsolutePath.toString
-    try {
-      val t0 = System.nanoTime()
-      IvfIndex.save(
-        IvfIndex.build(emb, "vec_id", "embedding", nCentroids = 64, iters = 2),
-        path)
-      val buildSec = (System.nanoTime() - t0) / 1e9
-      sb ++= f"- index build+save over the scaled corpus (amortized once): $buildSec%.1f s, 64 cells\n"
-      // bounded quality sample, computed ONCE (nProbe-independent):
-      // exact top-10 for the 64 lowest streamed query ids
-      val qids = emb.filter(col("vec_id") % 20 === 0)
-        .select(col("vec_id")).orderBy(col("vec_id")).limit(64)
-      val probes = emb.join(broadcast(qids.select(col("vec_id").as("query_id"))),
-          emb("vec_id") === col("query_id"))
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      val corpus = emb.select(col("vec_id").as("cid"),
-        col("embedding").as("cvec"))
-      val exact = corpus.join(broadcast(probes))
-        .withColumn("cos", graft.functions.VectorOps.cosine(
-          col("qvec"), col("cvec")))
-        .filter(col("cos").isNotNull)
-        .groupBy(col("qid"))
-        .agg(graft.functions.TopKAgg.topK(10)(col("cos"), col("cid")).as("top"))
-        .select(col("qid"), explode(col("top")).as("hit"))
-        .select(col("qid"), col("hit._2").as("cid"))
-        .localCheckpoint()
-      val nSample = exact.select(col("qid")).distinct().count()
-      sb ++= "\n| nProbe | scan share | serve s (full slice) | queries | recall@10 (" +
-        s"$nSample-query sample) |\n|---|---|---|---|---|\n"
-      // the cost/recall OPERATING CURVE: two probe widths, each timed
-      // (min of 2 — the stream pays checkpoint scratch per pass) and
-      // recall-sampled. Recall here is bought by scan share alone:
-      // the fixture vectors are near-random (sign-flipped replicas),
-      // the worst case for any locality index — real trained
-      // embeddings cluster and sit far above this at the same share.
-      for (nProbe <- Seq(8, 16)) {
-        var ann: org.apache.spark.sql.DataFrame = null
-        val serveSecs = (0 until 2).map { _ =>
-          val p0 = System.nanoTime()
-          ann = graft.streaming.AnnStream.probeFile(spark, dir, path,
-            k = 10, nProbe = nProbe)
-          ann.count()
-          (System.nanoTime() - p0) / 1e9
-        }
-        val served = ann.select(col("query_id")).distinct().count()
-        val hits = ann.select(col("query_id").as("qid"), col("vec_id").as("cid"))
-          .join(exact, Seq("qid", "cid")).count()
-        val recall = if (nSample == 0) 0.0 else hits.toDouble / (nSample * 10.0)
-        sb ++= f"| $nProbe/64 | ${nProbe * 100.0 / 64}%.1f%% | ${serveSecs.min}%.1f | $served | $recall%.2f |\n"
-        println(f"[scale] annserve nProbe=$nProbe build=$buildSec%.1fs " +
-          f"serve=${serveSecs.min}%.1fs queries=$served recall=$recall%.2f")
-      }
-      sb ++= "\nReading: per-query serve cost is milliseconds (the full\n" +
-        "slice streams in seconds) and scales with probed-cell occupancy,\n" +
-        "not corpus size; recall is the explicit price of the scan cut on\n" +
-        "a near-random fixture — raise nProbe (or cell count) to buy it,\n" +
-        "the same knob the drift section exercises. The declared query's\n" +
-        ">= 0.8 gate holds at SF scale on its own operating point.\n"
-    } finally {
-      graft.tools.Scratch.deleteRecursively(new java.io.File(path))
-    }
-    sb.toString
-  }
-
-  /** Incremental IVF maintenance at scale — the daily-ingest shape:
-    * build+save the index on ~95% of the scaled corpus, then APPEND
-    * the held-out ~5% at the frozen centroid layout
-    * ([[graft.similarity.IvfIndex.append]]). The number that matters
-    * is the ratio: append must cost ~Δ's share of a rebuild, not a
-    * retrain — plus the layout proof that no pre-existing corpus
-    * file was rewritten (IvfIndexSpec proves probe equivalence at
-    * fixed centroids; this section prices it at scale).
-    */
-  def ivfAppendCheck(spark: SparkSession, dir: String): String = {
-    import graft.similarity.IvfIndex
-    Bench.scrub(spark)
-    val sb = new StringBuilder
-    sb ++= "\n## IVF incremental append at scale (cost ∝ Δ)\n\n"
-    val emb = Tables.embeddings(spark, dir)
-    val cut = emb.selectExpr("percentile(vec_id, 0.95)").collect()(0)
-      .getDouble(0).toLong
-    val base = emb.filter(col("vec_id") <= cut)
-    val delta = emb.filter(col("vec_id") > cut)
-    val (nBase, nDelta) = (base.count(), delta.count())
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_append")
-      .toAbsolutePath.toString
-    try {
-      val t0 = System.nanoTime()
-      IvfIndex.save(
-        IvfIndex.build(base, "vec_id", "embedding", nCentroids = 16, iters = 2), path)
-      val buildSec = (System.nanoTime() - t0) / 1e9
-      def corpusFiles(root: String): Map[String, Long] =
-        IvfIndex.corpusDirs(spark, root).flatMap { d =>
-          val local = graft.tools.Artifacts.localPath(d)
-          graft.tools.Scratch.listParquetFiles(local).map { case (f, sz) =>
-            // key by root-relative path so the check carries across
-            // the per-pass byte copies
-            (s"${local.split("/pool/").last}/$f", sz)
-          }
-        }.toMap
-      val before = corpusFiles(path)
-      // min-of-2, each pass appending to a fresh byte-identical COPY
-      // of the saved layout: append MUTATES the index, so re-timing
-      // in place would append twice, and a single-shot sub-second job
-      // is at the mercy of host interference (the r10 full-run
-      // artifact showed 0.6 s → 3.4 s on UNCHANGED append code; a
-      // solo re-run couldn't reproduce it). The copy cost stays
-      // outside the timed window; paths are relative, so the
-      // untouched-files check carries across copies.
-      val passes = (0 until 2).map { _ =>
-        val p2 = java.nio.file.Files.createTempDirectory("graft_ivf_append_pass")
-          .toAbsolutePath.toString
-        try {
-          graft.tools.Scratch.copyRecursively(path, p2)
-          val t1 = System.nanoTime()
-          IvfIndex.append(spark, p2, delta, "vec_id", "embedding")
-          val t = (System.nanoTime() - t1) / 1e9
-          val after = corpusFiles(p2)
-          (t, before.forall { case (f, sz) => after.get(f).contains(sz) },
-            (after.keySet -- before.keySet).size)
-        } finally graft.tools.Scratch.deleteRecursively(new java.io.File(p2))
-      }
-      val appendSec = passes.map(_._1).min
-      val untouched = passes.forall(_._2)
-      // generation-published append (the streaming-maintenance arm,
-      // r13): same frozen-centroid delta assignment, plus a manifest
-      // publish per call — what a per-trigger ingest loop pays while
-      // concurrent probes keep serving committed generations
-      val pubPasses = (0 until 2).map { _ =>
-        val p2 = java.nio.file.Files.createTempDirectory("graft_ivf_apub_pass")
-          .toAbsolutePath.toString
-        try {
-          graft.tools.Scratch.copyRecursively(path, p2)
-          val t1 = System.nanoTime()
-          IvfIndex.appendPublish(spark, p2, delta, "vec_id", "embedding")
-          (System.nanoTime() - t1) / 1e9
-        } finally graft.tools.Scratch.deleteRecursively(new java.io.File(p2))
-      }
-      val appendPubSec = pubPasses.min
-      sb ++= f"- base $nBase vectors: build+save $buildSec%.1f s; Δ $nDelta vectors (${100.0 * nDelta / (nBase + nDelta)}%.1f%%): append $appendSec%.1f s (${100.0 * appendSec / buildSec}%.1f%% of build, min of ${passes.length})\n"
-      sb ++= s"- pre-existing corpus files untouched by append: ${if (untouched) "OK" else "VIOLATED"}; new files: ${passes.head._3}\n"
-      sb ++= f"- generation-published append (per-trigger streaming maintenance, atomic for concurrent probes): $appendPubSec%.1f s (${100.0 * appendPubSec / buildSec}%.1f%% of build/rebuild, min of ${pubPasses.length})\n"
-      println(f"[scale] ivf append build=$buildSec%.1fs append=$appendSec%.1fs appendPublish=$appendPubSec%.1fs untouched=$untouched")
-    } finally {
-      graft.tools.Scratch.deleteRecursively(new java.io.File(path))
-    }
-    sb.toString
-  }
-
-  /** Semantic dedup serving index at scale — build-once /
-    * classify-many ([[graft.dedup.SemanticIndex]]): build+save on the
-    * 90% corpus slice, then price (a) the SERVE ratio — classify
-    * through the loaded artifact vs the in-plan
-    * [[graft.dedup.Dedup.semanticIncremental]] that re-trains the
-    * blocking AND re-blocks the corpus per call (the ratio is the
-    * artifact's reason to exist: at 100 TB the in-plan path re-scans
-    * the corpus every batch); (b) the APPEND ratio — Δ assigned
-    * through the frozen halves must cost ~Δ's share of a build, with
-    * the layout proof that no pre-existing corpus file was rewritten;
-    * (c) the drift observables (occupancy buckets, skewRatio) on the
-    * loaded index — the retrain trigger wired to the dedup blocking.
-    */
-  def semanticServeCheck(spark: SparkSession, dir: String): String = {
-    import graft.dedup.{Dedup, SemanticIndex}
-    Bench.scrub(spark)
-    val sb = new StringBuilder
-    sb ++= "\n## Semantic dedup serving index at scale (build-once / classify-many)\n\n"
-    val emb = Tables.embeddings(spark, dir)
-    val corpus = emb.filter(col("vec_id") % 10 =!= 0)
-      .select(col("vec_id"), col("embedding"))
-    val batch = emb.filter(col("vec_id") % 10 === 0)
-      .select(col("vec_id"), col("embedding"))
-    val path = java.nio.file.Files.createTempDirectory("graft_semidx_scale")
-      .toAbsolutePath.toString
-    try {
-      val t0 = System.nanoTime()
-      SemanticIndex.save(
-        SemanticIndex.build(corpus, "vec_id", "embedding", 0.35), path)
-      val buildSec = (System.nanoTime() - t0) / 1e9
-      // serve: load + classify the 10% batch (min of 2 — load is part
-      // of the serve price, a fresh JVM pays it once per job)
-      val serveSec = (0 until 2).map { _ =>
-        val t1 = System.nanoTime()
-        SemanticIndex.classify(
-          SemanticIndex.load(spark, path, "vec_id", "embedding"), batch).count()
-        (System.nanoTime() - t1) / 1e9
-      }.min
-      // the in-plan path the artifact replaces: retrain + re-block +
-      // classify, all per call (one pass — it IS the expensive arm)
-      val t2 = System.nanoTime()
-      Dedup.semanticIncremental(corpus, batch, "vec_id", "embedding", 0.35)
-        .count()
-      val inplanSec = (System.nanoTime() - t2) / 1e9
-      sb ++= f"- build+save (amortized once per corpus): $buildSec%.1f s\n"
-      sb ++= f"- classify 10%% batch through the loaded artifact: $serveSec%.2f s (min of 2) vs in-plan retrain+re-block+classify $inplanSec%.2f s → serve = ${100.0 * serveSec / inplanSec}%.0f%% of in-plan\n"
-      // append: frozen-structure Δ ingest on a byte-identical copy
-      // per pass (append mutates; the ivfAppendCheck protocol). Since
-      // the r14 manifest-pool migration the corpus lives in pool dirs
-      // referenced by the generation's corpus_dirs manifest, so the
-      // frozen-files assertion lists the WHOLE artifact root (corpus
-      // pools + reps + blocking — all frozen): every pre-append file
-      // must survive the append at its exact size (append only ADDS
-      // files — to a gen-exclusive dir or a fresh pool dir).
-      val before = graft.tools.Scratch.listParquetFiles(path)
-      val passes = (0 until 2).map { _ =>
-        val p2 = java.nio.file.Files.createTempDirectory("graft_semidx_append")
-          .toAbsolutePath.toString
-        try {
-          graft.tools.Scratch.copyRecursively(path, p2)
-          val t3 = System.nanoTime()
-          SemanticIndex.append(spark, p2, batch, "vec_id", "embedding")
-          val t = (System.nanoTime() - t3) / 1e9
-          val after = graft.tools.Scratch.listParquetFiles(p2)
-          (t, before.forall { case (f, sz) => after.get(f).contains(sz) })
-        } finally graft.tools.Scratch.deleteRecursively(new java.io.File(p2))
-      }
-      sb ++= f"- append the 10%% Δ at the frozen halves: ${passes.map(_._1).min}%.2f s (${100.0 * passes.map(_._1).min / buildSec}%.0f%% of build, min of ${passes.length}); pre-existing corpus files untouched: ${if (passes.forall(_._2)) "OK" else "VIOLATED"}\n"
-      val idx = SemanticIndex.load(spark, path, "vec_id", "embedding")
-      val nBuckets = SemanticIndex.occupancy(idx).count()
-      val ratio = SemanticIndex.skewRatio(idx)
-      sb ++= f"- drift observables on the loaded index: $nBuckets candidate buckets, skewRatio (maxBucket/blockSize) $ratio%.2f — <= ~1 is at design size; retrain past the 2-4 band (the IvfIndex cadence)\n"
-      println(f"[scale] semidx build=$buildSec%.1fs serve=$serveSec%.2fs inplan=$inplanSec%.2fs skew=$ratio%.2f")
-    } finally {
-      graft.tools.Scratch.deleteRecursively(new java.io.File(path))
-    }
-    sb.toString
-  }
-
-  /** Media near-dedup GROWTH diagnostic (mode=mediadiag): per
-    * modality, the clip count, verified-edge count and survivor count
-    * at the rehearsal dir — the numbers that attribute a media
-    * x-factor to output-structure growth (denser near-1 cosine
-    * packing at fixed τ ⇒ more TRUE duplicate pairs per block) vs a
-    * plan defect. Uses the same dispatch/cap as the queries.
-    */
-  def mediaDiag(spark: SparkSession, dir: String): String = {
-    import graft.multimodal.Multimodal
-    val sb = new StringBuilder
-    sb ++= "\n## Media near-dedup growth diagnostic\n\n"
-    sb ++= "| kind | clips | verified edges | survivors |\n|---|---|---|---|\n"
-    Seq("video", "image", "audio").foreach { kind =>
-      val tau = graft.queries.Curation.MediaTaus(kind)
-      val feats = Multimodal.extractFeatures(spark,
-        Multimodal.asMedia(Tables.documentsParallel(spark, dir))
-          .filter(col("kind") === kind))
-        .toDF().select(col("doc_id"), col("feature")).cache()
-      def timed[T](f: => T): (T, Double) = {
-        val t0 = System.nanoTime(); val r = f
-        (r, (System.nanoTime() - t0) / 1e9)
-      }
-      val (n, tDecode) = timed(feats.count())
-      // the SAME dispatch the declared query takes (flat below the
-      // threshold, hier above) — profiled stage by stage
-      val pairs = graft.queries.Curation.mediaPairs(feats, n, tau)
-      val (edges, tPairs) = timed(pairs.count())
-      val (survivors, tFull) = timed(
-        graft.SparkEntry.queries(s"q_${kind}_neardup")(spark, dir).count())
-      sb ++= s"| $kind | $n | $edges | $survivors |\n"
-      println(f"[scale] mediadiag $kind: clips=$n edges=$edges survivors=$survivors " +
-        f"decode=$tDecode%.1fs pairs=$tPairs%.1fs full=$tFull%.1fs")
-      if (kind == "audio") {
-        // τ-sweep: where do the audio edges live on the r12 four-band
-        // features? 0.999+ is the near-identity (structural) band; the
-        // operating τ catches the statistical tail, the image/video
-        // profile. Recorded so edge growth at 20× is attributable to
-        // corpus densification, not feature crowding (the r11 failure
-        // mode: 468,704 edges at τ=0.99999 on 8-dim amplitude means).
-        val sweep = Seq(0.99, 0.999).map { t =>
-          val e = graft.queries.Curation.mediaPairs(feats, n, t).count()
-          s"τ=$t: $e"
-        }.mkString("; ")
-        sb ++= s"\n- audio τ-sweep (edges at operating τ=$tau above): $sweep\n\n"
-        println(s"[scale] mediadiag audio sweep: $sweep")
-      }
-      feats.unpersist()
-      Bench.scrub(spark)
-    }
-    sb.toString
-  }
-
-  /** The RETRAIN-TRIGGER loop, exercised end to end (VERDICT r10
-    * "what's missing" #3): `IvfIndex.skewRatio` existed as an
-    * observable with specs, but no rehearsal ever drove the
-    * documented production cadence. This section does the full cycle
-    * on the scaled corpus:
-    *
-    *  1. build+save; record skewRatio, probe cost, recall@10 (IVF
-    *     nProbe=4 vs exact brute force over the index's own corpus);
-    *  2. append distribution-SHIFTED batches (x → 0.2x + 0.8 — the
-    *     whole Δ crowds the all-positive orthant, i.e. a real
-    *     domain-mix change) until skewRatio crosses 3;
-    *  3. record the degraded probe cost/recall AT drifted queries —
-    *     frozen centroids describe the drifted mass with one or two
-    *     cells, so nProbe=4 both reads a bloated cell (cost) and
-    *     misses true neighbors that straddle it (recall);
-    *  4. full rebuild (retrain) on the appended corpus; record the
-    *     restored numbers.
-    *
-    * Probe set: two base vectors + two drifted vectors — the drifted
-    * workload is the one the frozen index serves worst, and the one a
-    * production mix shift actually sends.
-    */
-  def ivfDriftCheck(spark: SparkSession, dir: String): String = {
-    import graft.similarity.IvfIndex
-    import graft.functions.VectorOps
-    Bench.scrub(spark)
-    val sb = new StringBuilder
-    sb ++= "\n## IVF drift → retrain trigger → rebuild (skewRatio cadence)\n\n"
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"))
-    val maxId = emb.agg(max(col("vec_id"))).collect()(0).getLong(0)
-    // the drifted generator: ids beyond the corpus, vectors pulled
-    // toward the all-positive corner — deterministic, reproducible
-    def drifted(batch: Int, frac: Double): org.apache.spark.sql.DataFrame =
-      emb.filter(col("vec_id") % math.round(1 / frac).max(1) === 0)
-        .select((col("vec_id") + lit((batch + 1) * (maxId + 1))).as("vec_id"),
-          transform(col("embedding"),
-            x => x * lit(0.2f) + lit(0.8f)).as("embedding"))
-    val nCells = 64
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_drift")
-      .toAbsolutePath.toString
-    try {
-      IvfIndex.save(
-        IvfIndex.build(emb, "vec_id", "embedding", nCentroids = nCells, iters = 2),
-        path)
-      // probe vectors: 2 from the base distribution, 2 from the drift —
-      // the drifted workload is what a production mix shift sends
-      val baseQs = emb.filter(col("vec_id").isin(0L, 1L))
-        .select(col("embedding").cast("array<float>"))
-        .collect().map(_.getSeq[Float](0))
-      val driftQs = drifted(0, 0.01).limit(2)
-        .select(col("embedding").cast("array<float>"))
-        .collect().map(_.getSeq[Float](0))
-      // per query group: (recall@10 vs exact brute over the index's
-      // own corpus, probed-cell share of the corpus — the per-query
-      // COST at scale, where seconds at this n are job overhead)
-      def measure(p: String): (Double, Seq[(Double, Double)]) = {
-        val idx = IvfIndex.load(spark, p, "vec_id", "embedding")
-        val corpus = idx.corpus.select(col("vec_id"), col("embedding")).cache()
-        corpus.count()
-        val cos = VectorOps.cosineFor(corpus, "embedding")
-        val groups = Seq(baseQs, driftQs).map { qs =>
-          val (recalls, scans) = qs.map { q =>
-            val exact = corpus
-              .select(col("vec_id"), cos(col("embedding"), typedlit(q)).as("c"))
-              .orderBy(col("c").desc, col("vec_id")).limit(10)
-              .collect().map(_.getLong(0)).toSet
-            val got = IvfIndex.topK(idx, q, k = 10, nProbe = 4)
-              .collect().map(_.getLong(0)).toSet
-            ((exact intersect got).size / 10.0,
-              IvfIndex.probedFraction(idx, q, nProbe = 4))
-          }.unzip
-          (recalls.sum / recalls.length, scans.sum / scans.length)
-        }
-        val skew = IvfIndex.skewRatio(idx)
-        corpus.unpersist()
-        (skew, groups)
-      }
-      val (s0, g0) = measure(path)
-      sb ++= "| stage | skewRatio | base recall@10 | base scanned | drift recall@10 | drift scanned |\n|---|---|---|---|---|---|\n"
-      def row(label: String, s: Double, g: Seq[(Double, Double)]): String =
-        f"| $label | $s%.2f | ${g(0)._1}%.2f | ${100 * g(0)._2}%.1f%% | ${g(1)._1}%.2f | ${100 * g(1)._2}%.1f%% |\n"
-      sb ++= row(s"built ($nCells cells, balanced; ideal scan ${100.0 * 4 / nCells}%)", s0, g0)
-      var batches = 0
-      var skew = s0
-      while (skew < 3.0 && batches < 6) {
-        IvfIndex.append(spark, path,
-          drifted(batches, 0.25), "vec_id", "embedding")
-        batches += 1
-        skew = IvfIndex.skewRatio(
-          IvfIndex.load(spark, path, "vec_id", "embedding"))
-        println(f"[scale] ivf drift: after append $batches skewRatio=$skew%.2f")
-      }
-      val (s1, g1) = measure(path)
-      sb ++= row(s"after $batches drifted appends (trigger: skew > 3)", s1, g1)
-      // retrain: full rebuild on the appended corpus, fresh layout
-      val rebuilt = path + "_rebuilt"
-      try {
-        val corpusNow = IvfIndex.corpusDirs(spark, path)
-          .map(spark.read.parquet(_)).reduce(_ unionAll _)
-          .select(col("vec_id"), col("embedding"))
-        IvfIndex.save(IvfIndex.build(corpusNow, "vec_id", "embedding",
-          nCentroids = nCells, iters = 2), rebuilt)
-        val (s2, g2) = measure(rebuilt)
-        sb ++= row("after full rebuild (retrain)", s2, g2)
-        println(f"[scale] ivf drift: built skew=$s0%.2f driftScan=${g0(1)._2}%.3f; " +
-          f"drifted skew=$s1%.2f driftScan=${g1(1)._2}%.3f; " +
-          f"rebuilt skew=$s2%.2f driftScan=${g2(1)._2}%.3f")
-      } finally graft.tools.Scratch.deleteRecursively(new java.io.File(rebuilt))
-      sb ++= "\nReading: append-only maintenance holds while skewRatio holds. The\n" +
-        "drifted appends land in few frozen cells, skewRatio crosses the 2-4\n" +
-        "retrain band, and a drifted query's probe now reads the bloated\n" +
-        "cell — its scanned share of the corpus is the degradation (any\n" +
-        "recall it shows is bought by paying that share: the frozen layout\n" +
-        "has stopped pruning for the drifted workload). The rebuild\n" +
-        "re-describes the new mixture with balanced cells: scanned share\n" +
-        "returns to ~nProbe/nCells and recall returns to the\n" +
-        "nProbe-appropriate operating point — raise nProbe to buy recall\n" +
-        "EXPLICITLY instead of through skew. That is the documented\n" +
-        "cadence, measured end to end.\n"
-    } finally graft.tools.Scratch.deleteRecursively(new java.io.File(path))
-    sb.toString
-  }
-
-  /** PQ serving path at scale — the memory-compression twin of
-    * [[ivfServeCheck]]: codebook training + corpus encoding happen
-    * ONCE (the codes table is the serving artifact, M ints per vector
-    * instead of dim floats), then each query is an ADC scan over the
-    * codes + a C-row exact re-rank. The per-call `q_sim_pq` body
-    * retrains every call (by design, for the recall-gated oracle);
-    * this is the number a serving user pays.
-    */
-  def pqServeCheck(spark: SparkSession, dir: String): String = {
-    import graft.similarity.PqIndex
-    Bench.scrub(spark) // same clean-session argument as ivfServeCheck
-    val sb = new StringBuilder
-    sb ++= "\n## PQ serving path at scale (encode-once / ADC probe-many)\n\n"
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding")).cache()
-    val path = java.nio.file.Files.createTempDirectory("graft_pq_scale")
-      .toAbsolutePath.toString
-    try {
-      val t0 = System.nanoTime()
-      val cb = PqIndex.train(emb, "vec_id", "embedding", m = 8, k = 32, iters = 2)
-      PqIndex.encode(cb, emb, "vec_id", "embedding")
-        .write.mode("overwrite").parquet(s"$path/codes")
-      val buildSec = (System.nanoTime() - t0) / 1e9
-      val n = emb.count()
-      emb.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<float>"))
-        .limit(1).collect().headOption.map(_.getSeq[Float](0)) match {
-        case None =>
-          sb ++= f"- train+encode (amortized once per corpus): $buildSec%.1f s\n"
-          sb ++= "- probe: SKIPPED — no query vector (vec_id 0 absent from scaled corpus)\n"
-        case Some(q) =>
-          val codes = spark.read.parquet(s"$path/codes")
-          val cBudget = math.max(200L, n / 10).toInt
-          val probes = (0 until 3).map { _ =>
-            val p0 = System.nanoTime()
-            PqIndex.topK(cb, codes, emb, "vec_id", "embedding", q,
-              k = 10, c = cBudget).count()
-            (System.nanoTime() - p0) / 1e9
-          }
-          sb ++= f"- train+encode (amortized once per corpus, $n vectors → 8 codes each): $buildSec%.1f s\n"
-          sb ++= f"- ADC probe topK(k=10, C=$cBudget) over the stored codes + exact re-rank: ${probes.min}%.2f s (min of 3)\n"
-          println(f"[scale] pq build=$buildSec%.1fs probe=${probes.min}%.2fs")
-      }
-    } finally {
-      emb.unpersist()
-      graft.tools.Scratch.deleteRecursively(new java.io.File(path))
-    }
-    sb.toString
-  }
-
-  /** Long-chain connected-components probe: a path graph is HashMin's
-    * worst case (rounds = diameter — infeasible past a few dozen hops)
-    * and the case [[graft.dedup.ConnectedComponents.componentsAlternating]]
-    * exists for (rounds = O(log n)). Purely synthetic via range() —
-    * the blocking graphs in the main table are star-ish and never
-    * exercise this regime.
-    */
-  def chainCcCheck(spark: SparkSession, n: Long): String = {
-    import graft.dedup.ConnectedComponents
-    Bench.scrub(spark)
-    val sb = new StringBuilder
-    sb ++= "\n## Long-chain connected components (alternating star ops)\n\n"
-    val edges = spark.range(n - 1)
-      .select(col("id").as("a"), (col("id") + 1).as("b"))
-    val t0 = System.nanoTime()
-    val labels = ConnectedComponents.componentsAlternating(edges, maxIter = 40)
-    val wrong = labels.filter(col("component") =!= 0).count()
-    val total = labels.count()
-    val secs = (System.nanoTime() - t0) / 1e9
-    sb ++= f"- path graph, $n%,d nodes (diameter ${n - 1}%,d): ${total}%,d labeled, $wrong mislabeled, $secs%.1f s\n"
-    sb ++= s"- HashMin on the same graph would need ${n - 1} rounds (one per hop) — " +
-      "not runnable; the alternating variant converged within its 40-round cap\n"
-    println(f"[scale] chaincc n=$n wrong=$wrong secs=$secs%.1f")
-    sb.toString
-  }
-
-  /** Trained-model economics at 20× (mode=qualitytrain, VERDICT r11
-    * next-round #8): q_quality_trained's GD is `iters` full passes
-    * over the CACHED feature frame — linear per pass with a 4-value
-    * driver state between passes, the Lloyd-round cost shape. This
-    * section measures the train/score split on the scaled corpus and
-    * documents the 100 TB escape hatch: full-batch decimal-exact GD
-    * needs `iters` corpus passes by definition; when a pass stops
-    * fitting the ingest window, train on a deterministic hash-sample
-    * (`xxhash64(id) % K == 0` — the trainer is unchanged, only its
-    * input shrinks; the learned 4-weight model is statistically
-    * identical long before the sample stops fitting in one executor
-    * wave) and SCORE the full corpus, which is one narrow pass.
-    */
-  def qualityTrainCheck(spark: SparkSession, dir: String): String = {
-    import graft.ml.QualityModel
-    Bench.scrub(spark)
-    val sb = new StringBuilder
-    sb ++= "\n## Trained quality model at 20× (train/score split)\n\n"
-    val docs = Tables.documents(spark, dir)
-    val n = docs.count()
-    var t0 = System.nanoTime()
-    val w = QualityModel.train(docs)
-    val tTrain = (System.nanoTime() - t0) / 1e9
-    t0 = System.nanoTime()
-    val kept = QualityModel.score(docs, w).filter(col("keep")).count()
-    val tScore = (System.nanoTime() - t0) / 1e9
-    // the escape hatch, measured: train on the 5% hash sample, score all
-    t0 = System.nanoTime()
-    val wS = QualityModel.train(docs.filter(xxhash64(col("doc_id")) % 20 === 0))
-    val tTrainS = (System.nanoTime() - t0) / 1e9
-    val keptS = QualityModel.score(docs, wS).filter(col("keep")).count()
-    val agree = 1.0 - math.abs(keptS - kept).toDouble / math.max(kept, 1L)
-    sb ++= f"- corpus: $n%,d docs; full-batch train (${QualityModel.DefaultIters} passes): $tTrain%.1f s; corpus-wide score: $tScore%.1f s\n"
-    sb ++= f"- sampled-GD escape hatch (5%% hash sample): train $tTrainS%.1f s; keep-set size agreement with the full-batch model: ${agree * 100}%.1f%%\n"
-    sb ++= "- 100 TB shape: score is ONE narrow pass (production cost); training cost is capped by the sample, not the corpus\n"
-    println(f"[scale] qualitytrain n=$n train=$tTrain%.1fs score=$tScore%.1fs sampled=$tTrainS%.1fs agree=${agree * 100}%.1f%%")
-    sb.toString
-  }
-
-  /** Graph-index economics at scale (mode=graphbuild, VERDICT r13
-    * next-round #1/#3): price the NN-DESCENT default build against
-    * the exact all-pairs contrast arm at base and at K×, sample
-    * serving recall on the scaled build through the batched beam
-    * walk, and price the NSW add-node insert against the full
-    * rebuild it replaces. The exact arm's x-factor is EXPECTED
-    * quadratic — that is the point of the contrast; the default
-    * build must stay near-linear (a descent round proposes only
-    * neighbors-of-neighbors: ≤ n·maxList²/2 pairs, never n², and
-    * nothing broadcasts the corpus or sorts it through one task —
-    * GraphBuildPlanSpec pins the plan shape, this section prices it).
-    */
-  def graphBuildCheck(spark: SparkSession, src: String, dir: String): String = {
-    import graft.similarity.GraphIndex
-    Bench.scrub(spark)
-    val sb = new StringBuilder
-    sb ++= "\n## Graph-index build at scale (NN-descent default vs exact contrast arm)\n\n"
-    val base = Tables.embeddings(spark, src)
-      .select(col("vec_id"), col("embedding")).cache()
-    val scaled = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding")).cache()
-    try {
-      val nB = base.count(); val nS = scaled.count()
-      def timed(label: String)(f: () => DataFrame): (Double, DataFrame) = {
-        println(s"[scale] graphbuild: $label start")
-        val t0 = System.nanoTime()
-        val adj = f().localCheckpoint()
-        adj.count()
-        val t = (System.nanoTime() - t0) / 1e9
-        println(f"[scale] graphbuild: $label done in $t%.1f s")
-        (t, adj)
-      }
-      // exactThreshold = 0 forces the DESCENT branch: since r16 the
-      // default build() dispatches to buildExact below 65,536 rows
-      // (VERDICT r15 next-round #3 — these very rows are the measured
-      // crossover evidence: exact is ~100× cheaper at n=2,000 and
-      // still ~4× cheaper at n=40,000), so pricing the descent arm
-      // requires forcing it
-      val (ndB, _) = timed("nd-base")(() => GraphIndex.build(base, "vec_id",
-        "embedding", exactThreshold = 0L))
-      val (ndS, adjNd) = timed("nd-scaled")(() => GraphIndex.build(scaled, "vec_id",
-        "embedding", exactThreshold = 0L))
-      val (exB, _) = timed("exact-base")(() => GraphIndex.buildExact(base, "vec_id", "embedding"))
-      val (exS, adjEx) = timed("exact-scaled")(() => GraphIndex.buildExact(scaled, "vec_id", "embedding"))
-      // the DISPATCHED default — what a production build() call pays at
-      // each size (routes to exact at both of these sizes; the descent
-      // branch takes over past the 65,536-row threshold)
-      val (dpB, _) = timed("dispatched-base")(() => GraphIndex.build(base, "vec_id", "embedding"))
-      val k = nS.toDouble / nB
-      sb ++= f"| build | base s (n=$nB%,d) | scale s (n=$nS%,d, ${k}%.0f×) | x |\n|---|---|---|---|\n"
-      sb ++= f"| NN-descent (forced: the >65,536-row branch) | $ndB%.1f | $ndS%.1f | ${ndS / ndB}%.1f |\n"
-      sb ++= f"| exact all-pairs (contrast arm) | $exB%.1f | $exS%.1f | ${exS / exB}%.1f |\n"
-      sb ++= f"| build() dispatched default (r16: routes to exact at both sizes) | $dpB%.1f | $exS%.1f | ${exS / dpB}%.1f |\n"
-      println(f"[scale] graphbuild nd=$ndB%.1f/$ndS%.1fs x=${ndS / ndB}%.1f " +
-        f"exact=$exB%.1f/$exS%.1fs x=${exS / exB}%.1f dispatchBase=$dpB%.1fs")
-      // bounded recall sample: 32 scaled-corpus queries through the
-      // batched beam walk (probeJoin — the serving face) vs the exact
-      // top-10; the descent build must not buy its wall with recall.
-      // Budgets: the q_sim_graph operating point (n/5) plus a 10%
-      // budget — the fixture's sign-flipped replica vectors are
-      // near-random (the worst case for ANY locality structure, the
-      // annServeCheck caveat), so recall here is bought by scan share;
-      // real trained embeddings cluster and sit far above this curve.
-      val qids = scaled.filter(col("vec_id") % 20 === 0)
-        .select(col("vec_id")).orderBy(col("vec_id")).limit(32)
-      val probes = scaled.join(broadcast(qids), Seq("vec_id"))
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        .localCheckpoint()
-      val exact = scaled.select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-        .crossJoin(broadcast(probes))
-        .withColumn("cos", graft.functions.VectorOps.cosine(col("qvec"), col("cvec")))
-        .filter(col("cos").isNotNull)
-        .groupBy(col("qid"))
-        .agg(graft.functions.TopKAgg.topK(10)(col("cos"), col("cid")).as("top"))
-        .select(col("qid"), explode(col("top")).as("hit"))
-        .select(col("qid"), col("hit._2").as("cid"))
-        .localCheckpoint()
-      val nQ = exact.select(col("qid")).distinct().count()
-      def recallOf(adj: DataFrame, budget: Int): (Double, Double) = {
-        val t0 = System.nanoTime()
-        val got = GraphIndex.probeJoin(adj, scaled, "vec_id", "embedding",
-          probes, "qid", "qvec", k = 10, budget = budget).localCheckpoint()
-        val t = (System.nanoTime() - t0) / 1e9
-        val hits = got.select(col("query_id").as("qid"), col("vec_id").as("cid"))
-          .join(exact, Seq("qid", "cid")).count()
-        (hits.toDouble / (nQ * 10.0), t)
-      }
-      val opBudget = math.max(200L, nS / 5).toInt
-      def pct(budget: Long): String = f"(${budget * 100.0 / nS}%.0f%%)"
-      sb ++= "\n| build | budget | probeJoin s (32-query batch) | recall@10 |\n|---|---|---|---|\n"
-      var exactArmRecall = Double.NaN // measured, interpolated into the prose (ADVICE r14)
-      var defaultRecall = Double.NaN
-      for ((label, adj) <- Seq("NN-descent" -> adjNd, "exact arm" -> adjEx);
-           budget <- Seq(nS / 10, opBudget.toLong)) {
-        val (r, t) = recallOf(adj, budget.toInt)
-        if (label == "exact arm" && budget == opBudget.toLong) exactArmRecall = r
-        if (label == "NN-descent" && budget == opBudget.toLong) defaultRecall = r
-        sb ++= f"| $label | $budget ${pct(budget)} | $t%.1f | $r%.2f |\n"
-        println(f"[scale] graphserve $label budget=$budget t=$t%.1fs recall=$r%.2f")
-      }
-      // the recall KNOB, demonstrated: extra descent rounds (and a
-      // wider internal list) buy graph quality explicitly — the
-      // iters/maxList analogue of IVF's nProbe. Each extra arm builds
-      // at scale and probes at the operating budget. Arm tokens are
-      // validated up front: a malformed SPARK_GRAFT_GRAPH_ARMS must
-      // name itself, not throw an opaque MatchError (ADVICE r14).
-      val armsEnv = "SPARK_GRAFT_GRAPH_ARMS"
-      // the arm builds below pass GraphIndex.build's default m (= 16),
-      // so that is the bound validated here; an arm paired with a
-      // non-default m would need its own bound (ADVICE r15 #4 — the
-      // error message now states the assumption instead of implying
-      // m is a constant)
-      val armM = 16
-      val arms = sys.env.getOrElse(armsEnv, "12x96")
-        .split(",").map(_.trim).filter(_.nonEmpty).toSeq.map { arm =>
-          arm.split("x") match {
-            case Array(it, ml) if it.forall(_.isDigit) && ml.forall(_.isDigit)
-                && ml.toInt >= armM =>
-              (it.toInt, ml.toInt)
-            case _ => throw new IllegalArgumentException(
-              s"$armsEnv: bad arm token '$arm' — expected ITERSxMAXLIST " +
-                s"with maxList >= $armM (these arm builds use " +
-                s"GraphIndex.build's default m = $armM; a non-default m " +
-                "needs maxList >= that m), e.g. 8x64")
-          }
-        }
-      for ((it, ml) <- arms) {
-        val (tA, adjA) = timed(s"arm-${it}x$ml")(() =>
-          GraphIndex.build(scaled, "vec_id", "embedding", iters = it,
-            maxList = ml, exactThreshold = 0L))
-        val (r, tP) = recallOf(adjA, opBudget)
-        sb ++= f"| NN-descent iters=$it maxList=$ml ($tA%.0f s build) | $opBudget ${pct(opBudget)} | $tP%.1f | $r%.2f |\n"
-        println(f"[scale] graphserve iters=$it maxList=$ml build=$tA%.1fs t=$tP%.1fs recall=$r%.2f")
-      }
-      sb ++= f"""
-Reading: the fixture's sign-flipped replica vectors are
-near-random — the worst case for ANY locality structure (the
-annServeCheck caveat applies: IVF buys its recall on the same data
-with scan share) — so approximate-graph quality at this scale is
-bought explicitly with descent rounds / internal list width
-(the rows above), exactly as IVF buys recall with nProbe; real
-trained embeddings cluster and sit far above this curve at the
-same settings. The exact-arm rows isolate the WALK's quality
-($exactArmRecall%.2f on the true-kNN graph at the operating budget,
-vs $defaultRecall%.2f for the default build on the same walk): the
-walk is sound, any remaining gap is graph construction quality,
-priced per round at ~linear cost vs the exact build's quadratic
-wall.
-"""
-      // insert vs rebuild: hold out ~2.5% as the ingest Δ, build+save
-      // on the rest, then publish the Δ through the NSW add-node walk.
-      // Pre-existing pool files must be untouched (the manifest-pool
-      // contract) and the merged artifact must still serve Δ queries.
-      val delta = scaled.filter(col("vec_id") % 40 === 7).localCheckpoint()
-      val rest = scaled.filter(col("vec_id") % 40 =!= 7)
-        .localCheckpoint()
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_graph_scale").toAbsolutePath.toString
-      try {
-        GraphIndex.save(GraphIndex.build(rest, "vec_id", "embedding"), root)
-        val frozen = graft.tools.Scratch.listParquetFiles(root)
-        val t0 = System.nanoTime()
-        GraphIndex.insertPublish(spark, root, rest, delta, "vec_id", "embedding")
-        val tIns = (System.nanoTime() - t0) / 1e9
-        val after = graft.tools.Scratch.listParquetFiles(root)
-        val untouched = frozen.forall { case (f, sz) => after.get(f).contains(sz) }
-        val dN = delta.count()
-        // post-insert serving: 32 Δ vectors as queries against the
-        // merged artifact; exact truth over the FULL corpus
-        val dqids = delta.select(col("vec_id")).orderBy(col("vec_id")).limit(32)
-        val dprobes = scaled.join(broadcast(dqids), Seq("vec_id"))
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-          .localCheckpoint()
-        val dexact = scaled.select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-          .crossJoin(broadcast(dprobes))
-          .withColumn("cos", graft.functions.VectorOps.cosine(col("qvec"), col("cvec")))
-          .filter(col("cos").isNotNull)
-          .groupBy(col("qid"))
-          .agg(graft.functions.TopKAgg.topK(10)(col("cos"), col("cid")).as("top"))
-          .select(col("qid"), explode(col("top")).as("hit"))
-          .select(col("qid"), col("hit._2").as("cid"))
-          .localCheckpoint()
-        val dNq = dexact.select(col("qid")).distinct().count()
-        val adjIns = GraphIndex.load(spark, root).localCheckpoint()
-        def dRecallOf(adj: DataFrame): Double = {
-          val hits = GraphIndex.probeJoin(adj, scaled, "vec_id", "embedding",
-              dprobes, "qid", "qvec", k = 10, budget = opBudget)
-            .select(col("query_id").as("qid"), col("vec_id").as("cid"))
-            .join(dexact, Seq("qid", "cid")).count()
-          hits.toDouble / (dNq * 10.0)
-        }
-        val dRecall = dRecallOf(adjIns)
-        // the comparison point: the same Δ-queries through a FULL
-        // rebuild over rest ∪ Δ (adjNd, built above) — the insert's
-        // recall gap vs its 10-40× cost saving is the contract
-        val dRecallRebuild = dRecallOf(adjNd)
-        sb ++= f"\n- insert $dN%,d vectors (${dN * 100.0 / nS}%.1f%% Δ) via insertPublish: $tIns%.1f s vs full NN-descent rebuild $ndS%.1f s (${100 * tIns / ndS}%.0f%% of rebuild); pre-existing pool files untouched: ${if (untouched) "OK" else "MUTATED"}\n"
-        sb ++= f"- post-insert serving recall@10 on $dNq Δ-queries (budget $opBudget): insert $dRecall%.2f vs full rebuild $dRecallRebuild%.2f on the same queries\n"
-        sb ++= "- reading: insert is priced per Δ-batch (one neighbor-search batch + one pool-dir publish); its cost term at 100 TB is the Δ's beam walks, not the corpus — rebuild stays the RECALL refresh (inserts add edges but never re-prune, so degree skew `GraphIndex.skewRatio` is the retrain cadence, the IvfIndex contract)\n"
-        println(f"[scale] graphinsert d=$dN t=$tIns%.1fs rebuild=$ndS%.1fs " +
-          f"untouched=$untouched recall=$dRecall%.2f rebuildRecall=$dRecallRebuild%.2f")
-        require(untouched, "graph insertPublish mutated frozen pool files")
-      } finally graft.tools.Scratch.deleteRecursively(new java.io.File(root))
-    } finally { base.unpersist(); scaled.unpersist(); () }
-    sb.toString
-  }
-
-  /** Graph drift → retrain trigger → rebuild (mode=graphdrift,
-    * VERDICT r14 next-round #8 — the ivfDriftCheck analogue for the
-    * graph engine): [[graft.similarity.GraphIndex.insertPublish]]
-    * batches land until degree `skewRatio` crosses the cadence band,
-    * serve recall/latency degradation is MEASURED (not documented),
-    * and a full rebuild restores it — the retrain cadence the
-    * insertPublish scaladoc promises, made a measured procedure. Uses
-    * the vector-carrying artifact so corpus ∪ Δ composes through the
-    * artifact itself, exactly the streaming Kind.Graph shape.
-    */
-  def graphDriftCheck(spark: SparkSession, dir: String): String = {
-    import graft.similarity.GraphIndex
-    Bench.scrub(spark)
-    val sb = new StringBuilder
-    sb ++= "\n## Graph drift → retrain trigger → rebuild (degree-skew cadence)\n\n"
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding")).cache()
-    try {
-      val maxId = emb.agg(max(col("vec_id"))).collect()(0).getLong(0)
-      // drifted Δ batches: ids beyond the corpus, vectors pulled
-      // toward the all-positive corner — inserts with NO prune grow
-      // the hub nodes every Δ walks to. Milder pull than the IVF
-      // check's 0.2/0.8: a 0.2 blend collapses the drift cluster into
-      // thousands of near-ties whose exact top-10 NO index recovers
-      // at a bounded budget (tie-broken by float dust — a fixture
-      // artifact, not an engine property); 0.6/0.4 drifts the
-      // distribution while keeping neighborhoods distinguishable.
-      def drifted(batch: Int, frac: Double): DataFrame =
-        emb.filter(col("vec_id") % math.round(1 / frac).max(1) === 0)
-          .select((col("vec_id") + lit((batch + 1) * (maxId + 1))).as("vec_id"),
-            transform(col("embedding"),
-              x => x * lit(0.6f) + lit(0.4f)).as("embedding"))
-      val path = java.nio.file.Files.createTempDirectory("graft_graph_drift")
-        .toAbsolutePath.toString
-      try {
-        val (adj0, stats0) = GraphIndex.buildWithStats(emb, "vec_id", "embedding")
-        GraphIndex.saveWithVectors(adj0, emb, "vec_id", "embedding", path,
-          stats0)
-        // probes: 8 from the BASE id range + 8 from the newest ids
-        // (drifted after inserts land) — reported separately, the
-        // ivfDriftCheck grouping: rebuild must restore the base
-        // workload; the drift group measures the shifted workload
-        case class M(skew: Double, baseRecall: Double, driftRecall: Double,
-          wall: Double, conv: Double)
-        // `cap` selects the serve view: the DEFAULT load cap (the r16
-        // production read) or 0 = the raw adjacency (the r15 uncapped
-        // serve — kept as the contrast arm so the cap's effect is a
-        // measured row, not a claim)
-        def measure(p: String,
-            cap: Int = GraphIndex.DefaultServeDegreeCap): M = {
-          val corpus = GraphIndex.loadVectors(spark, p).get
-            .toDF("vec_id", "embedding").localCheckpoint()
-          val n = corpus.count()
-          val baseQ = corpus.filter(col("vec_id") <= maxId)
-            .orderBy(col("vec_id").asc).limit(8)
-          val driftQ = corpus.orderBy(col("vec_id").desc).limit(8)
-          // skew is the DRIFT OBSERVABLE — always read raw degree (the
-          // capped view would saturate at the cap and mask the trigger)
-          val adjRaw = GraphIndex.load(spark, p, maxDegree = 0)
-            .localCheckpoint()
-          val skew = GraphIndex.skewRatio(adjRaw)
-          val adj =
-            if (cap <= 0) adjRaw
-            else GraphIndex.capDegree(adjRaw, cap).localCheckpoint()
-          def recallOf(qs: DataFrame): (Double, Double) = {
-            val probes = qs
-              .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-              .localCheckpoint()
-            val nQ = probes.count()
-            val exact = corpus
-              .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-              .crossJoin(broadcast(probes))
-              .withColumn("cos",
-                graft.functions.VectorOps.cosine(col("qvec"), col("cvec")))
-              .filter(col("cos").isNotNull)
-              .groupBy(col("qid"))
-              .agg(graft.functions.TopKAgg.topK(10)(col("cos"), col("cid")).as("t"))
-              .select(col("qid"), explode(col("t")).as("h"))
-              .select(col("qid"), col("h._2").as("cid"))
-              .localCheckpoint()
-            val t0 = System.nanoTime()
-            val got = GraphIndex.probeJoin(adj, corpus, "vec_id", "embedding",
-              probes, "qid", "qvec", k = 10,
-              budget = math.max(200L, n / 5).toInt).localCheckpoint()
-            val wall = (System.nanoTime() - t0) / 1e9
-            val hits = got.select(col("query_id").as("qid"), col("vec_id").as("cid"))
-              .join(exact, Seq("qid", "cid")).count()
-            (hits.toDouble / (nQ * 10.0), wall)
-          }
-          val (bR, bW) = recallOf(baseQ)
-          val (dR, dW) = recallOf(driftQ)
-          M(skew, bR, dR, bW + dW,
-            GraphIndex.convergence(spark, p).getOrElse(Double.NaN))
-        }
-        sb ++= "| stage | degree skewRatio | base recall@10 | drift recall@10 | probeJoin s (16 queries) | build convergence (fresh frac) |\n|---|---|---|---|---|---|\n"
-        def row(label: String, m: M): String =
-          f"| $label | ${m.skew}%.2f | ${m.baseRecall}%.2f | ${m.driftRecall}%.2f | ${m.wall}%.1f | ${m.conv}%.3f |\n"
-        val m0 = measure(path)
-        sb ++= row("built (NN-descent + ring)", m0)
-        println(f"[scale] graphdrift built skew=${m0.skew}%.2f base=${m0.baseRecall}%.2f drift=${m0.driftRecall}%.2f")
-        var batches = 0
-        var skew = m0.skew
-        while (skew < 3.0 && batches < 6) {
-          GraphIndex.insertPublishSelf(spark, path,
-            drifted(batches, 0.25), "vec_id", "embedding",
-            budget = 400)
-          batches += 1
-          // raw degree — the capped serving view would mask the trigger
-          skew = GraphIndex.skewRatio(
-            GraphIndex.load(spark, path, maxDegree = 0))
-          println(f"[scale] graphdrift after insert $batches skewRatio=$skew%.2f")
-        }
-        // the done-bar pair (VERDICT r15 next-round #1): the drifted
-        // artifact served UNCAPPED (the r15 regression — one Δ batch
-        // ballooned the wall 16.0 → 122.8 s) vs the default capped
-        // read; post-drift capped wall must sit within ~2× of the
-        // fresh-build wall at equal recall
-        val m1u = measure(path, cap = 0)
-        sb ++= row(s"after $batches drifted insertPublish batches, UNCAPPED serve (the r15 weak)", m1u)
-        println(f"[scale] graphdrift drifted-uncapped skew=${m1u.skew}%.2f base=${m1u.baseRecall}%.2f drift=${m1u.driftRecall}%.2f wall=${m1u.wall}%.1f")
-        val m1 = measure(path)
-        sb ++= row(s"after $batches batches, capped serve (load default, trigger: skew > 3)", m1)
-        println(f"[scale] graphdrift drifted-capped base=${m1.baseRecall}%.2f drift=${m1.driftRecall}%.2f wall=${m1.wall}%.1f (fresh-build wall ${m0.wall}%.1f)")
-        // retrain: full COLD NN-descent rebuild over the artifact's
-        // corpus, then the WARM-START rebuild (VERDICT r15 next-round
-        // #7) seeded from the drifted adjacency with the inserted ids
-        // flagged fresh — the lists are mostly right, so the
-        // convergence-driven rounds spend their local joins on the Δ
-        // neighborhoods only
-        val rebuilt = path + "_rebuilt"
-        val warmed = path + "_warm"
-        try {
-          val corpusNow = GraphIndex.loadVectors(spark, path).get
-            .toDF("vec_id", "embedding").localCheckpoint()
-          var t0 = System.nanoTime()
-          val (adjR, statsR) =
-            GraphIndex.buildWithStats(corpusNow, "vec_id", "embedding")
-          GraphIndex.saveWithVectors(adjR, corpusNow, "vec_id", "embedding",
-            rebuilt, statsR)
-          val tCold = (System.nanoTime() - t0) / 1e9
-          val m2 = measure(rebuilt)
-          sb ++= row(f"after full COLD rebuild ($tCold%.0f s, ${statsR.size} rounds)", m2)
-          println(f"[scale] graphdrift rebuilt skew=${m2.skew}%.2f base=${m2.baseRecall}%.2f drift=${m2.driftRecall}%.2f cold=$tCold%.0fs")
-          t0 = System.nanoTime()
-          val seed = GraphIndex.load(spark, path, maxDegree = 0)
-          val freshIds = corpusNow.filter(col("vec_id") > maxId)
-            .select(col("vec_id"))
-          val (adjW, statsW) = GraphIndex.buildWarmWithStats(corpusNow,
-            "vec_id", "embedding", seed, freshIds = Some(freshIds))
-          GraphIndex.saveWithVectors(adjW, corpusNow, "vec_id", "embedding",
-            warmed, statsW)
-          val tWarm = (System.nanoTime() - t0) / 1e9
-          val m3 = measure(warmed)
-          sb ++= row(f"after WARM rebuild ($tWarm%.0f s, ${statsW.size} rounds, terminal fresh ${statsW.last.freshFraction}%.3f)", m3)
-          println(f"[scale] graphdrift warm-rebuilt base=${m3.baseRecall}%.2f drift=${m3.driftRecall}%.2f warm=$tWarm%.0fs vs cold=$tCold%.0fs")
-          sb ++= f"\n- warm vs cold rebuild: $tWarm%.0f s vs $tCold%.0f s (${100 * tWarm / tCold}%.0f%%) at recall base ${m3.baseRecall}%.2f/${m2.baseRecall}%.2f, drift ${m3.driftRecall}%.2f/${m2.driftRecall}%.2f; warm terminal fresh fraction ${statsW.last.freshFraction}%.3f (converged by tolerance, not the round cap)\n"
-          // POST-REBUILD BASE-RECALL RESTORATION (VERDICT r16 #5):
-          // measure() already scales the walk budget with the grown
-          // corpus (n/5 of n+Δ); the remaining lever is budget DEPTH.
-          // Sweep it on the cold-rebuilt artifact's base workload and
-          // either name the budget that restores fresh-build recall or
-          // document the fixture-shape bound with the measured curve.
-          locally {
-            val corpusR = GraphIndex.loadVectors(spark, rebuilt).get
-              .toDF("vec_id", "embedding").localCheckpoint()
-            val nR = corpusR.count()
-            val adjR2 = GraphIndex.load(spark, rebuilt).localCheckpoint()
-            val baseQ = corpusR.filter(col("vec_id") <= maxId)
-              .orderBy(col("vec_id").asc).limit(8)
-            val probes = baseQ
-              .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-              .localCheckpoint()
-            val nQ = probes.count()
-            val exact = corpusR
-              .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-              .crossJoin(broadcast(probes))
-              .withColumn("cos",
-                graft.functions.VectorOps.cosine(col("qvec"), col("cvec")))
-              .filter(col("cos").isNotNull)
-              .groupBy(col("qid"))
-              .agg(graft.functions.TopKAgg.topK(10)(col("cos"), col("cid")).as("t"))
-              .select(col("qid"), explode(col("t")).as("h"))
-              .select(col("qid"), col("h._2").as("cid"))
-              .localCheckpoint()
-            val curve = Seq(5, 3, 2).map { div =>
-              val budget = math.max(200L, nR / div).toInt
-              val t0s = System.nanoTime()
-              val got = GraphIndex.probeJoin(adjR2, corpusR,
-                "vec_id", "embedding", probes, "qid", "qvec", k = 10,
-                budget = budget)
-              val w = (System.nanoTime() - t0s) / 1e9
-              val r = got.select(col("query_id").as("qid"),
-                  col("vec_id").as("cid"))
-                .join(exact, Seq("qid", "cid")).count()
-                .toDouble / (nQ * 10.0)
-              println(f"[scale] graphdrift budget-sweep n/$div recall=$r%.2f wall=$w%.1f")
-              (div, r, w)
-            }
-            sb ++= "\n- post-rebuild base-recall vs walk budget (cold-rebuilt artifact, 8 base queries): " +
-              curve.map { case (d, r, w) =>
-                f"n/$d → ${r}%.2f (${w}%.1f s)" }.mkString(", ") +
-              f" — fresh-build base was ${m0.baseRecall}%.2f at n/5\n"
-            val best = curve.map(_._2).max
-            if (best >= m0.baseRecall - 0.05)
-              sb ++= f"- **RESTORED**: budget n/${curve.maxBy(_._2)._1} recovers base recall to within 0.05 of the fresh build — 'rebuild = recall refresh' holds with the budget scaled to the GROWN corpus depth\n"
-            else
-              sb ++= f"- **BOUND**: no swept budget recovers fresh-build base recall (best $best%.2f vs ${m0.baseRecall}%.2f) — the blended drift cluster dilutes the base neighborhoods themselves (fixture shape), not the walk depth; the measured curve above is the documented bound\n"
-          }
-          // the rebuild must RESTORE the base workload (ADVICE r15 #3):
-          // a silent base-recall regression after retrain is the one
-          // outcome this rehearsal exists to catch — flag it loudly
-          for ((label, m) <- Seq("cold" -> m2, "warm" -> m3))
-            if (m.baseRecall < m0.baseRecall - 0.15)
-              sb ++= f"- **FLAG**: $label rebuild base recall ${m.baseRecall}%.2f vs fresh-build ${m0.baseRecall}%.2f — the retrain did NOT restore the base workload (see Reading)\n"
-        } finally {
-          graft.tools.Scratch.deleteRecursively(new java.io.File(rebuilt))
-          graft.tools.Scratch.deleteRecursively(new java.io.File(warmed))
-        }
-        // WARM REBUILD IN ITS CLAIMED REGIME (VERDICT r16 #3): the
-        // 25% Δ arm above prices warm where it honestly loses (the
-        // re-flagged neighborhoods span most of the corpus); the
-        // cadence-tick regime is a SMALL Δ — 2.5%, the graphbuild
-        // insert shape — where round 1's local join shrinks to the Δ
-        // neighborhoods. Price warm (rebuildPublish, the operational
-        // face) vs cold on a fresh copy of the base artifact after ONE
-        // 2.5% drifted insert; either warm wins at equal recall and
-        // terminal fresh ≈ tol, or the warm path is dead weight.
-        locally {
-          val smalld = path + "_smalld"
-          try {
-            GraphIndex.saveWithVectors(adj0, emb, "vec_id", "embedding",
-              smalld, stats0)
-            val delta = drifted(9, 0.025).localCheckpoint()
-            GraphIndex.insertPublishSelf(spark, smalld, delta,
-              "vec_id", "embedding", budget = 400)
-            val corpusS = GraphIndex.loadVectors(spark, smalld).get
-              .toDF("vec_id", "embedding").localCheckpoint()
-            var t0 = System.nanoTime()
-            val (adjC, statsC) =
-              GraphIndex.buildWithStats(corpusS, "vec_id", "embedding")
-            val coldS = smalld + "_cold"
-            GraphIndex.saveWithVectors(adjC, corpusS, "vec_id", "embedding",
-              coldS, statsC)
-            val tColdS = (System.nanoTime() - t0) / 1e9
-            val mC = measure(coldS)
-            t0 = System.nanoTime()
-            val statsWS = GraphIndex.rebuildPublish(spark, smalld,
-              freshIds = Some(delta.select(col("vec_id"))))
-            val tWarmS = (System.nanoTime() - t0) / 1e9
-            val mW = measure(smalld)
-            sb ++= f"\n- **small-Δ (2.5%%) retrain pricing** (the cadence-tick regime): warm rebuildPublish $tWarmS%.0f s vs cold $tColdS%.0f s (${100 * tWarmS / tColdS}%.0f%%); round-1 fresh edges warm ${statsWS.head.freshEdges} vs cold ${statsC.head.freshEdges} (${100.0 * statsWS.head.freshEdges / statsC.head.freshEdges}%.0f%%); terminal fresh warm ${statsWS.last.freshFraction}%.3f / cold ${statsC.last.freshFraction}%.3f; base recall warm ${mW.baseRecall}%.2f / cold ${mC.baseRecall}%.2f, drift ${mW.driftRecall}%.2f / ${mC.driftRecall}%.2f\n"
-            println(f"[scale] graphdrift small-delta warm=$tWarmS%.0fs cold=$tColdS%.0fs warmR1=${statsWS.head.freshEdges} coldR1=${statsC.head.freshEdges} baseRecall warm=${mW.baseRecall}%.2f cold=${mC.baseRecall}%.2f")
-            graft.tools.Scratch.deleteRecursively(new java.io.File(coldS))
-          } finally graft.tools.Scratch.deleteRecursively(
-            new java.io.File(smalld))
-        }
-        sb ++= "\nReading: insertPublish never re-prunes the STORED lists — every Δ\n" +
-          "batch's beam walks converge on the same well-connected nodes and\n" +
-          "their reverse links pile up there, so RAW degree skewRatio is the\n" +
-          "drift observable exactly as cell occupancy is for IVF. The r15\n" +
-          "round measured the uncapped consequence (the UNCAPPED row above,\n" +
-          "kept as the contrast arm): un-pruned hubs soak beam budget at\n" +
-          "degree^hops per expansion and the probe wall balloons while\n" +
-          "recall HOLDS (the un-cut lists are extra, not wrong, edges).\n" +
-          "Since r16 the serving read is insulated: every edge lands scored\n" +
-          "and load()'s default capDegree cuts each list to its best\n" +
-          "DefaultServeDegreeCap at read time — the capped row's wall must\n" +
-          "sit within ~2× of the fresh-build wall at equal recall (the r15\n" +
-          "verdict done-bar), leaving the rebuild a RECALL refresh on the\n" +
-          "skew cadence rather than an emergency wall repair. On base\n" +
-          "recall after a rebuild: the drifted corpus contains a dense\n" +
-          "blended cluster that is positively correlated with every base\n" +
-          "vector, so a REBUILT graph's base-node lists legitimately\n" +
-          "include drift-cluster members and base walks spend part of\n" +
-          "their budget there — a modest base-recall dip vs the fresh\n" +
-          "build (0.98 → ~0.9 at the n/5 budget) is this fixture-shape\n" +
-          "effect, not an engine regression; a drop past 0.15 is flagged\n" +
-          "loudly above (ADVICE r15 #3). Absolute skew need not return to\n" +
-          "the pre-drift value — a shifted mixture has intrinsically\n" +
-          "higher in-degree variance — so the cadence signal is skew (and\n" +
-          "wall) RELATIVE to the last rebuild, and the committed\n" +
-          "convergence column shows each rebuild actually converged\n" +
-          "(fresh fraction ≈ tol) rather than hitting its round cap.\n"
-      } finally graft.tools.Scratch.deleteRecursively(new java.io.File(path))
-    } finally { emb.unpersist(); () }
-    sb.toString
-  }
-
-  /** The AUTOMATED retrain loop end-to-end at scale
-    * (mode=retrainloop, VERDICT r16 next-round #1's done-bar): a real
-    * maintenance stream over a vector-carrying graph artifact with a
-    * RetrainPolicy attached — drifted Δ triggers grow hubs, the loop
-    * itself reads the raw degree-skew observable after each Δ publish,
-    * fires the one-call warm rebuild when it crosses, and the
-    * post-loop artifact serves at the fresh wall — detect → retrain →
-    * restore with NO operator in the loop. Prices each phase: insert
-    * trigger walls, the observable read, the in-loop retrain wall,
-    * and the post-loop capped serve vs the pre-retrain drifted serve.
-    */
-  def retrainLoopCheck(spark: SparkSession, dir: String): String = {
-    import graft.similarity.GraphIndex
-    import graft.streaming.IndexMaintStream
-    Bench.scrub(spark)
-    val sb = new StringBuilder
-    sb ++= "\n## Automated retrain loop (stream-embedded detect → retrain → restore)\n\n"
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding")).cache()
-    try {
-      val maxId = emb.agg(max(col("vec_id"))).collect()(0).getLong(0)
-      val n0 = emb.count()
-      val path = java.nio.file.Files.createTempDirectory("graft_rtloop")
-        .toAbsolutePath.toString
-      val deltaDir = java.nio.file.Files.createTempDirectory("graft_rtloop_d")
-        .toAbsolutePath.toString
-      try {
-        var t0 = System.nanoTime()
-        val (adj0, stats0) = GraphIndex.buildWithStats(emb,
-          "vec_id", "embedding")
-        GraphIndex.saveWithVectors(adj0, emb, "vec_id", "embedding", path,
-          stats0)
-        val tBuild = (System.nanoTime() - t0) / 1e9
-        println(f"[scale] retrainloop built n=$n0 in $tBuild%.0f s")
-        // three drifted 25% Δ batches as separate stream files — the
-        // graphdrift hub-growth shape, delivered as triggers
-        for (b <- 0 until 3)
-          emb.filter(col("vec_id") % 4 === 0)
-            .select((col("vec_id") + lit((b + 1) * (maxId + 1))).as("vec_id"),
-              transform(col("embedding"),
-                x => x * lit(0.6f) + lit(0.4f)).as("embedding"))
-            .repartition(1).write.mode("append")
-            .parquet(s"$deltaDir/embeddings.parquet")
-        val kind = IndexMaintStream.GraphKind(budget = 400)
-        val marks = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-        val tLoop0 = System.nanoTime()
-        def mark(l: String): Unit =
-          marks += ((l, (System.nanoTime() - tLoop0) / 1e9))
-        val published = IndexMaintStream.appendFile(spark, deltaDir, path,
-          kind = kind, maxFilesPerTrigger = Some(1),
-          onTrigger = mb => mark(s"trigger(${mb.count()} rows)"),
-          retrain = Some(IndexMaintStream.RetrainPolicy(threshold = 3.0)),
-          onRetrain = b => mark(s"RETRAIN fired at trigger $b"))
-        mark("stream drained")
-        sb ++= f"- fresh build: $tBuild%.0f s at n=$n0; loop input: 3 drifted 25%% Δ triggers, policy skew > 3.0\n"
-        sb ++= "- loop timeline (s from stream start): " +
-          marks.map { case (l, t) => f"$t%.0f → $l" }.mkString("; ") + "\n"
-        val retrains = marks.count(_._1.startsWith("RETRAIN"))
-        sb ++= f"- $published Δ publishes, $retrains in-loop retrain(s) — fired by the loop's own observable read, no operator involved\n"
-        // post-loop state: observable restored, convergence committed,
-        // serve at the fresh wall
-        val skewAfter = kind.observe(spark, path).get
-        val conv = GraphIndex.convergence(spark, path)
-        val corpus = GraphIndex.loadVectors(spark, path).get
-          .toDF("vec_id", "embedding").localCheckpoint()
-        val nNow = corpus.count()
-        val probes = corpus.filter(col("vec_id") <= maxId)
-          .orderBy(col("vec_id").asc).limit(8)
-          .unionAll(corpus.orderBy(col("vec_id").desc).limit(8))
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-          .localCheckpoint()
-        val nQ = probes.count()
-        val exact = corpus
-          .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-          .crossJoin(broadcast(probes))
-          .withColumn("cos",
-            graft.functions.VectorOps.cosine(col("qvec"), col("cvec")))
-          .filter(col("cos").isNotNull)
-          .groupBy(col("qid"))
-          .agg(graft.functions.TopKAgg.topK(10)(col("cos"), col("cid")).as("t"))
-          .select(col("qid"), explode(col("t")).as("h"))
-          .select(col("qid"), col("h._2").as("cid"))
-          .localCheckpoint()
-        t0 = System.nanoTime()
-        val adj = GraphIndex.load(spark, path).localCheckpoint()
-        val got = GraphIndex.probeJoin(adj, corpus, "vec_id", "embedding",
-          probes, "qid", "qvec", k = 10,
-          budget = math.max(200L, nNow / 5).toInt)
-        val wall = (System.nanoTime() - t0) / 1e9
-        val recall = got.select(col("query_id").as("qid"),
-            col("vec_id").as("cid"))
-          .join(exact, Seq("qid", "cid")).count().toDouble / (nQ * 10.0)
-        sb ++= f"- post-loop: raw degree skew $skewAfter%.2f (under the 3.0 trigger), committed convergence ${conv.map(c => f"$c%.3f").getOrElse("—")} (the loop's own rebuild), capped serve $wall%.1f s for 16 queries at recall@10 $recall%.2f (fresh-build wall band)\n"
-        println(f"[scale] retrainloop done: skew=$skewAfter%.2f serve=$wall%.1f s recall=$recall%.2f retrains=$retrains")
-        sb ++= "\nReading: this is rounds 10–16's maintenance machinery closed\n" +
-          "into a loop — the documented contract (\"skew > 3 is the retrain\n" +
-          "trigger\") executes inside the maintenance stream itself. Each\n" +
-          "trigger pays its Δ insert plus ONE bounded observable aggregate;\n" +
-          "the crossing fires GraphIndex.rebuildPublish (warm NN-descent\n" +
-          "over the artifact's own corpus, tombstones folded, convergence\n" +
-          "committed, atomic tagged generation) exactly once per crossing —\n" +
-          "replayed triggers see the tag and skip — while concurrent\n" +
-          "readers keep resolving the previous generation until the commit\n" +
-          "marker lands. At 1000 executors the observable read is one\n" +
-          "degree aggregate over the edge table (shuffle-light), and the\n" +
-          "retrain cost amortizes across the cadence exactly as the 20×\n" +
-          "drift rehearsal prices it.\n"
-      } finally {
-        graft.tools.Scratch.deleteRecursively(new java.io.File(path))
-        graft.tools.Scratch.deleteRecursively(new java.io.File(deltaDir))
-      }
-    } finally { emb.unpersist(); () }
-    sb.toString
-  }
-
-  /** Delete-heavy graph maintenance at scale (mode=graphmaint,
-    * VERDICT r15 next-round #8): compose `Kind.Graph` insert triggers
-    * with `takedown` triggers in ONE stream (the CcStream seam
-    * pattern, spec-pinned in IndexMaintStreamSpec) and PRICE it —
-    * per-trigger insert wall, takedown wall (∝ |ids|), post-
-    * maintenance capped serve, and the compact that folds the
-    * tombstones back out. This was the one graph path priced only at
-    * spec scale before r16.
-    */
-  def graphMaintCheck(spark: SparkSession, dir: String): String = {
-    import graft.similarity.GraphIndex
-    import spark.implicits._
-    Bench.scrub(spark)
-    val sb = new StringBuilder
-    sb ++= "\n## Delete-heavy graph maintenance (interleaved insert + takedown triggers)\n\n"
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding")).cache()
-    val streamed = java.nio.file.Files
-      .createTempDirectory("graft_graph_maint").toAbsolutePath.toString
-    val deltaDir = java.nio.file.Files
-      .createTempDirectory("graft_graph_maint_d").toAbsolutePath.toString
-    try {
-      val cut = emb.selectExpr("percentile(vec_id, 0.9)").head()
-        .getDouble(0).toLong
-      val base = emb.filter(col("vec_id") <= cut).localCheckpoint()
-      val delta = emb.filter(col("vec_id") > cut).localCheckpoint()
-      val nBase = base.count(); val dN = delta.count()
-      var t0 = System.nanoTime()
-      GraphIndex.saveWithVectors(
-        GraphIndex.build(base, "vec_id", "embedding"),
-        base, "vec_id", "embedding", streamed)
-      val tBuild = (System.nanoTime() - t0) / 1e9
-      delta.repartition(4).write.parquet(s"$deltaDir/embeddings.parquet")
-      // delete-heavy: after every trigger's insert, take down 25% of
-      // the PREVIOUS trigger's ids (plus a slice of base ids on the
-      // first) — tombstones are live during every later Δ walk
-      val deltaIds = delta.select(col("vec_id")).as[Long].collect().sorted
-      val baseVictims = base.select(col("vec_id")).as[Long].collect()
-        .sorted.take((nBase / 100).toInt)
-      var prevIds = scala.collection.mutable.ArrayBuffer(baseVictims: _*)
-      val tTriggers = scala.collection.mutable.ArrayBuffer.empty[Double]
-      val tTakedowns = scala.collection.mutable.ArrayBuffer.empty[Double]
-      val kind = graft.streaming.IndexMaintStream.GraphKind(budget = 400)
-      var tLast = System.nanoTime()
-      val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
-      graft.streaming.IndexMaintStream.appendFile(spark, deltaDir, streamed,
-        kind = kind, maxFilesPerTrigger = Some(1),
-        onTrigger = mb => {
-          tTriggers += (System.nanoTime() - tLast) / 1e9
-          val victims = prevIds.take(math.max(1, prevIds.size / 4)).toSeq
-          val td0 = System.nanoTime()
-          kind.takedown(spark, streamed, victims.toDF("vec_id"))
-          tTakedowns += (System.nanoTime() - td0) / 1e9
-          seen ++= victims
-          prevIds = scala.collection.mutable.ArrayBuffer(
-            mb.select(col("vec_id")).as[Long].collect().sorted: _*)
-          tLast = System.nanoTime()
-        })
-      tTriggers += (System.nanoTime() - tLast) / 1e9
-      val victims = seen.toSet
-      // post-maintenance serve over the CAPPED default read: victims
-      // never surface; recall vs exact over the live corpus
-      val live = GraphIndex.loadVectors(spark, streamed).get
-        .toDF("vec_id", "embedding").localCheckpoint()
-      val probes = live.orderBy(col("vec_id").desc).limit(16)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        .localCheckpoint()
-      val nQ = probes.count()
-      val exact = live.select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-        .crossJoin(broadcast(probes))
-        .withColumn("cos", graft.functions.VectorOps.cosine(col("qvec"), col("cvec")))
-        .filter(col("cos").isNotNull)
-        .groupBy(col("qid"))
-        .agg(graft.functions.TopKAgg.topK(10)(col("cos"), col("cid")).as("t"))
-        .select(col("qid"), explode(col("t")).as("h"))
-        .select(col("qid"), col("h._2").as("cid"))
-        .localCheckpoint()
-      t0 = System.nanoTime()
-      val got = GraphIndex.probeJoin(GraphIndex.load(spark, streamed), live,
-        "vec_id", "embedding", probes, "qid", "qvec", k = 10,
-        budget = math.max(200L, live.count() / 5).toInt).localCheckpoint()
-      val tServe = (System.nanoTime() - t0) / 1e9
-      val servedVictim = got.select(col("vec_id")).as[Long].collect()
-        .exists(victims)
-      val recall = got.select(col("query_id").as("qid"), col("vec_id").as("cid"))
-        .join(exact, Seq("qid", "cid")).count().toDouble / (nQ * 10.0)
-      t0 = System.nanoTime()
-      GraphIndex.compact(spark, streamed)
-      val tCompact = (System.nanoTime() - t0) / 1e9
-      val gen = graft.tools.Artifacts.requireGen(spark, streamed)
-      val folded = graft.tools.Artifacts.tombstoneFiles(spark, gen).isEmpty
-      sb ++= f"- base n=$nBase%,d (build+save $tBuild%.1f s); 4 insert triggers over a ${dN}%,d-row Δ with a 25%%-of-previous-trigger takedown interleaved before each\n"
-      sb ++= f"- trigger walls [stream startup, insert 1..${tTriggers.size - 1}]: [${tTriggers.map(t => f"$t%.1f").mkString(", ")}] s; per-takedown wall: [${tTakedowns.map(t => f"$t%.1f").mkString(", ")}] s (∝ |ids| — a sidecar append, never a file rewrite)\n"
-      sb ++= f"- post-maintenance serve (16 queries, capped default read): $tServe%.1f s, recall@10 $recall%.2f, victim served: ${if (servedVictim) "YES — BUG" else "never"}\n"
-      sb ++= f"- compact (folds ${victims.size} tombstones, collapses manifests): $tCompact%.1f s; sidecar empty after: $folded\n"
-      sb ++= "- reading: takedown cost is sidecar-append ∝ |ids|; every later Δ walk runs over live tombstones (load anti-joins both endpoints), so delete-heavy maintenance pays its cost at COMPACT time, on the retrain cadence — not per serve\n"
-      println(f"[scale] graphmaint triggers=[${tTriggers.map(t => f"$t%.1f").mkString(",")}] takedowns=[${tTakedowns.map(t => f"$t%.1f").mkString(",")}] serve=$tServe%.1fs recall=$recall%.2f victimServed=$servedVictim compact=$tCompact%.1fs")
-      require(!servedVictim, "graph maintenance served a taken-down id")
-    } finally {
-      emb.unpersist()
-      graft.tools.Scratch.deleteRecursively(new java.io.File(streamed))
-      graft.tools.Scratch.deleteRecursively(new java.io.File(deltaDir))
-    }
-    sb.toString
-  }
-
-  /** Delta-CC economics (mode=deltacc, VERDICT r11 next-round #3):
-    * maintain cluster labels under a 10% edge append via
-    * [[graft.dedup.ConnectedComponents.appendEdges]] and compare
-    * against the full recompute over base ∪ Δ. The base graph is a
-    * random sparse graph (avg degree ≈ 2 — the near-dup regime:
-    * many small components, some chains); Δ edges land on a 10%
-    * node subset, so most components are untouched, which is the
-    * production shape (a daily batch touches the clusters it
-    * collides with, not the corpus). Equality is asserted, not
-    * assumed — the speedup must not come from wrong labels.
-    */
-  def deltaCcCheck(spark: SparkSession, n: Long): String = {
-    import graft.dedup.ConnectedComponents
-    Bench.scrub(spark)
-    val sb = new StringBuilder
-    sb ++= "\n## Delta connected components (10% edge append)\n\n"
-    // deterministic pseudo-random sparse graph over n nodes
-    def randEdges(from: Long, to: Long) = spark.range(from, to)
-      .select(((col("id") * 7919 + 13) % n).as("a"),
-        ((col("id") * 104729 + 7) % n).as("b"))
-      .filter(col("a") =!= col("b"))
-    val nBase = n // avg degree ≈ 2
-    val base = randEdges(0, nBase)
-    // Δ concentrated on a 10% keyspace slice: most components untouched
-    val delta = randEdges(nBase, nBase + nBase / 10)
-      .select(pmod(col("a"), lit(n / 10)).as("a"),
-        pmod(col("b"), lit(n / 10)).as("b"))
-      .filter(col("a") =!= col("b"))
-    var t0 = System.nanoTime()
-    val labels = ConnectedComponents.componentsAlternating(base, maxIter = 40)
-      .localCheckpoint()
-    val tBase = (System.nanoTime() - t0) / 1e9
-    t0 = System.nanoTime()
-    val updated = ConnectedComponents.appendEdges(labels, delta, maxIter = 40)
-      .localCheckpoint()
-    val nUpd = updated.count()
-    val tDelta = (System.nanoTime() - t0) / 1e9
-    t0 = System.nanoTime()
-    val full = ConnectedComponents
-      .componentsAlternating(base.union(delta), maxIter = 40).localCheckpoint()
-    val nFull = full.count()
-    val tFull = (System.nanoTime() - t0) / 1e9
-    val mismatch = updated.as("u")
-      .join(full.as("f"), col("u.id") === col("f.id"))
-      .filter(col("u.component") =!= col("f.component")).count()
-    sb ++= f"- base: $nBase%,d edges over ≤$n%,d nodes, full CC $tBase%.1f s\n"
-    sb ++= f"- 10%% append: delta-CC $tDelta%.1f s vs full recompute $tFull%.1f s " +
-      f"(${tFull / math.max(tDelta, 0.001)}%.1fx) — $nUpd%,d labels, $mismatch mismatched vs full\n"
-    println(f"[scale] deltacc base=$tBase%.1fs delta=$tDelta%.1fs full=$tFull%.1fs mismatch=$mismatch (labels=$nUpd, fullLabels=$nFull)")
-    require(mismatch == 0, "delta-CC labels diverged from full recompute")
-    sb.toString
-  }
-
-  /** Durable label-store economics (mode=labelstore, VERDICT r12
-    * next-round #1): on the 1M-node random graph, publish the CC
-    * labels into the bucketed [[graft.dedup.LabelStore]] and apply
-    * delta appends whose TOUCHED-COMPONENT count varies by 16× —
-    * per-trigger wall and rewritten buckets must track the touched
-    * fraction, not the corpus (the whole point of the layout).
-    * Includes the ephemeral [[graft.dedup.ConnectedComponents
-    * .appendEdges]] arm for the smallest delta: its relabel pass is
-    * O(corpus) per trigger regardless of delta size — the cost the
-    * store exists to remove. Exactness asserted at the end: the
-    * store's final labels ≡ a full recompute over base ∪ all deltas.
-    */
-  def labelStoreCheck(spark: SparkSession, n: Long): String = {
-    import graft.dedup.{ConnectedComponents, LabelStore}
-    Bench.scrub(spark)
-    val sb = new StringBuilder
-    sb ++= "\n## Durable bucketed label store (per-trigger cost vs touched fraction)\n\n"
-    // SUBCRITICAL graph (n edges over 3n nodes, avg degree 0.67):
-    // many small components — the near-dup regime, and the regime
-    // where delta merges genuinely touch distinct components (a
-    // supercritical graph's giant component absorbs every delta as a
-    // no-op, which tests nothing)
-    val dom = 3 * n
-    def randEdges(from: Long, to: Long) = spark.range(from, to)
-      .select(((col("id") * 7919 + 13) % dom).as("a"),
-        ((col("id") * 104729 + 7) % dom).as("b"))
-      .filter(col("a") =!= col("b"))
-    val base = randEdges(0, n)
-    val labels = ConnectedComponents.componentsAlternating(base, maxIter = 40)
-      .localCheckpoint()
-    val nBuckets = 256
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_labelstore_rehearsal").toAbsolutePath.toString
-    try {
-      var t0 = System.nanoTime()
-      LabelStore.save(labels, root, nBuckets)
-      val tSave = (System.nanoTime() - t0) / 1e9
-      sb ++= f"- save ${labels.count()}%,d labels into $nBuckets buckets: $tSave%.1f s (amortized once per rebuild)\n"
-      // ephemeral arm: the O(corpus) relabel pass per trigger
-      val smallDelta = spark.range(0, 16)
-        .select((col("id") + 12345).as("a"), (col("id") + 12346).as("b"))
-      t0 = System.nanoTime()
-      ConnectedComponents.appendEdges(labels, smallDelta)
-        .localCheckpoint().count()
-      val tEphemeral = (System.nanoTime() - t0) / 1e9
-      sb ++= f"- ephemeral appendEdges, 16-edge delta: $tEphemeral%.1f s (corpus-wide relabel materialization every trigger)\n"
-      // store arm: deltas of growing touched-component count
-      var deltasSoFar = base.limit(0)
-      for ((m, off) <- Seq((16, 100000L), (256, 300000L), (4096, 500000L))) {
-        val delta = spark.range(0, m.toLong)
-          .select((col("id") + off).as("a"), (col("id") + off + 1).as("b"))
-        val manBefore = LabelStore.manifest(spark, root)
-        t0 = System.nanoTime()
-        LabelStore.appendEdges(spark, root, delta)
-        val t = (System.nanoTime() - t0) / 1e9
-        val manAfter = LabelStore.manifest(spark, root)
-        val rewritten = manAfter.count { case (b, dir2) =>
-          !manBefore.get(b).contains(dir2)
-        } + (manBefore.keySet -- manAfter.keySet).size
-        def bytesOf(man: Map[Int, String]) = man.values
-          .map(d => graft.tools.Scratch.listParquetFiles(d).values.sum).sum
-        val newBytes = manAfter
-          .filter { case (b, dir2) => !manBefore.get(b).contains(dir2) }
-          .values.map(d => graft.tools.Scratch.listParquetFiles(d).values.sum).sum
-        val totBytes = bytesOf(manAfter)
-        sb ++= f"- $m%,d-edge delta: $t%.1f s, $rewritten of $nBuckets buckets rewritten, ${newBytes / 1024}%,d of ${totBytes / 1024}%,d KiB written (${100.0 * newBytes / totBytes}%.0f%% of the store)\n"
-        println(f"[scale] labelstore m=$m t=$t%.1fs rewritten=$rewritten/$nBuckets bytes=${100.0 * newBytes / totBytes}%.0f%% ephemeral16=$tEphemeral%.1fs")
-        deltasSoFar = deltasSoFar.unionAll(delta)
-      }
-      // exactness: store ≡ full recompute over base ∪ all deltas
-      val full = ConnectedComponents
-        .componentsAlternating(base.unionAll(deltasSoFar), maxIter = 40)
-        .localCheckpoint()
-      val stored = LabelStore.load(spark, root)
-      val mismatch = stored.as("s")
-        .join(full.as("f"), col("s.id") === col("f.id"), "full")
-        .filter(col("s.component").isNull || col("f.component").isNull ||
-          col("s.component") =!= col("f.component")).count()
-      sb ++= s"- final store labels vs full recompute over base ∪ all deltas: $mismatch mismatched\n"
-      sb ++= "- at this toy scale the per-trigger wall is file-listing/scheduling-bound (~constant); the terms that dominate at 100 TB — bytes read for relabel and bytes written — are touched-fraction-bound, which is the column above\n"
-      require(mismatch == 0, "label store diverged from full recompute")
-    } finally graft.tools.Scratch.deleteRecursively(new java.io.File(root))
-    sb.toString
-  }
-
-  /** ADC scorer economics at code volume (mode=adc, VERDICT r12 #2):
-    * replicate the sf corpus's PQ codes 500× (≈1M code rows — the
-    * regime where the serving scan's per-row cost is the bill) and
-    * time one full ADC pass: the native `graft_adc_score` kernel vs
-    * the r12 closure-UDF scorer, min of 2 each. Equality asserted on
-    * the aggregate (same sum of scores) — the speedup must not come
-    * from different arithmetic.
-    */
-  def adcKernelCheck(spark: SparkSession, dir: String): String = {
-    import graft.similarity.PqIndex
-    import org.apache.spark.sql.functions._
-    Bench.scrub(spark)
-    val sb = new StringBuilder
-    sb ++= "\n## ADC kernel vs closure UDF at code volume\n\n"
-    val emb = graft.Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding")).cache()
-    try {
-      val q: Seq[Float] = emb.orderBy("vec_id").select(col("embedding"))
-        .head().getSeq[Float](0)
-      val cb = PqIndex.train(emb, "vec_id", "embedding", m = 8, k = 32, iters = 1)
-      val reps = 500
-      val codes = PqIndex.encode(cb, emb, "vec_id", "embedding")
-        .crossJoin(spark.range(reps).select(col("id").as("_rep")))
-        .select((col("vec_id") * reps + col("_rep")).as("vec_id"), col("codes"))
-        .localCheckpoint()
-      val n = codes.count()
-      // kernel pass (adcScores is kernel-backed since r13)
-      def timeIt(f: () => Unit): Double = {
-        val t0 = System.nanoTime(); f(); (System.nanoTime() - t0) / 1e9
-      }
-      var kernelSum = 0.0
-      val tKernel = (0 until 2).map(_ => timeIt { () =>
-        kernelSum = PqIndex.adcScores(cb, codes, "vec_id", q)
-          .agg(sum(col("adc"))).collect()(0).getDouble(0)
-      }).min
-      // the r12 closure-UDF scorer, reconstructed
-      val dotLut = Array.tabulate(cb.m, cb.k) { (s, c) =>
-        var d = 0.0; var j = 0
-        while (j < cb.subDim) {
-          d += q(s * cb.subDim + j).toDouble * cb.centroids(s)(c)(j); j += 1
-        }
-        d
-      }
-      val nrmSqLut = Array.tabulate(cb.m, cb.k) { (s, c) =>
-        var nn = 0.0; var j = 0
-        while (j < cb.subDim) {
-          val x = cb.centroids(s)(c)(j); nn += x * x; j += 1
-        }
-        nn
-      }
-      val qn = math.sqrt(q.foldLeft(0.0)((a, x) => a + x.toDouble * x.toDouble))
-      val scoreU = udf { cs: Seq[Int] =>
-        var d = 0.0; var nn = 0.0; var s2 = 0
-        while (s2 < cs.length) {
-          d += dotLut(s2)(cs(s2)); nn += nrmSqLut(s2)(cs(s2)); s2 += 1
-        }
-        val denom = qn * math.sqrt(nn)
-        if (denom == 0.0) None else Some(d / denom)
-      }
-      var udfSum = 0.0
-      val tUdf = (0 until 2).map(_ => timeIt { () =>
-        udfSum = codes.select(scoreU(col("codes")).as("adc"))
-          .agg(sum(col("adc"))).collect()(0).getDouble(0)
-      }).min
-      require(kernelSum == udfSum,
-        s"kernel/UDF score sums diverged: $kernelSum vs $udfSum")
-      sb ++= f"- $n%,d code rows, one full ADC pass: kernel $tKernel%.2f s vs closure UDF $tUdf%.2f s (${tUdf / math.max(tKernel, 0.001)}%.1f×), identical score sum\n"
-      println(f"[scale] adc n=$n kernel=$tKernel%.2fs udf=$tUdf%.2fs x=${tUdf / math.max(tKernel, 0.001)}%.1f")
-    } finally { emb.unpersist(); () }
     sb.toString
   }
 

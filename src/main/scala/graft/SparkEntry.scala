@@ -44,6 +44,21 @@ object SparkEntry {
   def benchQueries: Map[String, (SparkSession, String) => DataFrame] =
     queries ++ TrainingData.benchOverrides
 
+  /** The local session every graft main and the test suite run on:
+    * `local[cpus]` with as many shuffle partitions, UTC session time,
+    * adaptive execution, the graft extensions and no UI. Callers pick
+    * their own CPU default and log level.
+    */
+  def localSession(cpus: Int): SparkSession =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+
   /** SPARK_GRAFT_ONLY=q_a,q_b restriction for Verify/Bench — one
     * parse, and a BLANK value means "no restriction" (a naive
     * split(",") would yield Set("") and silently filter out every

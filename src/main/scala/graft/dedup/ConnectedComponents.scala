@@ -323,8 +323,7 @@ object ConnectedComponents {
     * join. The full recompute pays O(log n) shuffle rounds over ALL
     * edges; the delta path's only corpus-sized work is the single
     * narrow output join (DeltaCcSpec pins label equality on random /
-    * chain / planted graphs through both CC dispatch branches; the
-    * rehearsal's deltacc row measures the cost gap at scale).
+    * chain / planted graphs through both CC dispatch branches).
     *
     * New nodes introduced by Δ (including isolated-looking endpoints
     * that merge nothing) appear in the output with their merged

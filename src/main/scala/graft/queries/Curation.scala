@@ -1454,11 +1454,9 @@ object Curation {
   private val MediaMaxBlock = 1024L
 
   /** The size-adaptive blocking dispatch — ONE definition, shared by
-    * the three declared queries and the rehearsal's mediaDiag (a
-    * diagnostic that re-derived the dispatch would silently profile
-    * the wrong path after a threshold change).
+    * the three declared media queries.
     */
-  private[graft] def mediaPairs(feats: org.apache.spark.sql.DataFrame,
+  private def mediaPairs(feats: org.apache.spark.sql.DataFrame,
       n: Long, tau: Double): org.apache.spark.sql.DataFrame =
     if (n <= MediaFlatMax)
       Dedup.embeddingNearDupsClustered(feats, "doc_id", "feature",
@@ -1516,11 +1514,9 @@ object Curation {
   }
 
   /** Per-modality near-dup τ — ONE definition shared by the declared
-    * queries, their oracles and the rehearsal's growth diagnostic (a
-    * diagnostic at a different τ than the query would profile the
-    * wrong pipeline).
+    * queries and their oracles.
     */
-  private[graft] val MediaTaus: Map[String, Double] =
+  private val MediaTaus: Map[String, Double] =
     Map("image" -> 0.9999, "audio" -> 0.97, "video" -> 0.9999)
 
   /** Image τ = 0.9999: pixel-statistics cosines crowd 1.0 (median

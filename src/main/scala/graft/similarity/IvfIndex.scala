@@ -298,8 +298,7 @@ object IvfIndex {
     * [[occupancy]]. On a balanced index this is ≈ nProbe/nCentroids;
     * under drift a query near a bloated frozen cell pays that cell's
     * whole population, which is how skew shows up as per-query cost
-    * at scale (the rehearsal's drift section reads this alongside
-    * [[skewRatio]]). Bounded: one occupancy aggregate.
+    * at scale. Bounded: one occupancy aggregate.
     */
   def probedFraction(index: Index, query: Seq[Float], nProbe: Int = 4): Double = {
     val probes =

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Diagnostic main: print (or dump to files) the formatted plan of the
   * named queries, BENCH path (overrides included — the timed bodies).
@@ -25,15 +24,7 @@ object PlanDump {
       case "--suffix" +: s +: tl => suffix = s; rest = tl
       case _ => throw new IllegalArgumentException(rest.head)
     }
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     val benchMap = graft.SparkEntry.benchQueries
     rest.foreach { q =>

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Measurement aid for optimization rounds (guide §1: measure first).
   * Runs the named BENCH-path queries (overrides included) N times each
@@ -19,15 +18,7 @@ object Profile {
     val (passes, names) =
       if (args(1).forall(_.isDigit)) (args(1).toInt, args.drop(2).toSeq)
       else (2, args.tail.toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     @volatile var jobs = 0
     @volatile var stages = 0

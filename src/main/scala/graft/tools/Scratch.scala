@@ -51,8 +51,8 @@ object Scratch {
 
   /** All parquet data files under `path` as (path relative to `path`
     * → byte size) — the unit of "these files were not rewritten"
-    * assertions (IvfIndex/PqIndex append, the rehearsal append
-    * check). The walk stream is CLOSED: `Files.walk` holds open
+    * assertions (IvfIndex/PqIndex append, label-store buckets). The
+    * walk stream is CLOSED: `Files.walk` holds open
     * directory handles until close()/GC, and the previous inline
     * copies of this loop leaked one per call in long-lived JVMs.
     */

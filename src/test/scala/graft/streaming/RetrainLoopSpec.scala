@@ -52,9 +52,21 @@ class RetrainLoopSpec extends SparkTestBase {
       val maxId = emb.agg(max($"vec_id")).head().getLong(0)
       IvfIndex.save(IvfIndex.build(emb, "vec_id", "embedding",
         nCentroids = 8, iters = 2), path)
-      // three drifted Δ files → three triggers, same-corner vectors
+      // three drifted Δ files → three triggers. The round-robin write
+      // puts about a third of every batch in each file. The file
+      // stream takes the oldest-modified file first, and one parallel
+      // write leaves the three milliseconds apart in no set order, so
+      // the files get strictly increasing modification times in
+      // part-file order: the loop sees one trigger order on every run.
       (1 to 3).map(b => drifted(b, maxId)).reduce(_ unionAll _)
         .repartition(3).write.parquet(s"$deltaDir/embeddings.parquet")
+      val parts = new java.io.File(s"$deltaDir/embeddings.parquet").listFiles()
+        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+      assert(parts.length == 3)
+      val t0 = System.currentTimeMillis() - 60000L
+      parts.zipWithIndex.foreach { case (f, i) =>
+        assert(f.setLastModified(t0 + 10000L * i))
+      }
 
       val kind = IndexMaintStream.IvfKind()
       val observed = scala.collection.mutable.ArrayBuffer.empty[Double]
