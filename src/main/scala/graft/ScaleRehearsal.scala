@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper,
+  ShuffleQueryStageExec}
 import org.apache.spark.sql.functions._
 
 import graft.streaming.ConfScope
@@ -300,7 +303,8 @@ object ScaleRehearsal {
     // extra shuffle" (verified: same query, threshold 2m or no force →
     // no split at 13.5-18 s; 256k + force → split at 9.0 s).
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "256k")
+    val threshold = 256L * 1024
+    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", threshold.toString)
     spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
     spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
     spark.conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
@@ -316,21 +320,29 @@ object ScaleRehearsal {
       // drive THIS DataFrame's own adaptive plan: df.count() builds a
       // separate QueryExecution, leaving j's plan isFinalPlan=false —
       // executing the AdaptiveSparkPlanExec's RDD is what finalizes it
-      def pass(): (Double, Long, String) = {
+      def pass(): (Double, Long, String, Long) = {
         val qe = skewed.join(dim, "k").select(col("x")).queryExecution
         val t0 = System.nanoTime()
         val n = qe.executedPlan.execute().count()
         val t = (System.nanoTime() - t0) / 1e9
         val p = qe.executedPlan.toString
+        val largest = largestPartition(qe.executedPlan)
         Bench.scrub(spark)
-        (t, n, p)
+        (t, n, p, largest)
       }
       val passes = Seq(pass(), pass())
-      val (skewSec, n, plan) = passes.minBy(_._1)
+      val (skewSec, n, plan, largest) = passes.minBy(_._1)
       val split = plan.contains("skew=true")
       val aqeRead = plan.contains("AQEShuffleRead")
+      // below the threshold no partition can count as skewed, so a plan
+      // without a split says nothing about the split itself
+      val verdict =
+        if (split) "YES — skewed partition was split"
+        else if (largest < threshold) "no verdict (threshold not reached)"
+        else "NO"
       sb ++= f"- 40%% of the scaled lineitem's probe rows on one key, sort-merge forced: $skewSec%.2f s, $n joined rows\n"
-      sb ++= s"- final adaptive plan contains `skew=true`: ${if (split) "YES — skewed partition was split" else "NO"}\n"
+      sb ++= s"- largest shuffle partition: $largest bytes (skew threshold $threshold bytes)\n"
+      sb ++= s"- final adaptive plan contains `skew=true`: $verdict\n"
       sb ++= s"- plan contains AQEShuffleRead: $aqeRead\n"
       if (!split) {
         sb ++= "\n<details><summary>executed plan (first 25 lines)</summary>\n\n```\n"
@@ -347,6 +359,20 @@ object ScaleRehearsal {
     }
     sb.toString
   }
+
+  /** The largest shuffle partition, in map-output bytes, over the
+    * shuffle stages of an executed adaptive plan: the size AQE's skew
+    * split compares with its threshold.
+    */
+  private def largestPartition(plan: SparkPlan): Long =
+    PlanStages.collect(plan) { case s: ShuffleQueryStageExec =>
+      s.mapStats.toSeq.flatMap(_.bytesByPartitionId)
+    }.flatten.foldLeft(0L)(math.max)
+
+  /** Walks into adaptive plans and through their query stages, which a
+    * plain `collect` stops at (the final result stage is a leaf).
+    */
+  private object PlanStages extends AdaptiveSparkPlanHelper
 
   private def planDump(spark: SparkSession, dir: String): String = {
     val sb = new StringBuilder

@@ -97,27 +97,16 @@ object StatsPrunedRead {
     (merged, fresh.size)
   }
 
-  /** Leaf data files under `dir` in `input_file_name()` format —
-    * recursive FileSystem listing, zero Spark jobs. Hidden files and
-    * directories (leading '_' or '.': _SUCCESS, staging dirs) are
-    * filtered exactly like Spark's file index; partition directories
-    * (month=..., k=...) are recursed.
+  /** Leaf data files under `dir` in `input_file_name()` format — the
+    * shared driver-side walk ([[graft.tools.Artifacts.leafFiles]]):
+    * zero Spark jobs, hidden files and directories (leading '_' or
+    * '.': _SUCCESS, staging dirs) filtered exactly like Spark's file
+    * index, partition directories (month=..., k=...) recursed.
     */
   private[layout] def listLeafFiles(spark: SparkSession,
-      dir: String): Set[String] = {
-    import org.apache.hadoop.fs.{FileStatus, Path}
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def walk(d: Path): Iterator[FileStatus] =
-      fs.listStatus(d).iterator.flatMap { st =>
-        val name = st.getPath.getName
-        if (name.startsWith("_") || name.startsWith(".")) Iterator.empty
-        else if (st.isDirectory) walk(st.getPath)
-        else Iterator.single(st)
-      }
-    walk(p).map(st =>
+      dir: String): Set[String] =
+    graft.tools.Artifacts.leafFiles(spark, dir).map(st =>
       org.apache.spark.paths.SparkPath.fromFileStatus(st).urlEncoded).toSet
-  }
 
   /** File paths whose stats row satisfies `intersects` — a predicate
     * over the `min_<c>`/`max_<c>` columns stating that the file's

@@ -1005,7 +1005,7 @@ object GraphIndex {
       coalesce(col("_c"), lit(-2.0)).as("_c")), maxDegree)
 
   /** Load the committed adjacency. Tombstoned ids (see [[delete]])
-    * are anti-joined out on BOTH endpoints: an edge from a deleted
+    * are filtered out on BOTH endpoints: an edge from a deleted
     * node must not seed walks, and an edge TO one is a dangling edge
     * that would waste beam budget on a vector the serve must not
     * return — so a walk over the loaded adjacency never reaches a
@@ -1057,7 +1057,7 @@ object GraphIndex {
     * exact protocol): [[Artifacts.delete]] appends ids to
     * the current generation's tombstone sidecar and touches no
     * adjacency or vector file (spec-asserted). [[load]]/[[loadVectors]]
-    * anti-join the bounded deleted-id set, so a probe over the loaded
+    * filter out the bounded deleted-id set, so a probe over the loaded
     * index equals a probe over the same graph with the deleted nodes
     * and every edge touching them absent. [[compact]] folds the
     * sidecar in on the retrain cadence; until then maintenance

@@ -12,7 +12,7 @@ import graft.tools.Artifacts
   *
   * At corpus scale the clustering is amortized: `build` trains the
   * centroids and assigns every vector its cell ONCE; `save` writes the
-  * corpus **partitioned by cell** plus a tiny centroid table; `topK`
+  * corpus **partitioned by cell** plus a tiny centroid file; `topK`
   * on a loaded index plans the nProbe cell cut as a PARTITION FILTER —
   * the scan reads only nProbe/nCentroids of the files, which is the
   * entire point of IVF on a 100 TB corpus (spec-asserted via
@@ -60,7 +60,7 @@ object IvfIndex {
 
   /** Persist: corpus partitioned by cell (one directory per cell —
     * the unit of query-time pruning) written into an immutable POOL
-    * dir, plus a generation holding the (cell, centroid) table and a
+    * dir, plus a generation holding the (cell, centroid) file and a
     * `corpus_dirs` manifest pointing at the pool (ADVICE r12: with
     * the corpus INSIDE the generation dir, incremental maintenance
     * either mutated a committed generation in place — torn reads — or
@@ -86,13 +86,14 @@ object IvfIndex {
 
   private val CorpusDirs = "corpus_dirs"
 
+  /** The centroids as a lines file, `cell\tv0,v1,…`: read back on the
+    * driver with no Spark job, and exact — `Double.toString` round-trips
+    * every double.
+    */
   private def writeCentroids(spark: SparkSession,
-      centroids: Array[Array[Double]])(gen: String): Unit = {
-    import spark.implicits._
-    centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cell", "centroid")
-      .repartition(1).write.parquet(s"$gen/centroids")
-  }
+      centroids: Array[Array[Double]])(gen: String): Unit =
+    Artifacts.writeLinesFile(spark, s"$gen/centroids",
+      centroids.toSeq.zipWithIndex.map { case (c, i) => s"$i\t${c.mkString(",")}" })
 
   /** The CURRENT committed generation's corpus dirs — the spec-facing
     * physical-layout accessor.
@@ -101,22 +102,20 @@ object IvfIndex {
     Artifacts.dirsOf(spark, path, Artifacts.requireGen(spark, path),
       CorpusDirs)
 
+  /** The generation's corpus: ONE scan over all its pool dirs, with
+    * `cell` a partition column, planned from a driver-side walk
+    * ([[graft.tools.Artifacts.readParquet]]) — no listing or
+    * schema-inference job, however many cells or pool dirs.
+    */
   private def readCorpus(spark: SparkSession, path: String,
       gen: String): DataFrame =
-    // one read PER pool dir, deliberately: the IVF pools are
-    // cell-partitioned (partitionBy("cell")), and a single multi-root
-    // read trips Spark's cross-root partition-structure check
-    // ([CONFLICTING_DIRECTORY_STRUCTURES], IndexMaintStreamSpec) — the
-    // flat-pool indexes (PQ/graph/semantic/minhash) use the one-shot
-    // multi-path read instead
-    Artifacts.dirsOf(spark, path, gen, CorpusDirs)
-      .map(spark.read.parquet(_)).reduce(_ unionAll _)
+    Artifacts.readParquet(spark, Artifacts.dirsOf(spark, path, gen, CorpusDirs),
+      "cell")
 
   private def centroidsOf(spark: SparkSession,
       gen: String): Array[Array[Double]] =
-    spark.read.parquet(s"$gen/centroids")
-      .orderBy("cell").collect()
-      .map(_.getSeq[Double](1).toArray)
+    Artifacts.readLinesFile(spark, s"$gen/centroids").map(_.split("\t", 2))
+      .sortBy(_(0).toInt).map(_(1).split(",").map(_.toDouble)).toArray
 
   /** Δ rows at the frozen centroids: (id, vec, cell). */
   private def assign(newVectors: DataFrame, idCol: String, vecCol: String,
@@ -189,13 +188,17 @@ object IvfIndex {
       parent = Some(gen), copy = Seq("centroids"), tag = tag)
   }
 
+  /** Open the current committed generation. Centroids, manifest and
+    * file listing are read on the driver, so a load without tombstones
+    * starts no Spark job; with tombstones it starts one, the read of
+    * the sidecar's ids. Those become a set filter beside the cell
+    * partition filter (which still prunes the scan — IvfIndexSpec
+    * asserts PartitionFilters on a deleted index too), so a [[topK]]
+    * over the loaded index is one job either way.
+    */
   def load(spark: SparkSession, path: String,
       idCol: String, vecCol: String): Index = {
     val gen = Artifacts.requireGen(spark, path)
-    // the tombstone anti-join runs AFTER the cell partition filter (the
-    // cell predicate pushes through its streamed side, so pruning is
-    // intact — IvfIndexSpec asserts PartitionFilters on the deleted
-    // index too)
     Index(centroidsOf(spark, gen), Artifacts.dropTombstoned(spark, gen,
       readCorpus(spark, path, gen), idCol), idCol, vecCol, pruned = true)
   }

@@ -227,7 +227,7 @@ object PqIndex {
 
   /** Load a saved artifact: (codebook, codes). Codebook collect is
     * bounded by M×K rows. The tombstone sidecar (if any) is consulted
-    * HERE — an anti-join on the codes table's id column, so every ADC
+    * HERE — a filter on the codes table's id column, so every ADC
     * scan over a loaded index sees the post-delete corpus with zero
     * changes to the probe path.
     */

@@ -1,8 +1,17 @@
 package graft.tools
 
-import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.{FileStatusCache,
+  HadoopFsRelation, InMemoryFileIndex, PartitionPath, PartitionSpec}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetReadSupport}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, MapType,
+  StructField, StructType}
 
 /** Hadoop-FS helpers for DURABLE serving artifacts (saved indexes) —
   * unlike [[Scratch]]'s java.io locals, these resolve the path's own
@@ -138,20 +147,104 @@ object Artifacts {
     * reads on the driver, stopping at the first non-empty file; no
     * Spark job.
     */
-  private def holdsRows(spark: SparkSession, dir: String): Boolean = {
-    val (f, p) = fs(spark, dir)
-    val files = f.listFiles(p, true)
-    var found = false
-    while (!found && files.hasNext) {
-      val st = files.next()
-      if (st.getPath.getName.endsWith(".parquet")) {
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st,
-            spark.sparkContext.hadoopConfiguration))
-        try found = r.getRecordCount > 0 finally r.close()
+  private def holdsRows(spark: SparkSession, dir: String): Boolean =
+    leafFiles(spark, dir).exists(st =>
+      st.getPath.getName.endsWith(".parquet") &&
+        withReader(spark, st)(_.getRecordCount > 0))
+
+  private def withReader[T](spark: SparkSession, st: FileStatus)(
+      body: ParquetFileReader => T): T = {
+    val r = ParquetFileReader.open(
+      HadoopInputFile.fromStatus(st, spark.sparkContext.hadoopConfiguration))
+    try body(r) finally r.close()
+  }
+
+  /** The data files under `path` (the path itself when it is a file):
+    * a driver-side `listStatus` walk, the one leaf walk of the serving
+    * artifacts and of [[graft.layout.StatsPrunedRead]]. It starts no
+    * Spark job and reads no owner or permission — `listFiles` builds a
+    * `LocatedFileStatus` per entry, whose constructor does, and
+    * Hadoop's non-native local filesystem forks `ls -ld` for each. The
+    * returned statuses carry path, length and times only. Hidden names
+    * (a leading '_' or '.': `_SUCCESS`, checksum files, staging dirs)
+    * are skipped exactly as Spark's file index skips them; partition
+    * directories are recursed.
+    */
+  private[graft] def leafFiles(spark: SparkSession,
+      path: String): Seq[FileStatus] = {
+    val (f, p) = fs(spark, path)
+    def walk(d: Path): Iterator[FileStatus] =
+      f.listStatus(d).iterator.flatMap { st =>
+        val name = st.getPath.getName
+        if (name.startsWith("_") || name.startsWith(".")) Iterator.empty
+        else if (st.isDirectory) walk(st.getPath)
+        else Iterator.single(new FileStatus(st.getLen, false,
+          st.getReplication, st.getBlockSize, st.getModificationTime,
+          st.getPath))
       }
+    walk(p).toSeq
+  }
+
+  /** One parquet scan over the [[leafFiles]] of every path in `paths`,
+    * planned on the driver: the file index is filled from the walk and
+    * the schema is read from one footer, so no listing job and no
+    * schema-inference job runs, now or when the frame is executed.
+    * `partitionBy` names the int-valued `name=value` directory levels
+    * of a `partitionBy` write (the IVF `cell`). Each path is its own
+    * partition base, so sibling pool dirs read as one relation, which
+    * one multi-path `spark.read.parquet` refuses
+    * ([CONFLICTING_DIRECTORY_STRUCTURES]). A file outside every
+    * partition dir (the zero-row flat file of an empty partitioned
+    * pool) holds no row and is not scanned. Columns, their order and
+    * their nullability are those `spark.read.parquet` gives.
+    */
+  private[graft] def readParquet(spark: SparkSession, paths: Seq[String],
+      partitionBy: String*): DataFrame = {
+    val leaves = paths.map { d =>
+      val (f, p) = fs(spark, d)
+      f.makeQualified(p) -> leafFiles(spark, d).toArray
+    }.toMap
+    val files = leaves.values.flatten.toSeq
+    require(files.nonEmpty, s"no data file under ${paths.mkString(", ")}")
+    val partSchema = StructType(partitionBy.map(StructField(_, IntegerType)))
+    val partitions = if (partitionBy.isEmpty) Nil
+      else files.map(_.getPath.getParent).distinct.flatMap { dir =>
+        val levels = Iterator.iterate(dir)(_.getParent)
+          .take(partitionBy.size).map(_.getName.split("=", 2)).toSeq.reverse
+        if (levels.map(_.head) != partitionBy) None
+        else Some(PartitionPath(
+          InternalRow.fromSeq(levels.map(_(1).toInt)), dir))
+      }
+    // every file here was written by Spark, which stores its schema in
+    // the footer; Spark's own inference reads that schema first
+    val written = withReader(spark, files.head)(r => DataType.fromJson(
+      r.getFooter.getFileMetaData.getKeyValueMetaData
+        .get(ParquetReadSupport.SPARK_METADATA_KEY)).asInstanceOf[StructType])
+    val dataSchema = StructType(written.fields
+      .filterNot(f => partitionBy.contains(f.name))
+      .map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    val filled = new FileStatusCache {
+      override def getLeafFiles(p: Path): Option[Array[FileStatus]] =
+        leaves.get(p)
+      def putLeafFiles(p: Path, leafFiles: Array[FileStatus]): Unit = ()
+      def invalidateAll(): Unit = ()
     }
-    found
+    val index = new InMemoryFileIndex(spark, leaves.keys.toSeq, Map.empty,
+      None, filled, Some(PartitionSpec(partSchema, partitions)), None)
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, partSchema,
+      dataSchema, None, new ParquetFileFormat, Map.empty)(spark))
+  }
+
+  /** `t` with every nested field, element and value nullable — what a
+    * file source reads a written schema as.
+    */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+      valueContainsNull = true)
+    case other => other
   }
 
   /** Delete pool subdirs whose token appears in none of
@@ -324,21 +417,18 @@ object Artifacts {
         .filter(_.endsWith(".parquet")).toSet
     }
 
-  private def antiJoin(df: DataFrame, ids: DataFrame,
-      idCols: Seq[String]): DataFrame =
-    idCols.foldLeft(df)((d, c) => d.join(ids, d(c) === ids("id"), "left_anti"))
-
-  /** The load-side tombstone anti-join: `df` minus every row whose
-    * `idCols` (each one) name an id tombstoned in `gen`, so every
-    * probe over a loaded index sees the post-delete corpus with zero
-    * changes to the probe path. The sidecar is small by the
-    * compaction cadence, so the join rides a broadcast; a partition
-    * filter on `df` still pushes through the streamed side.
+  /** The load-side tombstone filter: `df` minus every row whose
+    * `idCols` (any one of them) name an id tombstoned in `gen` — the
+    * [[snapshot]] of the sidecar folded in, so every probe over a
+    * loaded index sees the post-delete corpus with zero changes to the
+    * probe path. The ids are read once, here, into a literal set
+    * filter: a query over the frame plans no extra job, and a sidecar
+    * file written after this call is seen by the next load only. A
+    * partition filter on `df` still reaches its scan.
     */
   private[graft] def dropTombstoned(spark: SparkSession, gen: String,
       df: DataFrame, idCols: String*): DataFrame =
-    if (!exists(spark, s"$gen/tombstones")) df
-    else antiJoin(df, spark.read.parquet(s"$gen/tombstones"), idCols)
+    snapshot(spark, gen).fold(df, idCols: _*)
 
   /** Logical delete, the retraction half of index maintenance: append
     * the distinct ids in `idCol` to the current generation's tombstone
@@ -351,25 +441,36 @@ object Artifacts {
       .write.mode("append").parquet(s"${requireGen(spark, root)}/tombstones")
 
   /** A FILE-level tombstone snapshot: the sidecar files listed once and
-    * their ids checkpointed once (ADVICE r12 — snapshotting ids and
-    * anti-joining the sidecar afterwards silently dropped a delete
+    * their ids read once, on the driver (ADVICE r12 — snapshotting ids
+    * and anti-joining the sidecar afterwards silently dropped a delete
     * landing in between). Compaction and rebuilds [[fold]] every data
     * rewrite against the same frozen ids and pass `files` as
     * [[publishGen]]'s `folded`: a delete landing mid-compact is
-    * carried into the new generation instead of being lost.
+    * carried into the new generation instead of being lost. The
+    * sidecar is small by the compaction cadence, so its distinct
+    * non-null ids are held as a set.
     */
   private[graft] final case class Snapshot(files: Set[String],
-      ids: Option[DataFrame]) {
+      ids: Seq[Any]) {
+    /** `df` without the rows whose `idCols` (any one) hold a snapshot
+      * id — a left anti-join on each column: a null id matches no
+      * tombstone, so its row is kept.
+      */
     def fold(df: DataFrame, idCols: String*): DataFrame =
-      ids.fold(df)(antiJoin(df, _, idCols))
+      if (ids.isEmpty) df
+      else idCols.foldLeft(df)((d, c) =>
+        d.filter(col(c).isNull || !col(c).isin(ids: _*)))
   }
 
+  /** One Spark job when the sidecar has files (the collect of its
+    * ids), none otherwise.
+    */
   private[graft] def snapshot(spark: SparkSession, gen: String): Snapshot = {
     val files = tombstoneFiles(spark, gen)
     Snapshot(files,
-      if (files.isEmpty) None
-      else Some(spark.read.parquet(files.toSeq: _*).select(col("id"))
-        .localCheckpoint()))
+      if (files.isEmpty) Nil
+      else readParquet(spark, files.toSeq).select(col("id")).collect()
+        .iterator.map(_.get(0)).filter(_ != null).toSeq.distinct)
   }
 
   /** (current generation, in-place append target) — the target is the

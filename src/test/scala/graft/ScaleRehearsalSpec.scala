@@ -71,6 +71,12 @@ class ScaleRehearsalSpec extends SparkTestBase {
       assert(report.contains(s"shuffled path (cutoff forced to 1M): ${factor * e} edges / ${factor * t} triangles"), report)
       assert(report.contains(s"both paths equal and exactly ${factor}x base: OK"), report)
       assert(report.contains("## AQE skew-join check"), report)
+      // at 2x sf0.001 no shuffle partition nears the 256k skew threshold:
+      // the check must say it cannot judge the split, not report NO
+      val largest = """- largest shuffle partition: (\d+) bytes \(skew threshold 262144 bytes\)""".r
+        .findFirstMatchIn(report).map(_.group(1).toLong)
+      assert(largest.exists(b => b > 0 && b < 262144L), report)
+      assert(report.contains("contains `skew=true`: no verdict (threshold not reached)"), report)
     } finally Files.deleteIfExists(out)
   }
 }

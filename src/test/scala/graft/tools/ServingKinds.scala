@@ -10,12 +10,15 @@ import graft.streaming.IndexMaintStream
 /** The five serving indexes behind one small face, for the specs that
   * pin the shared generation lifecycle once for every kind: a tiny
   * seeded base and Δ, how to save, compact and read each index back,
-  * and one serve call over it.
+  * and one serve call over it. `live` loads the index and returns the
+  * frame its ids are served from.
   */
 final case class ServingKind(name: String, kind: IndexMaintStream.Kind,
     base: DataFrame, delta: DataFrame, save: String => Unit,
-    compact: String => Unit, liveIds: String => Set[Long],
-    serve: String => Long)
+    compact: String => Unit, live: String => DataFrame,
+    serve: String => Long) {
+  def liveIds(root: String): Set[Long] = ServingKinds.ids(live(root), kind.idCol)
+}
 
 object ServingKinds {
 
@@ -35,7 +38,7 @@ object ServingKinds {
       .toDF("doc_id", "text").localCheckpoint()
   }
 
-  private def ids(df: DataFrame, col0: String): Set[Long] =
+  def ids(df: DataFrame, col0: String): Set[Long] =
     df.select(col(col0)).distinct().collect().map(_.getLong(0)).toSet
 
   private def query(base: DataFrame): Seq[Float] =
@@ -52,8 +55,7 @@ object ServingKinds {
         root => IvfIndex.save(IvfIndex.build(vBase, "vec_id", "embedding",
           nCentroids = 4, iters = 1), root),
         root => IvfIndex.compact(spark, root, "vec_id", "embedding"),
-        root => ids(IvfIndex.load(spark, root, "vec_id", "embedding")
-          .corpus, "vec_id"),
+        root => IvfIndex.load(spark, root, "vec_id", "embedding").corpus,
         root => IvfIndex.topK(IvfIndex.load(spark, root, "vec_id",
           "embedding"), q, k = 5, nProbe = 4).count()),
       ServingKind("pq", IndexMaintStream.PqKind(), vBase, vDelta,
@@ -64,7 +66,7 @@ object ServingKinds {
             root)
         },
         root => PqIndex.compact(spark, root),
-        root => ids(PqIndex.load(spark, root)._2, "vec_id"),
+        root => PqIndex.load(spark, root)._2,
         root => {
           val (cb, codes) = PqIndex.load(spark, root)
           PqIndex.topK(cb, codes, vBase.unionAll(vDelta), "vec_id",
@@ -74,8 +76,7 @@ object ServingKinds {
         root => MinHashIndex.save(MinHashIndex.build(dBase, "doc_id",
           "text"), root),
         root => MinHashIndex.compact(spark, root, "doc_id"),
-        root => ids(MinHashIndex.load(spark, root, "doc_id").shingles,
-          "doc_id"),
+        root => MinHashIndex.load(spark, root, "doc_id").shingles,
         root => MinHashIndex.classify(MinHashIndex.load(spark, root,
           "doc_id"), dBase, "doc_id", "text", 0.5)
           .filter(col("dup_of").isNotNull).count()),
@@ -83,8 +84,8 @@ object ServingKinds {
         root => SemanticIndex.save(SemanticIndex.build(vBase, "vec_id",
           "embedding", threshold = 0.9, blockSize = 8, signBits = 2), root),
         root => SemanticIndex.compact(spark, root, "vec_id", "embedding"),
-        root => ids(SemanticIndex.load(spark, root, "vec_id", "embedding")
-          .corpusBlocked, "vec_id"),
+        root => SemanticIndex.load(spark, root, "vec_id", "embedding")
+          .corpusBlocked,
         root => SemanticIndex.classify(SemanticIndex.load(spark, root,
           "vec_id", "embedding"), vBase)
           .filter(col("dup_of").isNotNull).count()),
@@ -93,7 +94,7 @@ object ServingKinds {
         root => GraphIndex.saveWithVectors(GraphIndex.build(vBase, "vec_id",
           "embedding", m = 4), vBase, "vec_id", "embedding", root),
         root => GraphIndex.compact(spark, root),
-        root => ids(GraphIndex.loadVectors(spark, root).get, "vec_id"),
+        root => GraphIndex.loadVectors(spark, root).get,
         root => GraphIndex.topK(GraphIndex.load(spark, root),
           GraphIndex.loadVectors(spark, root).get, "vec_id", "embedding", q,
           k = 5, budget = 24).count()))
