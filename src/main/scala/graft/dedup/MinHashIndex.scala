@@ -65,7 +65,7 @@ object MinHashIndex {
     * for the lexical index): both corpus-sized sides land under ONE
     * immutable pool dir (`<pool>/buckets`, `<pool>/shingles`) and the
     * committed generation holds an (ord, dir) `part_dirs` manifest
-    * plus the tiny params table — [[appendPublish]] passes frozen
+    * plus the tiny params file — [[appendPublish]] passes frozen
     * part files between generations BY REFERENCE. A rebuild racing a
     * concurrent [[load]] can never be read torn (new params, old
     * buckets).
@@ -74,12 +74,9 @@ object MinHashIndex {
     val spark = index.buckets.sparkSession
     Artifacts.publishGen(spark, path,
       Seq(PartDirs -> Seq(writeSides(index.buckets, index.shingles, path))),
-      write = { gen =>
-        import spark.implicits._
-        Seq((index.shingleK, index.bands, index.rowsPerBand))
-          .toDF("shingle_k", "bands", "rows_per_band")
-          .repartition(1).write.parquet(s"$gen/params")
-      })
+      write = gen => Artifacts.writeParams(spark, s"$gen/params",
+        "shingle_k" -> index.shingleK, "bands" -> index.bands,
+        "rows_per_band" -> index.rowsPerBand))
   }
 
   private val PartDirs = "part_dirs"
@@ -95,20 +92,28 @@ object MinHashIndex {
 
   private def readSide(spark: SparkSession, path: String, gen: String,
       side: String): DataFrame =
-    spark.read.parquet(Artifacts.dirsOf(spark, path, gen, PartDirs)
-      .map(d => s"$d/$side"): _*)
+    Artifacts.readParquet(spark, Artifacts.dirsOf(spark, path, gen, PartDirs)
+      .map(d => s"$d/$side"))
 
+  /** The saved (shingle_k, bands, rows_per_band), read BY NAME: a
+    * reordered save must never band differently than the saved index.
+    */
+  private def paramsOf(spark: SparkSession, gen: String): (Int, Int, Int) = {
+    val p = Artifacts.readParams(spark, s"$gen/params")
+    (p("shingle_k").toInt, p("bands").toInt, p("rows_per_band").toInt)
+  }
+
+  /** Open the current committed generation: params, manifest and file
+    * listing are read on the driver, so a load starts no Spark job —
+    * one with tombstones, the read of the sidecar's ids, which both
+    * sides then drop.
+    */
   def load(spark: SparkSession, path: String, idCol: String): Index = {
     val gen = Artifacts.requireGen(spark, path)
-    // by NAME, not position: a column reorder in save must fail loudly
-    // here, never silently swap shingle_k/bands and band differently
-    // than the saved index (ADVICE r10)
-    val p = spark.read.parquet(s"$gen/params").collect()(0)
-    def side(name: String) = Artifacts.dropTombstoned(spark, gen,
-      readSide(spark, path, gen, name), idCol)
-    Index(side("buckets"), side("shingles"),
-      idCol, p.getAs[Int]("shingle_k"), p.getAs[Int]("bands"),
-      p.getAs[Int]("rows_per_band"))
+    val (k, bands, rows) = paramsOf(spark, gen)
+    val snap = Artifacts.snapshot(spark, gen)
+    def side(name: String) = snap.fold(readSide(spark, path, gen, name), idCol)
+    Index(side("buckets"), side("shingles"), idCol, k, bands, rows)
   }
 
   /** Logical delete (takedowns/retractions — the maintenance
@@ -151,10 +156,8 @@ object MinHashIndex {
     */
   private def bandDelta(spark: SparkSession, gen: String,
       newDocs: DataFrame, idCol: String, textCol: String): Index = {
-    val p = spark.read.parquet(s"$gen/params").collect()(0)
-    build(newDocs, idCol, textCol,
-      p.getAs[Int]("shingle_k"), p.getAs[Int]("bands"),
-      p.getAs[Int]("rows_per_band"))
+    val (k, bands, rows) = paramsOf(spark, gen)
+    build(newDocs, idCol, textCol, k, bands, rows)
   }
 
   /** Incremental maintenance: band + shingle ONLY the new docs under

@@ -96,38 +96,38 @@ object SemanticIndex {
         CorpusDirs -> Seq(Artifacts.writePool(index.corpusBlocked, path))),
       parent = parent, folded = folded, tag = tag,
       write = { gen =>
-        import spark.implicits._
-        b.centroids.zipWithIndex
-          .map { case (cv, i) => (i, cv.toSeq) }.toSeq.toDF("cell", "cv")
-          .repartition(1).write.parquet(s"$gen/centroids")
-        Seq((b.blockSize, b.signBits, index.threshold))
-          .toDF("block_size", "sign_bits", "threshold")
-          .repartition(1).write.parquet(s"$gen/params")
+        Artifacts.writeVectorsFile(spark, s"$gen/centroids",
+          b.centroids.toSeq.zipWithIndex.map { case (cv, i) => (Seq(i), cv) })
+        Artifacts.writeParams(spark, s"$gen/params", "block_size" -> b.blockSize,
+          "sign_bits" -> b.signBits, "threshold" -> index.threshold)
       })
   }
 
   private def readCorpus(spark: SparkSession, path: String,
       gen: String): DataFrame =
-    spark.read.parquet(Artifacts.dirsOf(spark, path, gen, CorpusDirs): _*)
+    Artifacts.readParquet(spark, Artifacts.dirsOf(spark, path, gen, CorpusDirs))
 
   /** The frozen halves only (params/centroids/reps — everything Δ
     * assignment needs, nothing corpus-sized): shared by [[load]] and
-    * [[append]] so an append never touches the corpus table.
+    * [[append]] so an append never touches the corpus table. Read on
+    * the driver, no Spark job.
     */
   private def loadBlocking(spark: SparkSession, path: String,
       gen: String): (Dedup.SemanticBlocking, Double) = {
-    // by NAME, not position: a column reorder in save must fail
-    // loudly, never silently swap block_size/sign_bits (ADVICE r10)
-    val p = spark.read.parquet(s"$gen/params").collect()(0)
-    val centroids = spark.read.parquet(s"$gen/centroids")
-      .orderBy("cell").collect()
-      .map(r => r.getSeq[Double](r.fieldIndex("cv")).toArray)
+    // by NAME, not position: a reordered save must never swap
+    // block_size/sign_bits
+    val p = Artifacts.readParams(spark, s"$gen/params")
+    val centroids = Artifacts.readVectorsFile(spark, s"$gen/centroids")
+      .sortBy(_._1.head).map(_._2).toArray
     val blocking = Dedup.SemanticBlocking(centroids,
-      spark.read.parquet(Artifacts.dirsOf(spark, path, gen, RepsDirs): _*),
-      p.getAs[Int]("block_size"), p.getAs[Int]("sign_bits"))
-    (blocking, p.getAs[Double]("threshold"))
+      Artifacts.readParquet(spark, Artifacts.dirsOf(spark, path, gen, RepsDirs)),
+      p("block_size").toInt, p("sign_bits").toInt)
+    (blocking, p("threshold").toDouble)
   }
 
+  /** Open the current committed generation: no Spark job, one with
+    * tombstones (the read of the sidecar's ids).
+    */
   def load(spark: SparkSession, path: String, idCol: String,
       vecCol: String): Index = {
     val gen = Artifacts.requireGen(spark, path)
@@ -189,10 +189,9 @@ object SemanticIndex {
     val snap = Artifacts.snapshot(spark, gen)
     val live = snap.fold(
       readCorpus(spark, path, gen).select(col(idCol), col(vecCol)), idCol)
-    val p = spark.read.parquet(s"$gen/params").collect()(0)
+    val p = Artifacts.readParams(spark, s"$gen/params")
     val idx = build(live.localCheckpoint(), idCol, vecCol,
-      p.getAs[Double]("threshold"), p.getAs[Int]("block_size"),
-      p.getAs[Int]("sign_bits"))
+      p("threshold").toDouble, p("block_size").toInt, p("sign_bits").toInt)
     publishBuilt(idx, path, Some(gen), snap.files, tag)
   }
 

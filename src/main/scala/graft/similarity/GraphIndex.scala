@@ -984,7 +984,7 @@ object GraphIndex {
 
   private def readAdj(spark: SparkSession, path: String,
       gen: String): DataFrame =
-    spark.read.parquet(Artifacts.dirsOf(spark, path, gen, AdjDirs): _*)
+    Artifacts.readParquet(spark, Artifacts.dirsOf(spark, path, gen, AdjDirs))
       .select(col("src"), col("nb"), col("_c").cast("double"))
 
   /** Per-src degree cap by STORED edge score — the serve-cost bound
@@ -1047,7 +1047,7 @@ object GraphIndex {
     val dirs = Artifacts.dirsOf(spark, path, gen, VecDirs)
     if (dirs.isEmpty) None
     else {
-      val raw = spark.read.parquet(dirs: _*)
+      val raw = Artifacts.readParquet(spark, dirs)
       Some(Artifacts.dropTombstoned(spark, gen, raw, raw.columns.head))
     }
   }
@@ -1086,7 +1086,7 @@ object GraphIndex {
     val vecs =
       if (vDirs.isEmpty) Nil
       else {
-        val raw = spark.read.parquet(vDirs: _*)
+        val raw = Artifacts.readParquet(spark, vDirs)
         Seq(Artifacts.writePool(snap.fold(raw, raw.columns.head), path))
       }
     publishFrom(spark, path, gen, Seq(adj), vecs, snap.files, tag = None)

@@ -1,9 +1,21 @@
 package graft.similarity
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
-import graft.functions.VectorOps
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference,
+  Descending, GenericInternalRow, InterpretedOrdering, SortOrder,
+  UnsafeArrayData, UnsafeProjection}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType,
+  StructField, StructType}
+import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.{VectorKernels, VectorOps}
 import graft.tools.Artifacts
 
 /** Build-once / serve-many IVF index — the production half of
@@ -12,12 +24,21 @@ import graft.tools.Artifacts
   *
   * At corpus scale the clustering is amortized: `build` trains the
   * centroids and assigns every vector its cell ONCE; `save` writes the
-  * corpus **partitioned by cell** plus a tiny centroid file; `topK`
-  * on a loaded index plans the nProbe cell cut as a PARTITION FILTER —
-  * the scan reads only nProbe/nCentroids of the files, which is the
-  * entire point of IVF on a 100 TB corpus (spec-asserted via
-  * `PartitionFilters` in IvfIndexSpec, the same plan-shape guard
-  * PlanSpec uses for the pruned date scan).
+  * corpus **partitioned by cell** plus a tiny centroid file.
+  *
+  * Serving: a loaded [[Index]] keeps the file list its load walked,
+  * and its first [[topK]] builds the SERVING BLOCKS — an RDD with one
+  * partition per cell, partition c reading only cell c's files (the
+  * load's tombstoned ids dropped as the block is built), persisted at
+  * MEMORY_AND_DISK. A probe is one job over its nProbe partitions: a
+  * cold probe reads only the probed cells' files, which is the entire
+  * point of IVF on a 100 TB corpus, and a warm one reads nothing and
+  * plans no SQL (IvfIndexSpec asserts both from task metrics). The
+  * blocks belong to the loaded value, so a delete or an append after
+  * the load is seen by the next load only; [[Index.unpersist]]
+  * releases them, and the ContextCleaner frees those of an `Index`
+  * nothing references any more. Spark's storage memory is the only
+  * bound.
   *
   * Centroid training is shared with [[Similarity.ivfTopK]]
   * (deterministic hash-ordered init, fixed Lloyd rounds, decimal-exact
@@ -25,16 +46,34 @@ import graft.tools.Artifacts
   */
 object IvfIndex {
 
+  /** Where a loaded index's rows are: the walk of its generation's
+    * corpus dirs and the tombstoned ids its load collected.
+    */
+  final case class Layout(walk: Artifacts.ParquetWalk, dead: Seq[Any])
+
   /** centroids(i) = cell i's center; `corpus` carries (id, vec, cell).
-    * `pruned` is true when `corpus` comes from a cell-partitioned
-    * on-disk layout (cell cuts become partition pruning). `cached` is
+    * `layout` is set when `corpus` is a load of a cell-partitioned
+    * on-disk layout: the serving blocks then read its files cell by
+    * cell, and otherwise shuffle `corpus` by cell once. `cached` is
     * the upstream snapshot [[build]] pinned for its multi-pass
     * training — [[save]] (or [[Index.unpersist]]) releases it.
     */
   final case class Index(centroids: Array[Array[Double]], corpus: DataFrame,
-      idCol: String, vecCol: String, pruned: Boolean,
-      cached: Option[DataFrame] = None) {
-    def unpersist(): Unit = cached.foreach(_.unpersist())
+      idCol: String, vecCol: String, cached: Option[DataFrame] = None,
+      layout: Option[Layout] = None) {
+    private var blocks: RDD[Array[InternalRow]] = _
+
+    /** The serving blocks, built on the first call. */
+    private[similarity] def cells: RDD[Array[InternalRow]] = synchronized {
+      if (blocks == null) blocks = servingBlocks(this)
+      blocks
+    }
+
+    /** Release [[build]]'s training cache and the serving blocks. */
+    def unpersist(): Unit = {
+      cached.foreach(_.unpersist())
+      synchronized { if (blocks != null) blocks.unpersist(blocking = false) }
+    }
   }
 
   /** Train centroids and assign cells in one distributed pass.
@@ -55,7 +94,7 @@ object IvfIndex {
     val centroids = Similarity.trainCentroids(work, idCol, vecCol, nCentroids, iters)
     Index(centroids,
       work.withColumn("cell", Similarity.cellColumn(col(vecCol), centroids)),
-      idCol, vecCol, pruned = false, cached = Some(work))
+      idCol, vecCol, cached = Some(work))
   }
 
   /** Persist: corpus partitioned by cell (one directory per cell —
@@ -86,14 +125,11 @@ object IvfIndex {
 
   private val CorpusDirs = "corpus_dirs"
 
-  /** The centroids as a lines file, `cell\tv0,v1,…`: read back on the
-    * driver with no Spark job, and exact — `Double.toString` round-trips
-    * every double.
-    */
+  /** The centroids as a vectors file, `cell\tv0,v1,…`. */
   private def writeCentroids(spark: SparkSession,
       centroids: Array[Array[Double]])(gen: String): Unit =
-    Artifacts.writeLinesFile(spark, s"$gen/centroids",
-      centroids.toSeq.zipWithIndex.map { case (c, i) => s"$i\t${c.mkString(",")}" })
+    Artifacts.writeVectorsFile(spark, s"$gen/centroids",
+      centroids.toSeq.zipWithIndex.map { case (c, i) => (Seq(i), c) })
 
   /** The CURRENT committed generation's corpus dirs — the spec-facing
     * physical-layout accessor.
@@ -114,8 +150,8 @@ object IvfIndex {
 
   private def centroidsOf(spark: SparkSession,
       gen: String): Array[Array[Double]] =
-    Artifacts.readLinesFile(spark, s"$gen/centroids").map(_.split("\t", 2))
-      .sortBy(_(0).toInt).map(_(1).split(",").map(_.toDouble)).toArray
+    Artifacts.readVectorsFile(spark, s"$gen/centroids").sortBy(_._1.head)
+      .map(_._2).toArray
 
   /** Δ rows at the frozen centroids: (id, vec, cell). */
   private def assign(newVectors: DataFrame, idCol: String, vecCol: String,
@@ -191,16 +227,18 @@ object IvfIndex {
   /** Open the current committed generation. Centroids, manifest and
     * file listing are read on the driver, so a load without tombstones
     * starts no Spark job; with tombstones it starts one, the read of
-    * the sidecar's ids. Those become a set filter beside the cell
-    * partition filter (which still prunes the scan — IvfIndexSpec
-    * asserts PartitionFilters on a deleted index too), so a [[topK]]
+    * the sidecar's ids. Those become a set filter on `corpus` and are
+    * dropped from the serving blocks as they are built, so a [[topK]]
     * over the loaded index is one job either way.
     */
   def load(spark: SparkSession, path: String,
       idCol: String, vecCol: String): Index = {
     val gen = Artifacts.requireGen(spark, path)
-    Index(centroidsOf(spark, gen), Artifacts.dropTombstoned(spark, gen,
-      readCorpus(spark, path, gen), idCol), idCol, vecCol, pruned = true)
+    val walk = Artifacts.walkParquet(spark,
+      Artifacts.dirsOf(spark, path, gen, CorpusDirs), "cell")
+    val snap = Artifacts.snapshot(spark, gen)
+    Index(centroidsOf(spark, gen), snap.fold(walk.frame, idCol), idCol, vecCol,
+      layout = Some(Layout(walk, snap.ids)))
   }
 
   /** Logical delete — the retraction half of index maintenance
@@ -326,7 +364,7 @@ object IvfIndex {
     * (≤ nCentroids values, bounded collect) is applied as a STATIC
     * `isin` before the join, so on a loaded index the scan still
     * prunes non-probed cells at the partition level (spec-asserted
-    * via PartitionFilters, same guard as the single-query path); the
+    * via PartitionFilters in AnnStreamSpec); the
     * per-query restriction then rides the broadcast-hash join on
     * `cell`. Scoring is the fused native cosine kernel and the
     * per-query top-k is [[graft.functions.TopKAgg]] — at most k rows
@@ -389,18 +427,89 @@ object IvfIndex {
         col("hit._2").as(index.idCol), col("hit._1").as("cosine"))
   }
 
-  /** Approximate top-k: scan only the nProbe cells nearest the query.
-    * On a loaded index the `cell` predicate is a partition filter —
-    * non-probed cells are never read.
+  /** Approximate top-k over the nProbe cells nearest the query:
+    * (id, cosine), by cosine descending (a null cosine — a zero-norm
+    * vector — last), then id. One job over the probed partitions of
+    * the serving blocks ([[Index.cells]]): each task scores its cell
+    * with the native cosine kernel and keeps its k best; the driver
+    * merges them into a local frame. A cold probe reads only its
+    * cells' files; a warm one reads nothing.
     */
   def topK(index: Index, query: Seq[Float], k: Int, nProbe: Int = 4): DataFrame = {
+    val spark = index.corpus.sparkSession
     val probes = Similarity.nearestCentroids(index.centroids, query, nProbe)
-    val q = typedlit(query)
-    val cos = VectorOps.cosineFor(index.corpus, index.vecCol)
-    index.corpus
-      .filter(col("cell").isin(probes: _*))
-      .select(col(index.idCol), cos(col(index.vecCol), q).as("cosine"))
-      .orderBy(col("cosine").desc, col(index.idCol))
-      .limit(k)
+    val q = UnsafeArrayData.fromPrimitiveArray(query.toArray)
+    val idType = index.corpus.schema(index.idCol).dataType
+    val ord = new InterpretedOrdering(Seq(
+      SortOrder(BoundReference(1, DoubleType, nullable = true), Descending),
+      SortOrder(BoundReference(0, idType, nullable = true), Ascending)))
+    val perCell = if (probes.isEmpty) Array.empty[Array[InternalRow]]
+      else spark.sparkContext.runJob(index.cells,
+        (it: Iterator[Array[InternalRow]]) => best(it.flatMap(_.iterator.map { r =>
+          val cos = if (r.isNullAt(1)) null else VectorKernels.cosine(r.getArray(1), q)
+          new GenericInternalRow(Array[Any](r.get(0, idType), cos))
+        }), k, ord), probes)
+    val schema = StructType(Seq(index.corpus.schema(index.idCol),
+      StructField("cosine", DoubleType, nullable = true)))
+    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+    spark.createDataFrame(best(perCell.iterator.flatten, k, ord)
+      .map(toRow(_).asInstanceOf[Row]).toSeq.asJava, schema)
+  }
+
+  /** The k least rows of `rows` under `ord`, in order. */
+  private def best(rows: Iterator[InternalRow], k: Int,
+      ord: Ordering[InternalRow]): Array[InternalRow] = {
+    val heap = new java.util.PriorityQueue[InternalRow](k + 1, ord.reverse)
+    if (k > 0) rows.foreach { r =>
+      heap.add(r)
+      if (heap.size > k) heap.poll()
+    }
+    heap.toArray(Array.empty[InternalRow]).sorted(ord)
+  }
+
+  /** One partition per cell, each holding one array of its live
+    * (id, vec) rows, persisted at MEMORY_AND_DISK. A loaded index reads
+    * cell c's files into partition c and drops its tombstoned ids
+    * there; any other index shuffles its corpus by cell.
+    */
+  private def servingBlocks(index: Index): RDD[Array[InternalRow]] = {
+    val n = index.centroids.length
+    val fields = Seq(index.idCol, index.vecCol).map(index.corpus.schema(_))
+    require(fields(1).dataType match {
+      case ArrayType(FloatType, _) => true
+      case _ => false
+    }, s"IVF vectors are array<float>, got ${fields(1).dataType.sql}")
+    val idType = fields.head.dataType
+    val rows = index.layout match {
+      case Some(Layout(walk, dead)) =>
+        val gone = dead.map(canonical).toSet
+        walk.readPartitions(0 until n, fields.map(_.name)).mapPartitions(
+          _.filter(r => r.isNullAt(0) || !gone(canonical(r.get(0, idType)))),
+          preservesPartitioning = true)
+      case None =>
+        index.corpus.select(col(index.idCol), col(index.vecCol), col("cell"))
+          .queryExecution.toRdd.filter(!_.isNullAt(2))
+          .map(r => r.getInt(2) -> r.copy()).partitionBy(new HashPartitioner(n))
+          .values
+    }
+    // (id, vec) of each row, copied: the file reader reuses its rows
+    rows.mapPartitions({ it =>
+      val proj = UnsafeProjection.create(StructType(fields))
+      Iterator.single(it.map(proj(_).copy(): InternalRow).toArray)
+    }, preservesPartitioning = true)
+      .setName("ivf cells")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** A tombstone id as the set filter of [[graft.tools.Artifacts
+    * .Snapshot]] compares it: integral values as Long, strings as
+    * UTF8String.
+    */
+  private def canonical(v: Any): Any = v match {
+    case b: java.lang.Byte => b.longValue
+    case s: java.lang.Short => s.longValue
+    case i: java.lang.Integer => i.longValue
+    case s: String => UTF8String.fromString(s)
+    case other => other
   }
 }

@@ -178,7 +178,7 @@ object PqIndex {
     * the committed generation holds a (ord, dir) `codes_dirs`
     * manifest, so [[appendPublish]] passes frozen code files between
     * generations BY REFERENCE), plus the codebook as a tiny
-    * (subspace, code, centroid) table inside the generation. Atomic
+    * `subspace\tcode\tcentroid` vectors file inside the generation. Atomic
     * publish: a rebuild racing a concurrent load can never be read
     * torn (new codebook, old codes).
     */
@@ -186,20 +186,16 @@ object PqIndex {
     val spark = codes.sparkSession
     Artifacts.publishGen(spark, path,
       Seq(CodesDirs -> Seq(Artifacts.writePool(codes, path))),
-      write = { gen =>
-        import spark.implicits._
-        (for (s <- cb.centroids.indices; c <- cb.centroids(s).indices)
-          yield (s, c, cb.centroids(s)(c).toSeq))
-          .toDF("subspace", "code", "centroid")
-          .repartition(1).write.parquet(s"$gen/codebook")
-      })
+      write = gen => Artifacts.writeVectorsFile(spark, s"$gen/codebook",
+        for (s <- cb.centroids.indices; c <- cb.centroids(s).indices)
+          yield (Seq(s, c), cb.centroids(s)(c))))
   }
 
   private val CodesDirs = "codes_dirs"
 
   private def readCodes(spark: SparkSession, path: String,
       gen: String): DataFrame =
-    spark.read.parquet(Artifacts.dirsOf(spark, path, gen, CodesDirs): _*)
+    Artifacts.readParquet(spark, Artifacts.dirsOf(spark, path, gen, CodesDirs))
 
   /** The current committed generation's RAW codes scan (tombstones
     * NOT applied — [[load]] is the serving accessor); the bench/spec
@@ -209,13 +205,11 @@ object PqIndex {
     readCodes(spark, path, Artifacts.requireGen(spark, path))
 
   private def codebookOf(spark: SparkSession, gen: String): Codebook = {
-    val rows = spark.read.parquet(s"$gen/codebook")
-      .orderBy("subspace", "code").collect()
-    val m = rows.map(_.getInt(0)).max + 1
-    val k = rows.map(_.getInt(1)).max + 1
+    val rows = Artifacts.readVectorsFile(spark, s"$gen/codebook")
+    val m = rows.map(_._1(0)).max + 1
+    val k = rows.map(_._1(1)).max + 1
     val cents = Array.ofDim[Array[Double]](m, k)
-    rows.foreach(r => cents(r.getInt(0))(r.getInt(1)) =
-      r.getSeq[Double](2).toArray)
+    rows.foreach { case (Seq(s, c), v) => cents(s)(c) = v }
     Codebook(cents(0)(0).length, cents)
   }
 
@@ -225,10 +219,11 @@ object PqIndex {
   private def idOf(codes: DataFrame): String =
     codes.columns.filter(_ != "codes").head
 
-  /** Load a saved artifact: (codebook, codes). Codebook collect is
-    * bounded by M×K rows. The tombstone sidecar (if any) is consulted
-    * HERE — a filter on the codes table's id column, so every ADC
-    * scan over a loaded index sees the post-delete corpus with zero
+  /** Load a saved artifact: (codebook, codes). The codebook (M×K
+    * vectors) and the codes' file listing are read on the driver: no
+    * Spark job, one with tombstones. The tombstone sidecar (if any) is
+    * consulted HERE — a filter on the codes table's id column, so every
+    * ADC scan over a loaded index sees the post-delete corpus with zero
     * changes to the probe path.
     */
   def load(spark: SparkSession, path: String): (Codebook, DataFrame) = {

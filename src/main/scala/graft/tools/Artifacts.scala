@@ -5,8 +5,11 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.datasources.{FileStatusCache,
-  HadoopFsRelation, InMemoryFileIndex, PartitionPath, PartitionSpec}
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.execution.datasources.{FileFormat, FilePartition,
+  FileScanRDD, FileStatusCache, HadoopFsRelation, InMemoryFileIndex,
+  PartitionedFile, PartitionPath, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetReadSupport}
 import org.apache.spark.sql.functions.col
@@ -199,7 +202,14 @@ object Artifacts {
     * their nullability are those `spark.read.parquet` gives.
     */
   private[graft] def readParquet(spark: SparkSession, paths: Seq[String],
-      partitionBy: String*): DataFrame = {
+      partitionBy: String*): DataFrame =
+    walkParquet(spark, paths, partitionBy: _*).frame
+
+  /** The walk behind [[readParquet]], kept: its frame, and a read of
+    * the files of chosen partition values alone.
+    */
+  private[graft] def walkParquet(spark: SparkSession, paths: Seq[String],
+      partitionBy: String*): ParquetWalk = {
     val leaves = paths.map { d =>
       val (f, p) = fs(spark, d)
       f.makeQualified(p) -> leafFiles(spark, d).toArray
@@ -223,16 +233,53 @@ object Artifacts {
     val dataSchema = StructType(written.fields
       .filterNot(f => partitionBy.contains(f.name))
       .map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
-    val filled = new FileStatusCache {
-      override def getLeafFiles(p: Path): Option[Array[FileStatus]] =
-        leaves.get(p)
-      def putLeafFiles(p: Path, leafFiles: Array[FileStatus]): Unit = ()
-      def invalidateAll(): Unit = ()
+    new ParquetWalk(spark, leaves, PartitionSpec(partSchema, partitions),
+      dataSchema)
+  }
+
+  /** Parquet files walked on the driver, with their partition dirs and
+    * the schema written into them.
+    */
+  private[graft] final class ParquetWalk(spark: SparkSession,
+      leaves: Map[Path, Array[FileStatus]], spec: PartitionSpec,
+      dataSchema: StructType) {
+
+    def frame: DataFrame = {
+      val filled = new FileStatusCache {
+        override def getLeafFiles(p: Path): Option[Array[FileStatus]] =
+          leaves.get(p)
+        def putLeafFiles(p: Path, leafFiles: Array[FileStatus]): Unit = ()
+        def invalidateAll(): Unit = ()
+      }
+      val index = new InMemoryFileIndex(spark, leaves.keys.toSeq, Map.empty,
+        None, filled, Some(spec), None)
+      spark.baseRelationToDataFrame(HadoopFsRelation(index,
+        spec.partitionColumns, dataSchema, None, new ParquetFileFormat,
+        Map.empty)(spark))
     }
-    val index = new InMemoryFileIndex(spark, leaves.keys.toSeq, Map.empty,
-      None, filled, Some(PartitionSpec(partSchema, partitions)), None)
-    spark.baseRelationToDataFrame(HadoopFsRelation(index, partSchema,
-      dataSchema, None, new ParquetFileFormat, Map.empty)(spark))
+
+    /** The data columns `columns` of the files whose first partition
+      * value is `values(i)`, as partition i of the result: every file
+      * whole, nothing shuffled, rows counted in the tasks' input
+      * metrics as a scan counts them. Rows are reused between `next`
+      * calls; copy what is kept.
+      */
+    def readPartitions(values: Seq[Int], columns: Seq[String]): RDD[InternalRow] = {
+      val byDir = leaves.values.flatten.toSeq.groupBy(_.getPath.getParent)
+      val byValue = spec.partitions.groupBy(_.values.getInt(0)).map { case (v, ps) =>
+        v -> ps.flatMap(p => byDir.getOrElse(p.path, Nil))
+      }
+      val schema = StructType(columns.map(dataSchema(_)))
+      val read = new ParquetFileFormat().buildReaderWithPartitionValues(
+        spark, dataSchema, StructType(Nil), schema, Nil,
+        Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        spark.sessionState.newHadoopConf())
+      new FileScanRDD(spark, read, values.zipWithIndex.map { case (v, i) =>
+        FilePartition(i, byValue.getOrElse(v, Nil).map(st => PartitionedFile(
+          InternalRow.empty, SparkPath.fromPath(st.getPath), 0, st.getLen,
+          Array.empty[String], st.getModificationTime, st.getLen)).toArray)
+      }, schema)
+    }
   }
 
   /** `t` with every nested field, element and value nullable — what a
@@ -290,6 +337,39 @@ object Artifacts {
       java.nio.charset.StandardCharsets.UTF_8.name()).getLines().toList
     finally in.close()
   }
+
+  /** Named scalars as a [[writeLinesFile]] file of `name\tvalue`
+    * lines, read back BY NAME ([[readParams]]): a reordered write
+    * cannot swap two values. Doubles round-trip exactly.
+    */
+  private[graft] def writeParams(spark: SparkSession, path: String,
+      params: (String, Any)*): Unit =
+    writeLinesFile(spark, path, params.map { case (k, v) => s"$k\t$v" })
+
+  private[graft] def readParams(spark: SparkSession,
+      path: String): Map[String, String] =
+    readLinesFile(spark, path).map(_.split("\t", 2))
+      .map(a => a(0) -> a(1)).toMap
+
+  /** A frozen structure of double vectors keyed by ints (centroids,
+    * codebook entries) as a [[writeLinesFile]] file of
+    * `k1\t…\tkn\tv0,v1,…` lines: read on the driver with no Spark
+    * job, and exact — `Double.toString` round-trips every double.
+    */
+  private[graft] def writeVectorsFile(spark: SparkSession, path: String,
+      rows: Seq[(Seq[Int], Array[Double])]): Unit =
+    writeLinesFile(spark, path, rows.map { case (keys, v) =>
+      (keys :+ v.mkString(",")).mkString("\t")
+    })
+
+  /** The rows of a [[writeVectorsFile]] file, in file order. */
+  private[graft] def readVectorsFile(spark: SparkSession,
+      path: String): Seq[(Seq[Int], Array[Double])] =
+    readLinesFile(spark, path).map { line =>
+      val f = line.split("\t", -1)
+      (f.init.map(_.toInt).toSeq,
+        if (f.last.isEmpty) Array.empty[Double] else f.last.split(",").map(_.toDouble))
+    }
 
   /** The dirs of manifest `name` in `gen`, in PUBLISH ORDER, resolved
     * against `root` — empty when the generation has no such manifest.

@@ -1,45 +1,23 @@
 package graft.similarity
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 import graft.SparkTestBase
-import graft.tools.{Artifacts, Scratch}
+import graft.tools.{Artifacts, JobMeter, Scratch, ServingKinds}
 
-/** The Spark jobs an IVF load and a probe over it start, counted by a
-  * listener. The index has 64 cells in each of two pool dirs: more
-  * cell dirs per pool than Spark's 32-path threshold for listing a
-  * directory with a distributed job, had the load listed them through
-  * Spark.
+/** The Spark jobs a serving-index load starts, counted by a listener:
+  * a table over the five kinds of [[graft.tools.ServingKinds]], and
+  * the IVF probes over a load. The IVF fixture has 64 cells in each of
+  * two pool dirs: more cell dirs per pool than Spark's 32-path
+  * threshold for listing a directory with a distributed job, had the
+  * load listed them through Spark.
   */
 class IvfLoadJobsSpec extends SparkTestBase {
   import spark.implicits._
 
   /** (result, jobs started by `body` on this thread). */
   private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val tag = s"ivf-load-jobs-${System.nanoTime()}"
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(Tag) == tag))
-          n.incrementAndGet()
-    }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(l)
-    sc.setLocalProperty(Tag, tag)
-    try {
-      val r = body
-      ListenerBusDrain(sc)
-      (r, n.get)
-    } finally {
-      sc.setLocalProperty(Tag, null)
-      sc.removeSparkListener(l)
-    }
+    val (r, m) = JobMeter(spark)(body)
+    (r, m.jobs)
   }
-  private val Tag = "graft.spec.tag"
 
   private def vectors(ids: Range, seed: Int) = {
     val rnd = new scala.util.Random(seed)
@@ -104,4 +82,34 @@ class IvfLoadJobsSpec extends SparkTestBase {
     * broadcast anti-join per query.
     */
   private val ProbeJoinJobsBefore = 10
+
+  private lazy val kinds = ServingKinds.all(spark).map(k => k.name -> k).toMap
+
+  /** (kind, load, its jobs without and with a tombstone sidecar). A
+    * load is the `live` frame a kind serves from: the frozen structure,
+    * manifests and file listing are read on the driver, and the one job
+    * is the read of the sidecar's ids. The graph's adjacency load keeps
+    * its degree aggregate: two adaptive shuffle stages and the result.
+    */
+  private val loads = Seq(("ivf", "load", 0, 1), ("pq", "load", 0, 1),
+    ("minhash", "load", 0, 1), ("semantic", "load", 0, 1),
+    ("graph", "loadVectors", 0, 1), ("graph", "load", 3, 4))
+
+  loads.foreach { case (name, call, plain, sidecar) =>
+    test(s"$name $call: $plain jobs, $sidecar with a tombstone sidecar") {
+      val k = kinds(name)
+      val open: String => Any =
+        if (call == "load" && name == "graph") GraphIndex.load(spark, _) else k.live
+      val r = java.nio.file.Files.createTempDirectory(s"load_jobs_$name")
+        .toAbsolutePath.toString
+      try {
+        k.save(r)
+        val (_, j0) = jobsOf(open(r))
+        val ids = k.liveIds(r).toSeq.sorted.take(2)
+        k.kind.takedown(spark, r, ids.toDF(k.kind.idCol))
+        val (_, j1) = jobsOf(open(r))
+        assert((j0, j1) == (plain, sidecar))
+      } finally Scratch.deleteRecursively(new java.io.File(r))
+    }
+  }
 }
