@@ -948,21 +948,47 @@ object GraphIndex {
   private val AdjDirs = "adj_dirs"
   private val VecDirs = "vec_dirs"
   private val BuildStats = "build_stats"
+  private val DegreeBound = "max_degree"
+
+  /** The largest per-src edge count of the adjacency in pool `dir`
+    * (0 when it holds no edge): one aggregate over that dir only.
+    */
+  private def maxDegreeIn(spark: SparkSession, dir: String): Long = {
+    val r = Artifacts.readParquet(spark, Seq(dir)).groupBy(col("src"))
+      .agg(count(lit(1)).as("_d")).agg(max(col("_d"))).collect()(0)
+    if (r.isNullAt(0)) 0L else r.getLong(0)
+  }
+
+  /** The generation's upper bound of its stored per-src degree, a
+    * lines file written at publish so [[load]] decides on the serving
+    * cap without an aggregate; None for a generation that has none.
+    */
+  private def degreeBound(spark: SparkSession, gen: String): Option[Long] =
+    if (!Artifacts.exists(spark, s"$gen/$DegreeBound")) None
+    else Some(Artifacts.readLinesFile(spark, s"$gen/$DegreeBound").head.toLong)
+
+  private def writeDegreeBound(spark: SparkSession, gen: String,
+      bound: Option[Long]): Unit =
+    bound.foreach(b => Artifacts.writeLinesFile(spark, s"$gen/$DegreeBound",
+      Seq(b.toString)))
 
   /** One generation for a built adjacency (+ optional vectors), with
-    * the build's convergence stats when it has any. Every stored edge
-    * carries its score `_c` — the [[capDegree]] ranking evidence.
+    * the build's convergence stats when it has any and its exact max
+    * degree. Every stored edge carries its score `_c` — the
+    * [[capDegree]] ranking evidence.
     */
   private def saveGen(adj: DataFrame, vectors: Option[DataFrame],
       path: String, stats: Seq[BuildRound], tag: Option[String]): Unit = {
     require(adj.columns.contains("_c"),
       "adjacency has no score column _c — save a build's output")
     val spark = adj.sparkSession
-    val adjDirs = AdjDirs -> Seq(Artifacts.writePool(adj, path))
+    val adjPool = Artifacts.writePool(adj, path)
+    val bound = maxDegreeIn(spark, adjPool)
     val vecDirs = vectors.map(v => VecDirs -> Seq(Artifacts.writePool(v, path)))
-    Artifacts.publishGen(spark, path, adjDirs +: vecDirs.toSeq, tag = tag,
-      write = { gen =>
+    Artifacts.publishGen(spark, path, (AdjDirs -> Seq(adjPool)) +: vecDirs.toSeq,
+      tag = tag, write = { gen =>
         import spark.implicits._
+        writeDegreeBound(spark, gen, Some(bound))
         if (stats.nonEmpty)
           stats.map(s => (s.round, s.freshEdges, s.totalEdges))
             .toDF("round", "fresh_edges", "total_edges")
@@ -971,16 +997,18 @@ object GraphIndex {
   }
 
   /** Publish a maintenance generation derived from `gen`: the given
-    * manifests, tombstones carried forward (minus `folded`), and the
-    * last build's convergence stats copied — a Δ insert doesn't re-run
-    * descent; the cadence signal is the last BUILD's.
+    * manifests and degree bound, tombstones carried forward (minus
+    * `folded`), and the last build's convergence stats copied — a Δ
+    * insert doesn't re-run descent; the cadence signal is the last
+    * BUILD's.
     */
   private def publishFrom(spark: SparkSession, path: String, gen: String,
       adjDirs: Seq[String], vecDirs: Seq[String], folded: Set[String],
-      tag: Option[String]): Unit =
+      bound: Option[Long], tag: Option[String]): Unit =
     Artifacts.publishGen(spark, path,
       (AdjDirs -> adjDirs) +: (if (vecDirs.isEmpty) Nil else Seq(VecDirs -> vecDirs)),
-      parent = Some(gen), folded = folded, copy = Seq(BuildStats), tag = tag)
+      parent = Some(gen), folded = folded, copy = Seq(BuildStats), tag = tag,
+      write = writeDegreeBound(spark, _, bound))
 
   private def readAdj(spark: SparkSession, path: String,
       gen: String): DataFrame =
@@ -1012,8 +1040,9 @@ object GraphIndex {
     * deleted id at all (serve ≡ the same walk with the ids absent).
     *
     * `maxDegree` (default [[DefaultServeDegreeCap]]) applies
-    * [[capDegree]] on the way out — the serving read; pass 0 for the
-    * RAW adjacency (the [[skewRatio]]/[[occupancy]] drift observables
+    * [[capDegree]] on the way out unless the generation's recorded
+    * degree bound is within it — the serving read, which starts no job
+    * without a tombstone sidecar; pass 0 for the RAW adjacency (the [[skewRatio]]/[[occupancy]] drift observables
     * must see true degree growth, and [[compact]]/rebuild seeds want
     * every edge).
     */
@@ -1022,20 +1051,14 @@ object GraphIndex {
     val gen = Artifacts.requireGen(spark, path)
     val live = Artifacts.dropTombstoned(spark, gen,
       readAdj(spark, path, gen), "src", "nb")
-    if (maxDegree <= 0) live
-    else {
-      // one-aggregate guard (VERDICT r16 next-round #2): when no list
-      // exceeds the cap — every FRESH build, whose degree is ~m·2 +
-      // ring·2 ≈ 44 — the cut is a no-op, but a lazy capDegree view
-      // would re-run its TopKAgg on every downstream walk round; one
-      // cheap degree aggregate here lets such reads serve the RAW
-      // pushdown-filtered scan instead. Maintenance-grown artifacts
-      // (some degree > cap) pay the cap as before.
-      val maxDeg = live.groupBy(col("src")).agg(count(lit(1)).as("_d"))
-        .agg(max(col("_d"))).collect()(0)
-      if (!maxDeg.isNullAt(0) && maxDeg.getLong(0) <= maxDegree) live
-      else capDegree(live, maxDegree)
-    }
+    // when no list can exceed the cap — every FRESH build, whose degree
+    // is ~m·2 + ring·2 ≈ 44 — the cut is a no-op, but a lazy capDegree
+    // view would re-run its TopKAgg on every downstream walk round; the
+    // generation's degree bound lets such reads serve the RAW
+    // pushdown-filtered scan instead. Maintenance-grown artifacts
+    // (a bound over the cap) pay the cap.
+    if (maxDegree <= 0 || degreeBound(spark, gen).exists(_ <= maxDegree)) live
+    else capDegree(live, maxDegree)
   }
 
   /** The committed corpus vectors, when the artifact carries them
@@ -1089,7 +1112,8 @@ object GraphIndex {
         val raw = Artifacts.readParquet(spark, vDirs)
         Seq(Artifacts.writePool(snap.fold(raw, raw.columns.head), path))
       }
-    publishFrom(spark, path, gen, Seq(adj), vecs, snap.files, tag = None)
+    publishFrom(spark, path, gen, Seq(adj), vecs, snap.files,
+      Some(maxDegreeIn(spark, adj)), tag = None)
   }
 
   /** Δ MAINTENANCE — the NSW add-node walk, batched and
@@ -1155,7 +1179,8 @@ object GraphIndex {
     // an empty Δ walks nothing: a tagged one still commits its tag
     // (replays stay exactly-once), an untagged one publishes nothing
     if (dN == 0L) {
-      tag.foreach(_ => publishFrom(spark, path, gen, adjDirs, vDirs, Set.empty, tag))
+      tag.foreach(_ => publishFrom(spark, path, gen, adjDirs, vDirs, Set.empty,
+        degreeBound(spark, gen), tag))
       return
     }
     // the walk reads the CAPPED serving adjacency (load's default):
@@ -1220,10 +1245,13 @@ object GraphIndex {
     val delta = links.unionAll(
       links.select(col("nb").as("src"), col("src").as("nb"), col("_c")))
       .groupBy(col("src"), col("nb")).agg(max(col("_c")).as("_c"))
-    // vector-carrying artifacts append Δ vectors in the same publish
-    publishFrom(spark, path, gen, adjDirs :+ Artifacts.writePool(delta, path),
+    // vector-carrying artifacts append Δ vectors in the same publish;
+    // every src gains at most Δ's largest degree, so the bound grows
+    // by that and its cost stays ∝ Δ
+    val deltaPool = Artifacts.writePool(delta, path)
+    publishFrom(spark, path, gen, adjDirs :+ deltaPool,
       if (vDirs.isEmpty) Nil else vDirs :+ Artifacts.writePool(newV, path),
-      Set.empty, tag)
+      Set.empty, degreeBound(spark, gen).map(_ + maxDegreeIn(spark, deltaPool)), tag)
   }
 
   /** Self-contained Δ publish for vector-carrying artifacts

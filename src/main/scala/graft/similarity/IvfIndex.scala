@@ -2,16 +2,16 @@ package graft.similarity
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.HashPartitioner
-import org.apache.spark.rdd.RDD
+import org.apache.spark.{HashPartitioner, TaskContext}
+import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference,
   Descending, GenericInternalRow, InterpretedOrdering, SortOrder,
   UnsafeArrayData, UnsafeProjection}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType,
-  StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType,
+  FloatType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -30,15 +30,15 @@ import graft.tools.Artifacts
   * and its first [[topK]] builds the SERVING BLOCKS — an RDD with one
   * partition per cell, partition c reading only cell c's files (the
   * load's tombstoned ids dropped as the block is built), persisted at
-  * MEMORY_AND_DISK. A probe is one job over its nProbe partitions: a
-  * cold probe reads only the probed cells' files, which is the entire
-  * point of IVF on a 100 TB corpus, and a warm one reads nothing and
-  * plans no SQL (IvfIndexSpec asserts both from task metrics). The
-  * blocks belong to the loaded value, so a delete or an append after
-  * the load is seen by the next load only; [[Index.unpersist]]
-  * releases them, and the ContextCleaner frees those of an `Index`
-  * nothing references any more. Spark's storage memory is the only
-  * bound.
+  * MEMORY_AND_DISK. A probe is one job over its nProbe partitions,
+  * one task per executor: a cold probe reads only the probed cells'
+  * files, which is the entire point of IVF on a 100 TB corpus, and a
+  * warm one reads nothing and plans no SQL (IvfIndexSpec asserts both
+  * from task metrics). The blocks belong to the loaded value, so a
+  * delete or an append after the load is seen by the next load only;
+  * [[Index.unpersist]] releases them, and the ContextCleaner frees
+  * those of an `Index` nothing references any more. Spark's storage
+  * memory is the only bound.
   *
   * Centroid training is shared with [[Similarity.ivfTopK]]
   * (deterministic hash-ordered init, fixed Lloyd rounds, decimal-exact
@@ -430,30 +430,53 @@ object IvfIndex {
   /** Approximate top-k over the nProbe cells nearest the query:
     * (id, cosine), by cosine descending (a null cosine — a zero-norm
     * vector — last), then id. One job over the probed partitions of
-    * the serving blocks ([[Index.cells]]): each task scores its cell
-    * with the native cosine kernel and keeps its k best; the driver
-    * merges them into a local frame. A cold probe reads only its
+    * the serving blocks ([[Index.cells]]), coalesced to one task per
+    * live executor: each task scores the cells it holds with the
+    * native cosine kernel and keeps its k best, and the driver merges
+    * them into a local frame. Spark's default coalescer groups the
+    * probed partitions by their cached blocks' locations, so a warm
+    * task reads its own executor's blocks. A cold probe reads only its
     * cells' files; a warm one reads nothing.
     */
   def topK(index: Index, query: Seq[Float], k: Int, nProbe: Int = 4): DataFrame = {
     val spark = index.corpus.sparkSession
-    val probes = Similarity.nearestCentroids(index.centroids, query, nProbe)
-    val q = UnsafeArrayData.fromPrimitiveArray(query.toArray)
+    val sc = spark.sparkContext
+    val probes = Similarity.nearestCentroids(index.centroids, query, nProbe).toSet
     val idType = index.corpus.schema(index.idCol).dataType
     val ord = new InterpretedOrdering(Seq(
       SortOrder(BoundReference(1, DoubleType, nullable = true), Descending),
       SortOrder(BoundReference(0, idType, nullable = true), Ascending)))
-    val perCell = if (probes.isEmpty) Array.empty[Array[InternalRow]]
-      else spark.sparkContext.runJob(index.cells,
-        (it: Iterator[Array[InternalRow]]) => best(it.flatMap(_.iterator.map { r =>
-          val cos = if (r.isNullAt(1)) null else VectorKernels.cosine(r.getArray(1), q)
-          new GenericInternalRow(Array[Any](r.get(0, idType), cos))
-        }), k, ord), probes)
+    val perTask = if (probes.isEmpty) Array.empty[Array[InternalRow]]
+      else {
+        // every executor but the driver, which is the one executor
+        // of a local session
+        val executors = math.max(1, sc.statusTracker.getExecutorInfos.length - 1)
+        val tasks = PartitionPruningRDD.create(index.cells, probes.contains)
+          .coalesce(executors)
+        val out = new Array[Array[InternalRow]](tasks.getNumPartitions)
+        sc.runJob(tasks, CellScorer(UnsafeArrayData.fromPrimitiveArray(query.toArray),
+          idType, k, ord), out.indices, (i: Int, r: Array[InternalRow]) => out(i) = r)
+        out
+      }
     val schema = StructType(Seq(index.corpus.schema(index.idCol),
       StructField("cosine", DoubleType, nullable = true)))
     val toRow = CatalystTypeConverters.createToScalaConverter(schema)
-    spark.createDataFrame(best(perCell.iterator.flatten, k, ord)
+    spark.createDataFrame(best(perTask.iterator.flatten, k, ord)
       .map(toRow(_).asInstanceOf[Row]).toSeq.asJava, schema)
+  }
+
+  /** A probe task: the k best (id, cosine) rows of the cells it reads.
+    * A named class, not a lambda: `SparkContext.clean` parses the class
+    * files of a closure on every job and passes any other class by.
+    */
+  private final case class CellScorer(q: UnsafeArrayData, idType: DataType,
+      k: Int, ord: Ordering[InternalRow])
+      extends ((TaskContext, Iterator[Array[InternalRow]]) => Array[InternalRow]) {
+    def apply(ctx: TaskContext, cells: Iterator[Array[InternalRow]]): Array[InternalRow] =
+      best(cells.flatMap(_.iterator.map { r =>
+        val cos = if (r.isNullAt(1)) null else VectorKernels.cosine(r.getArray(1), q)
+        new GenericInternalRow(Array[Any](r.get(0, idType), cos))
+      }), k, ord)
   }
 
   /** The k least rows of `rows` under `ord`, in order. */

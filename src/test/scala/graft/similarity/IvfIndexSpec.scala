@@ -1,5 +1,7 @@
 package graft.similarity
 
+import org.apache.spark.sql.functions.typedLit
+
 import graft.SparkTestBase
 import graft.tools.JobMeter
 
@@ -51,22 +53,22 @@ class IvfIndexSpec extends SparkTestBase {
     IvfIndex.corpusDirs(spark, path)
       .map(d => spark.read.parquet(d).filter($"cell".isin(cells: _*)).count()).sum
 
-  /** A cold probe of `idx` is one job of one task per probed cell that
-    * reads exactly the probed cells' rows from their files; the same
-    * probe again reads no file — each task reads its cell's one cached
-    * block — and returns the same rows.
+  /** A cold probe of `idx` is one job of one task (local mode has one
+    * executor) that reads exactly the probed cells' rows from their
+    * files; the same probe again reads no file — the task reads each
+    * probed cell's one cached block — and returns the same rows.
     */
   private def assertProbeReadsOnlyItsCells(idx: IvfIndex.Index, path: String,
       q: Seq[Float], nProbe: Int): Unit = {
     val probes = Similarity.nearestCentroids(idx.centroids, q, nProbe)
     val (cold, c) = JobMeter(spark)(IvfIndex.topK(idx, q, k = 5, nProbe = nProbe)
       .as[(Long, Double)].collect().toSeq)
-    assert(c.jobs == 1 && c.tasks == nProbe, c)
+    assert(c.jobs == 1 && c.tasks == 1, c)
     assert(c.recordsRead == rowsIn(path, probes) && c.fileBytesRead > 0, c)
     assert(c.recordsRead < rowsIn(path, idx.centroids.indices), c)
     val (warm, w) = JobMeter(spark)(IvfIndex.topK(idx, q, k = 5, nProbe = nProbe)
       .as[(Long, Double)].collect().toSeq)
-    assert(w.jobs == 1 && w.tasks == nProbe, w)
+    assert(w.jobs == 1 && w.tasks == 1, w)
     assert(w.recordsRead == nProbe && w.fileBytesRead == 0L, w)
     assert(warm == cold)
   }
@@ -88,6 +90,31 @@ class IvfIndexSpec extends SparkTestBase {
     val dirs = new java.io.File(corpusDir).listFiles()
       .filter(_.isDirectory).map(_.getName).filter(_.startsWith("cell="))
     assert(dirs.length > 2, s"expected cell= partition dirs, got ${dirs.toSeq}")
+  }
+
+  test("a probe of every cell after a narrower one reads only the cells still cold") {
+    val emb = graft.Tables.embeddings(spark, sf)
+    val q = emb.filter($"vec_id" === 4).select("embedding").as[Seq[Float]].head()
+    val path = tmpDir()
+    IvfIndex.save(
+      IvfIndex.build(emb, "vec_id", "embedding", nCentroids = 8, iters = 1), path)
+    val idx = IvfIndex.load(spark, path, "vec_id", "embedding")
+    val warmed = Similarity.nearestCentroids(idx.centroids, q, 2)
+    IvfIndex.topK(idx, q, k = 5, nProbe = 2).collect()
+    val all = idx.centroids.length
+    val (rows, m) = JobMeter(spark)(IvfIndex.topK(idx, q, k = 5, nProbe = all)
+      .as[(Long, Double)].collect().toSeq)
+    assert(m.jobs == 1 && m.tasks == 1, m)
+    // the cold cells' rows from their files, one record per cached block
+    val cold = idx.centroids.indices.filterNot(warmed.contains)
+    assert(m.recordsRead == rowsIn(path, cold) + warmed.size && m.fileBytesRead > 0, m)
+    // probing every cell is exact: the SQL probe of the whole corpus
+    val cos = graft.functions.VectorOps.cosineFor(idx.corpus, "embedding")
+    val oracle = idx.corpus
+      .select($"vec_id", cos($"embedding", typedLit(q)).as("cosine"))
+      .orderBy($"cosine".desc, $"vec_id").limit(5)
+      .as[(Long, Double)].collect().toSeq
+    assert(rows == oracle)
   }
 
   private def dataFiles(path: String): Map[String, Long] =

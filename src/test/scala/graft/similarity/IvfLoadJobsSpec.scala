@@ -88,12 +88,13 @@ class IvfLoadJobsSpec extends SparkTestBase {
   /** (kind, load, its jobs without and with a tombstone sidecar). A
     * load is the `live` frame a kind serves from: the frozen structure,
     * manifests and file listing are read on the driver, and the one job
-    * is the read of the sidecar's ids. The graph's adjacency load keeps
-    * its degree aggregate: two adaptive shuffle stages and the result.
+    * is the read of the sidecar's ids. The graph's adjacency load reads
+    * the degree bound its generation was published with, so it decides
+    * on the serving cap without an aggregate.
     */
   private val loads = Seq(("ivf", "load", 0, 1), ("pq", "load", 0, 1),
     ("minhash", "load", 0, 1), ("semantic", "load", 0, 1),
-    ("graph", "loadVectors", 0, 1), ("graph", "load", 3, 4))
+    ("graph", "loadVectors", 0, 1), ("graph", "load", 0, 1))
 
   loads.foreach { case (name, call, plain, sidecar) =>
     test(s"$name $call: $plain jobs, $sidecar with a tombstone sidecar") {
