@@ -1,5 +1,6 @@
 package graft.dedup
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -14,10 +15,10 @@ import graft.tools.Artifacts
   * re-materialization. This store fixes both:
   *
   *  - **Durability**: the label table is generation-published
-  *    ([[Artifacts.publish]] commit-marker protocol) — a reader
-  *    resolves only complete committed generations, and a restarted
-  *    stream resumes from the last committed generation instead of
-  *    replaying history.
+  *    ([[Artifacts.publishGen]], the lifecycle the serving indexes
+  *    share) — a reader resolves only complete committed generations,
+  *    and a restarted stream resumes from the last committed
+  *    generation instead of replaying history.
   *  - **Bucketed layout, touched-bucket-only writes**: rows live in
   *    `nBuckets` hash buckets of their COMPONENT label
   *    (`pmod(component, nBuckets)`). [[appendEdges]] computes the
@@ -28,19 +29,23 @@ import graft.tools.Artifacts
   *    files are structurally untouchable (asserted in LabelStoreSpec):
   *    the new generation's manifest simply keeps pointing at them.
   *
-  * Physical layout (manifest-pool — the Iceberg/Delta snapshot-pointer
-  * idea reduced to what a filesystem provides):
+  * Physical layout (the [[Artifacts]] manifest-pool layout):
   * {{{
-  * root/pool/<token>/bucket=N/…parquet       immutable bucket data
-  * root/g%08d/{meta,manifest}/…, _COMMITTED  generation = pointer set
+  * root/pool/<token>/bucket=N/…parquet     immutable bucket data
+  * root/g%08d/bucket_dirs                  "ord\tpool/<token>/bucket=N" lines
+  * root/g%08d/params                       n_buckets
+  * root/g%08d/_COMMITTED                   commit marker, created last
   * }}}
-  * A generation's `manifest` maps bucket → the pool subdir holding its
-  * current rows; buckets absent from the manifest are empty. Data
-  * dirs are shared ACROSS generations (an untouched bucket's dir is
-  * referenced by both the old and new manifest), which is exactly why
-  * delta maintenance stays O(touched) while publishes stay atomic.
-  * After each publish, pool dirs referenced by no committed
-  * generation are pruned.
+  * A generation's `bucket_dirs` manifest lists the pool subdir holding
+  * each non-empty bucket's current rows, and each dir's bucket number
+  * is its own name; buckets absent from it are empty. Data dirs are
+  * shared ACROSS generations (an untouched bucket's dir is referenced
+  * by both the old and new manifest), which is exactly why delta
+  * maintenance stays O(touched) while publishes stay atomic. After
+  * each publish, pool dirs referenced by no committed generation are
+  * pruned. Opening the store starts no Spark job: the manifest, the
+  * file listing and the schema are read on the driver
+  * ([[Artifacts.readParquet]]).
   *
   * The Δ-endpoint label lookup — the one read that is keyed by id
   * while the layout is keyed by component — collects the (bounded,
@@ -69,60 +74,73 @@ object LabelStore {
   private def bucketCol(c: org.apache.spark.sql.Column, nBuckets: Int) =
     pmod(c, lit(nBuckets.toLong)).cast("int")
 
-  /** bucket → pool subdir for every non-empty bucket under `dataDir`. */
-  private def listBucketDirs(spark: SparkSession,
-      dataDir: String): Map[Int, String] = {
-    val (f, p) = Artifacts.fs(spark, dataDir)
-    if (!f.exists(p)) return Map.empty
-    f.listStatus(p).toSeq.filter(_.isDirectory).flatMap { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("bucket="))
-        Some(n.stripPrefix("bucket=").toInt -> s"$dataDir/$n")
-      else None
-    }.toMap
-  }
+  private def bucketOf(dir: String): Int =
+    dir.split("/").last.stripPrefix("bucket=").toInt
 
-  // meta + manifest are tiny bucket-domain tables written ONCE PER
-  // TRIGGER by the streaming CC maintenance loop — plain text files
-  // written/read straight through the FileSystem, so they cost no
-  // Spark job (optimization r17)
-  private def writeGen(spark: SparkSession, root: String, nBuckets: Int,
-      manifest: Map[Int, String]): Unit = {
-    Artifacts.publish(spark, root) { gen =>
-      Artifacts.writeLinesFile(spark, s"$gen/meta", Seq(nBuckets.toString))
-      Artifacts.writeLinesFile(spark, s"$gen/manifest",
-        manifest.toSeq.sorted.map { case (b, d) => s"$b\t$d" })
-    }
-    prunePool(spark, root)
-  }
+  private val BucketDirs = "bucket_dirs"
+
+  /** bucket → dir of generation `gen` of the store under `root`. */
+  private def bucketsOf(spark: SparkSession, root: String,
+      gen: String): Map[Int, String] =
+    Artifacts.dirsOf(spark, root, gen, BucketDirs).map(d => bucketOf(d) -> d)
+      .toMap
 
   /** The bucket → dir manifest of ONE generation (spec-facing). */
   def manifestOfGen(spark: SparkSession, gen: String): Map[Int, String] =
-    manifestOf(spark, gen)._2
+    bucketsOf(spark, new Path(gen).getParent.toString, gen)
 
-  private def manifestOf(spark: SparkSession,
-      gen: String): (Int, Map[Int, String]) =
-    (Artifacts.readLinesFile(spark, s"$gen/meta").head.trim.toInt,
-      Artifacts.readLinesFile(spark, s"$gen/manifest")
-        .map(_.split("\t", 2)).map(a => a(0).toInt -> a(1)).toMap)
+  private def nBucketsOfGen(spark: SparkSession, gen: String): Int =
+    Artifacts.readParams(spark, s"$gen/params")("n_buckets").toInt
 
-  /** Drop pool dirs no committed generation references (the previous
-    * generation is retained by [[Artifacts.publish]], so its manifest
-    * keeps its dirs alive for in-flight readers).
+  /** Write `rows` (id, component) hash-bucketed by component into a
+    * fresh pool dir, sorted by id within each bucket (row-group stats
+    * for the endpoint lookups), and publish a generation whose
+    * manifest is `kept` plus the new dir's buckets (the write leaves a
+    * `bucket=N` dir for each non-empty bucket only).
     */
-  private def prunePool(spark: SparkSession, root: String): Unit =
-    Artifacts.prunePool(spark, root,
-      Artifacts.committedGens(spark, root)
-        .flatMap(g => manifestOf(spark, g)._2.values))
+  private def publishBuckets(spark: SparkSession, root: String,
+      nBuckets: Int, rows: DataFrame, kept: Map[Int, String],
+      parent: Option[String]): Unit = {
+    val dataDir = Artifacts.newPoolDir(root)
+    rows.withColumn("bucket", bucketCol(col("component"), nBuckets))
+      .repartition(col("bucket"))
+      .sortWithinPartitions(col("bucket"), col("id"))
+      .write.partitionBy("bucket").parquet(dataDir)
+    val (f, p) = Artifacts.fs(spark, dataDir)
+    val man = kept ++ f.listStatus(p).map(_.getPath.getName)
+      .filter(_.startsWith("bucket=")).map(n => bucketOf(n) -> s"$dataDir/$n")
+    Artifacts.publishGen(spark, root,
+      Seq(BucketDirs -> man.toSeq.sorted.map(_._2)), parent = parent,
+      write = gen => Artifacts.writeParams(spark, s"$gen/params",
+        "n_buckets" -> nBuckets))
+  }
 
-  private def emptyLabels(spark: SparkSession): DataFrame =
-    spark.range(0).select(col("id"), col("id").as("component"))
+  /** The (id, component) rows of the buckets of `man` that `keep`
+    * names.
+    */
+  private def readBuckets(spark: SparkSession, man: Map[Int, String],
+      keep: Int => Boolean = _ => true): DataFrame = {
+    val dirs = man.collect { case (b, d) if keep(b) => d }.toSeq
+    if (dirs.isEmpty)
+      spark.range(0).select(col("id"), col("id").as("component"))
+    else Artifacts.readParquet(spark, dirs).select(col("id"), col("component"))
+  }
 
-  private def readDirs(spark: SparkSession,
-      dirs: Seq[String]): DataFrame =
-    if (dirs.isEmpty) emptyLabels(spark)
-    else spark.read.parquet(dirs.distinct: _*)
-      .select(col("id"), col("component"))
+  /** The rows of `man` of the `n` distinct ids in `keys` (col id): the
+    * id-keyed lookup of the header, a literal isin up to
+    * `maxLiteralLookup` ids and a semi join above. Checkpointed:
+    * bounded (⊆ keys) and read several times.
+    */
+  private def lookupIds(spark: SparkSession, man: Map[Int, String],
+      keys: DataFrame, n: Long, maxLiteralLookup: Int): DataFrame =
+    graft.streaming.ConfScope.withConf(spark,
+      "spark.sql.parquet.pushdown.inFilterThreshold", "1000") {
+      val all = readBuckets(spark, man)
+      (if (n <= maxLiteralLookup)
+        all.filter(col("id").isin(keys.collect().map(_.getLong(0)): _*))
+      else all.join(keys, Seq("id"), "left_semi"))
+        .localCheckpoint()
+    }
 
   /** Publish the complete label table as a new generation (initial
     * save or a full rebuild — the retrain-cadence analogue of
@@ -132,36 +150,26 @@ object LabelStore {
     */
   def save(labels: DataFrame, root: String, nBuckets: Int = 64): Unit = {
     require(nBuckets >= 1)
-    val spark = labels.sparkSession
-    val dataDir = Artifacts.newPoolDir(root)
-    labels.select(col("id").cast("long").as("id"),
-        col("component").cast("long").as("component"))
-      .withColumn("bucket", bucketCol(col("component"), nBuckets))
-      .repartition(col("bucket"))
-      .sortWithinPartitions(col("bucket"), col("id"))
-      .write.partitionBy("bucket").parquet(dataDir)
-    writeGen(spark, root, nBuckets, listBucketDirs(spark, dataDir))
+    publishBuckets(labels.sparkSession, root, nBuckets,
+      labels.select(col("id").cast("long").as("id"),
+        col("component").cast("long").as("component")), Map.empty, None)
   }
 
   /** The complete (id, component) table of the current committed
-    * generation — one multi-path scan over the manifest's dirs.
+    * generation — one scan over the manifest's dirs, planned on the
+    * driver: no Spark job.
     */
-  def load(spark: SparkSession, root: String): DataFrame = {
-    val (_, man) = manifestOf(spark, Artifacts.requireGen(spark, root))
-    readDirs(spark, man.values.toSeq)
-  }
+  def load(spark: SparkSession, root: String): DataFrame =
+    readBuckets(spark, manifest(spark, root))
 
   /** Partition-pruned read: only the named buckets' dirs are opened. */
   def loadBuckets(spark: SparkSession, root: String,
-      buckets: Set[Int]): DataFrame = {
-    val (_, man) = manifestOf(spark, Artifacts.requireGen(spark, root))
-    readDirs(spark,
-      man.collect { case (b, d) if buckets(b) => d }.toSeq)
-  }
+      buckets: Set[Int]): DataFrame =
+    readBuckets(spark, manifest(spark, root), buckets)
 
   /** Number of hash buckets the store was created with. */
   def nBucketsOf(spark: SparkSession, root: String): Int =
-    manifestOf(spark, Artifacts.requireGen(spark, root))._1
+    nBucketsOfGen(spark, Artifacts.requireGen(spark, root))
 
   /** bucket → data dir of the current committed generation — the
     * observability face of the layout (which buckets exist, where
@@ -169,7 +177,7 @@ object LabelStore {
     * assert against.
     */
   def manifest(spark: SparkSession, root: String): Map[Int, String] =
-    manifestOf(spark, Artifacts.requireGen(spark, root))._2
+    bucketsOf(spark, root, Artifacts.requireGen(spark, root))
 
   /** Per-bucket physical size of the current committed generation:
     * (bucket, bytes, files) — one FS listing per manifest dir,
@@ -182,8 +190,7 @@ object LabelStore {
     */
   def bucketBytes(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
-    val (_, man) = manifestOf(spark, Artifacts.requireGen(spark, root))
-    man.toSeq.sorted.map { case (b, dir) =>
+    manifest(spark, root).toSeq.sorted.map { case (b, dir) =>
       val (f, p) = Artifacts.fs(spark, dir)
       val st = f.listStatus(p).toSeq.filter(_.isFile)
         .filter(_.getPath.getName.endsWith(".parquet"))
@@ -213,20 +220,14 @@ object LabelStore {
     * readers (a concurrent [[load]] resolves the old or new
     * generation, never a mix), and every subsequent [[appendEdges]]/
     * [[removeIds]]/lookup banks on the new width automatically (they
-    * read nBuckets from the generation's meta). One full rewrite —
+    * read nBuckets from the generation's params). One full rewrite —
     * the point of the [[meanBucketBytes]] cadence is that it runs
     * rarely (each migration restores ~100× of touched-fraction
     * headroom at the growth rate that triggered it).
     */
   def rebucket(spark: SparkSession, root: String, newBuckets: Int): Unit = {
     require(newBuckets >= 1)
-    val labels = load(spark, root)
-    val dataDir = Artifacts.newPoolDir(root)
-    labels.withColumn("bucket", bucketCol(col("component"), newBuckets))
-      .repartition(col("bucket"))
-      .sortWithinPartitions(col("bucket"), col("id"))
-      .write.partitionBy("bucket").parquet(dataDir)
-    writeGen(spark, root, newBuckets, listBucketDirs(spark, dataDir))
+    publishBuckets(spark, root, newBuckets, load(spark, root), Map.empty, None)
   }
 
   /** Delta-CC label maintenance against the durable store — the
@@ -245,8 +246,7 @@ object LabelStore {
       maxIter: Int = 20, maxLocalEdges: Long = 1L << 20,
       maxLiteralLookup: Int = 100000): Unit = {
     val gen = Artifacts.requireGen(spark, root)
-    val (nB, man) = manifestOf(spark, gen)
-    val all = readDirs(spark, man.values.toSeq)
+    val (nB, man) = (nBucketsOfGen(spark, gen), bucketsOf(spark, root, gen))
     val edges = newEdges.select(col("a").cast("long").as("a"),
       col("b").cast("long").as("b"))
     // Δ endpoints: bounded by the batch; materialized once
@@ -255,19 +255,7 @@ object LabelStore {
       .localCheckpoint()
     val nEps = eps.count()
     if (nEps == 0) return // empty trigger: nothing to publish
-    // id-keyed lookup over the component-keyed layout: literal isin
-    // (point-read / range-pruned over the id-sorted buckets — see the
-    // header) below the gate, a narrow semi join above it; the
-    // parquet In-pushdown threshold is raised in-scope so mid-sized
-    // batches keep per-value row-group pruning (ADVICE r13)
-    val lookup = graft.streaming.ConfScope.withConf(spark,
-      "spark.sql.parquet.pushdown.inFilterThreshold", "1000") {
-      (if (nEps <= maxLiteralLookup) {
-        val ids = eps.collect().map(_.getLong(0))
-        all.filter(col("id").isin(ids: _*))
-      } else all.join(eps, Seq("id"), "left_semi"))
-        .localCheckpoint() // bounded (⊆ endpoints); read ≥3 times below
-    }
+    val lookup = lookupIds(spark, man, eps, nEps, maxLiteralLookup)
     val remap = ConnectedComponents.deltaRemap(
       lookup, edges, maxIter, maxLocalEdges)
     // ids Δ introduced (never seen in the store) and their merged
@@ -287,21 +275,14 @@ object LabelStore {
     // are in tB, so rewriting exactly tB's content is complete
     val remapH =
       if (remap.count() <= 1_000_000L) broadcast(remap) else remap
-    val touched = readDirs(spark,
-      man.collect { case (b, d) if tB(b) => d }.toSeq)
+    val touched = readBuckets(spark, man, tB)
     val updated = touched
       .join(remapH, col("component") === col("_old"), "left")
       .select(col("id"),
         coalesce(col("_new"), col("component")).as("component"))
       .unionAll(newRows)
-      .withColumn("bucket", bucketCol(col("component"), nB))
-    val deltaDir = Artifacts.newPoolDir(root)
-    updated.repartition(col("bucket"))
-      .sortWithinPartitions(col("bucket"), col("id"))
-      .write.partitionBy("bucket").parquet(deltaDir)
     // buckets in tB that came out empty drop from the manifest
-    writeGen(spark, root, nB,
-      (man -- tB) ++ listBucketDirs(spark, deltaDir))
+    publishBuckets(spark, root, nB, updated, man -- tB, Some(gen))
   }
 
   /** TAKEDOWN through the bucketed layout (VERDICT r12 next-round #4):
@@ -324,22 +305,12 @@ object LabelStore {
       maxLocalEdges: Long = 1L << 20,
       maxLiteralLookup: Int = 100000): Unit = {
     val gen = Artifacts.requireGen(spark, root)
-    val (nB, man) = manifestOf(spark, gen)
-    val all = readDirs(spark, man.values.toSeq)
+    val (nB, man) = (nBucketsOfGen(spark, gen), bucketsOf(spark, root, gen))
     val del = ids.select(col("id").cast("long").as("id")).distinct()
       .localCheckpoint()
     val nDel = del.count()
     if (nDel == 0) return
-    // labels of the deleted ids: the id-keyed lookup again (same
-    // pushdown-threshold scope as appendEdges')
-    val delLabels = graft.streaming.ConfScope.withConf(spark,
-      "spark.sql.parquet.pushdown.inFilterThreshold", "1000") {
-      (if (nDel <= maxLiteralLookup) {
-        val idArr = del.collect().map(_.getLong(0))
-        all.filter(col("id").isin(idArr: _*))
-      } else all.join(del, Seq("id"), "left_semi"))
-        .localCheckpoint()
-    }
+    val delLabels = lookupIds(spark, man, del, nDel, maxLiteralLookup)
     val touched = delLabels.select(col("component")).distinct()
       .localCheckpoint() // bounded by |ids|
     val tcB = touched.select(bucketCol(col("component"), nB).as("b"))
@@ -347,8 +318,7 @@ object LabelStore {
     if (tcB.isEmpty) return // none of the ids exist: no-op
     val tcH = broadcast(touched)
     // member rows of the touched components: a bucket-pruned read
-    val members = readDirs(spark,
-      man.collect { case (b, d) if tcB(b) => d }.toSeq)
+    val members = readBuckets(spark, man, tcB)
       .join(tcH, Seq("component"), "left_semi")
       .localCheckpoint() // component-size-bounded; read by 3 legs
     val replacement = ConnectedComponents
@@ -359,17 +329,10 @@ object LabelStore {
     val tB = tcB ++ replacement
       .select(bucketCol(col("component"), nB).as("b"))
       .distinct().collect().map(_.getInt(0))
-    val newContent = readDirs(spark,
-      man.collect { case (b, d) if tB(b) => d }.toSeq)
+    val newContent = readBuckets(spark, man, tB)
       .join(tcH, Seq("component"), "left_anti") // untouched comps stay
       .select(col("id"), col("component")) // USING join reordered cols
       .unionAll(replacement)
-      .withColumn("bucket", bucketCol(col("component"), nB))
-    val deltaDir = Artifacts.newPoolDir(root)
-    newContent.repartition(col("bucket"))
-      .sortWithinPartitions(col("bucket"), col("id"))
-      .write.partitionBy("bucket").parquet(deltaDir)
-    writeGen(spark, root, nB,
-      (man -- tB) ++ listBucketDirs(spark, deltaDir))
+    publishBuckets(spark, root, nB, newContent, man -- tB, Some(gen))
   }
 }

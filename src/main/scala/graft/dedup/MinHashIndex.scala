@@ -17,8 +17,8 @@ import graft.tools.Artifacts
   * distinct k-shingle set per doc that exact-Jaccard verification
   * reads for CANDIDATES ONLY (the bucket join bounds how much of it
   * any batch touches); `params/` — one row pinning (shingle_k, bands,
-  * rows_per_band), read back by [[load]]/[[append]] so a probe can
-  * never silently band differently than the index it probes. All
+  * rows_per_band), read back by [[load]]/[[appendPublish]] so a probe
+  * can never silently band differently than the index it probes. All
   * band/minhash functions are seed-fixed and corpus-independent, so
   * an appended or freshly-probed side always agrees with the saved
   * one — "frozen" here is structural, not a training choice (unlike
@@ -28,9 +28,10 @@ import graft.tools.Artifacts
   * At 100 TB: buckets and shingles are corpus-sized but written once;
   * a daily batch pays one bucket hash-join (shuffle keyed on
   * band_hash — uniform by construction) plus shingle reads bounded by
-  * its candidate count. Appends write only Δ's rows (file-append, no
-  * rewrite), the `refreshStats`/`IvfIndex.append` economics applied
-  * to the lexical index.
+  * its candidate count. Appends write only Δ's rows into a new pool
+  * dir of a new generation (no rewrite), the
+  * `refreshStats`/`IvfIndex.appendPublish` economics applied to the
+  * lexical index.
   */
 object MinHashIndex {
 
@@ -117,7 +118,7 @@ object MinHashIndex {
   }
 
   /** Logical delete (takedowns/retractions — the maintenance
-    * operation [[append]] cannot express):
+    * operation [[appendPublish]] cannot express):
     * [[graft.tools.Artifacts.delete]] appends the ids to a tombstone
     * sidecar; no bucket or shingle file is touched (spec-asserted).
     * [[load]] consults the sidecar, so classify after a delete behaves
@@ -149,54 +150,23 @@ object MinHashIndex {
       parent = Some(gen), folded = snap.files, copy = Seq("params"))
   }
 
-  /** Δ banding under the SAVED params — the shared head of
-    * [[append]]/[[appendPublish]]; the hash family is
-    * corpus-independent, so Δ rows computed here classify exactly
-    * like a rebuild's.
-    */
-  private def bandDelta(spark: SparkSession, gen: String,
-      newDocs: DataFrame, idCol: String, textCol: String): Index = {
-    val (k, bands, rows) = paramsOf(spark, gen)
-    build(newDocs, idCol, textCol, k, bands, rows)
-  }
-
   /** Incremental maintenance: band + shingle ONLY the new docs under
-    * the saved params and append their rows — cost ∝ |newDocs|, no
-    * corpus re-read, no rewrite of existing files (spec-asserted).
-    * Because the hash family is corpus-independent, an appended index
-    * classifies EXACTLY like a rebuild over corpus ∪ Δ — there is no
-    * IVF-style drift to monitor.
-    *
-    * IN-PLACE mutation with the [[graft.similarity.IvfIndex.append]]
-    * concurrency contract (ADVICE r13): targets the newest dir
-    * EXCLUSIVE to the current generation, or degrades to one
-    * [[appendPublish]] when every dir is shared with the retained
-    * previous generation.
-    */
-  def append(spark: SparkSession, path: String, newDocs: DataFrame,
-      idCol: String, textCol: String): Unit =
-    Artifacts.appendTarget(spark, path, PartDirs) match {
-      case (gen, Some(target)) =>
-        val delta = bandDelta(spark, gen, newDocs, idCol, textCol)
-        delta.buckets.write.mode("append").parquet(s"$target/buckets")
-        delta.shingles.write.mode("append").parquet(s"$target/shingles")
-      case (_, None) => appendPublish(spark, path, newDocs, idCol, textCol)
-    }
-
-  /** Incremental maintenance, GENERATION-PUBLISHED (VERDICT r13
-    * next-round #4 — appendPublish parity for the lexical index):
-    * same frozen-params Δ banding as [[append]], but the new rows
-    * land in a fresh immutable pool dir and a NEW generation is
-    * committed whose manifest = the parent's dirs + the Δ dir
-    * (tombstones carried forward). Write cost ∝ Δ; a concurrent
-    * [[load]] resolves the parent or the child generation, never a
-    * mix — the per-trigger ingest shape
+    * the saved params, write their rows into a fresh immutable pool
+    * dir and commit a NEW generation whose manifest = the parent's
+    * dirs + the Δ dir (params byte-copied, tombstones carried forward)
+    * — cost ∝ |newDocs|, no corpus re-read, no rewrite of existing
+    * files (spec-asserted). Because the hash family is
+    * corpus-independent, an appended index classifies EXACTLY like a
+    * rebuild over corpus ∪ Δ — there is no IVF-style drift to
+    * monitor. A concurrent [[load]] resolves the parent or the child
+    * generation, never a mix — the per-trigger ingest shape
     * [[graft.streaming.IndexMaintStream]] drives.
     */
   def appendPublish(spark: SparkSession, path: String, newDocs: DataFrame,
       idCol: String, textCol: String, tag: Option[String] = None): Unit = {
     val gen = Artifacts.requireGen(spark, path)
-    val delta = bandDelta(spark, gen, newDocs, idCol, textCol)
+    val (k, bands, rows) = paramsOf(spark, gen)
+    val delta = build(newDocs, idCol, textCol, k, bands, rows)
     val pool = writeSides(delta.buckets, delta.shingles, path)
     Artifacts.publishGen(spark, path,
       Seq(PartDirs -> (Artifacts.dirsOf(spark, path, gen, PartDirs) :+ pool)),

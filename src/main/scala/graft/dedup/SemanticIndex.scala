@@ -30,9 +30,10 @@ import graft.tools.Artifacts
   *
   * Frozen-structure contract (the [[graft.similarity.IvfIndex]]
   * semantics, NOT [[MinHashIndex]]'s): centroids and reps are trained
-  * on the build-time corpus, so [[append]]/[[delete]] keep classify
-  * ≡ the frozen structure applied to the updated corpus — not ≡ a
-  * retrained rebuild (which would re-run Lloyd and re-pick reps).
+  * on the build-time corpus, so [[appendPublish]]/[[delete]] keep
+  * classify ≡ the frozen structure applied to the updated corpus —
+  * not ≡ a retrained rebuild (which would re-run Lloyd and re-pick
+  * reps).
   * [[occupancy]]/[[skewRatio]] are the drift observables that drive
   * the retrain cadence, exactly IvfIndex's economics applied to the
   * dedup blocking.
@@ -109,8 +110,8 @@ object SemanticIndex {
 
   /** The frozen halves only (params/centroids/reps — everything Δ
     * assignment needs, nothing corpus-sized): shared by [[load]] and
-    * [[append]] so an append never touches the corpus table. Read on
-    * the driver, no Spark job.
+    * [[appendPublish]] so an append never touches the corpus table.
+    * Read on the driver, no Spark job.
     */
   private def loadBlocking(spark: SparkSession, path: String,
       gen: String): (Dedup.SemanticBlocking, Double) = {
@@ -196,38 +197,17 @@ object SemanticIndex {
   }
 
   /** Incremental maintenance: assign ONLY the new vectors through the
-    * frozen centroids + reps and append their (block, sb) rows — cost
-    * ∝ |newVectors|, no corpus re-read, no rewrite of existing files
-    * (spec-asserted). Classify over the appended index ≡ the frozen
-    * structure applied to corpus ∪ Δ (SemanticIndexSpec pins it); as
-    * Δ drifts from the build distribution, [[skewRatio]] climbs and
-    * the answer is a retrain, not more appends.
-    *
-    * IN-PLACE mutation with the [[graft.similarity.IvfIndex.append]]
-    * concurrency contract (ADVICE r13): targets the newest dir
-    * EXCLUSIVE to the current generation, or degrades to one
-    * [[appendPublish]] when every dir is shared with the retained
-    * previous generation.
-    */
-  def append(spark: SparkSession, path: String, newVectors: DataFrame,
-      idCol: String, vecCol: String): Unit =
-    Artifacts.appendTarget(spark, path, CorpusDirs) match {
-      case (gen, Some(target)) =>
-        val (blocking, _) = loadBlocking(spark, path, gen)
-        Dedup.blockCorpus(blocking, newVectors, idCol, vecCol,
-          blocking.signBits)
-          .write.mode("append").parquet(target)
-      case (_, None) => appendPublish(spark, path, newVectors, idCol, vecCol)
-    }
-
-  /** Incremental maintenance, GENERATION-PUBLISHED (VERDICT r13
-    * next-round #4 — appendPublish parity for the semantic index):
-    * same frozen-structure Δ assignment as [[append]], but the new
-    * rows land in a fresh immutable pool dir and a NEW generation is
-    * committed whose manifest = the parent's corpus dirs + the Δ dir,
-    * reps carried by reference, tombstones carried forward. Write
-    * cost ∝ Δ; a concurrent [[load]] resolves the parent or the child
-    * generation, never a mix — the per-trigger ingest shape
+    * frozen centroids + reps, write their (block, sb) rows into a
+    * fresh immutable pool dir and commit a NEW generation whose
+    * manifest = the parent's corpus dirs + the Δ dir (reps carried by
+    * reference, centroids and params byte-copied, tombstones carried
+    * forward) — cost ∝ |newVectors|, no corpus re-read, no rewrite of
+    * existing files (spec-asserted). Classify over the appended index
+    * ≡ the frozen structure applied to corpus ∪ Δ (SemanticIndexSpec
+    * pins it); as Δ drifts from the build distribution, [[skewRatio]]
+    * climbs and the answer is a retrain, not more appends. A
+    * concurrent [[load]] resolves the parent or the child generation,
+    * never a mix — the per-trigger ingest shape
     * [[graft.streaming.IndexMaintStream]] drives.
     */
   def appendPublish(spark: SparkSession, path: String,

@@ -102,13 +102,12 @@ object IvfIndex {
     * dir, plus a generation holding the (cell, centroid) file and a
     * `corpus_dirs` manifest pointing at the pool (ADVICE r12: with
     * the corpus INSIDE the generation dir, incremental maintenance
-    * either mutated a committed generation in place — torn reads — or
     * had to copy the whole corpus per append; the manifest lets
     * [[appendPublish]] reference the frozen parts by pointer).
     * Releases [[build]]'s training cache once the write completes.
     *
     * ATOMIC PUBLISH (VERDICT r11 next-round #2): the generation is
-    * committed by marker ([[graft.tools.Artifacts.publish]]) — a
+    * committed by marker ([[graft.tools.Artifacts.publishGen]]) — a
     * rebuild over a live index can never be read torn (new centroids,
     * old corpus) by a concurrent [[load]], which resolves the last
     * COMMITTED generation. The previous generation and every pool dir
@@ -153,72 +152,42 @@ object IvfIndex {
     Artifacts.readVectorsFile(spark, s"$gen/centroids").sortBy(_._1.head)
       .map(_._2).toArray
 
-  /** Δ rows at the frozen centroids: (id, vec, cell). */
-  private def assign(newVectors: DataFrame, idCol: String, vecCol: String,
-      centroids: Array[Array[Double]]): DataFrame =
-    newVectors.select(col(idCol), col(vecCol))
-      .withColumn("cell", Similarity.cellColumn(col(vecCol), centroids))
-
-  /** Incremental maintenance, IN PLACE: assign ONLY the new vectors to
-    * the FROZEN centroid layout and append them to the current
-    * generation's newest corpus dir — cost ∝ |newVectors|, never a
-    * retrain or corpus re-encode (the `refreshStats`
-    * scans-only-what-changed property applied to the vector index;
-    * daily ingest on a 100 TB corpus cannot pay a full rebuild per
-    * batch). Centroids are read from the saved artifact (nCells×dim
-    * values, bounded) and NOT retrained, so cell assignment of the
-    * new vectors is the same pure function of (vector, centroids) the
-    * original build used: a probe over the appended index is EXACTLY
-    * the probe over a rebuild of corpus ∪ Δ at the same centroids
-    * (spec-proven in IvfIndexSpec, alongside an old-files-untouched
-    * assertion).
+  /** Incremental maintenance: assign ONLY the new vectors to the
+    * FROZEN centroid layout, write them into a fresh immutable pool
+    * dir and commit a NEW generation whose manifest = the parent's
+    * dirs + the Δ dir (centroids byte-copied, tombstones carried
+    * forward). Cost ∝ |newVectors|, never a retrain or corpus
+    * re-encode — the frozen parts pass by reference (the
+    * `refreshStats` scans-only-what-changed property applied to the
+    * vector index; daily ingest on a 100 TB corpus cannot pay a full
+    * rebuild per batch). Centroids are read from the saved artifact
+    * (nCells×dim values, bounded) and NOT retrained, so cell
+    * assignment of the new vectors is the same pure function of
+    * (vector, centroids) the original build used: a probe over the
+    * appended index is EXACTLY the probe over a rebuild of corpus ∪ Δ
+    * at the same centroids (spec-proven in IvfIndexSpec, alongside an
+    * old-files-untouched assertion).
     *
-    * CONCURRENCY CONTRACT (ADVICE r12 + r13): this mutates committed
-    * data — single-writer maintenance only, and a load racing the
-    * append may observe part of Δ (never a torn centroids/corpus mix
-    * — centroids are untouched). The mutation targets the newest dir
-    * EXCLUSIVE to the current generation (post-r13, pool dirs are
-    * shared across generations: appending into a shared dir would
-    * also widen what a reader pinned to the RETAINED PREVIOUS
-    * generation sees — ADVICE r13); when every dir is shared, the
-    * append degrades gracefully to one [[appendPublish]] instead.
-    * When concurrent probes must see atomic appends — the
-    * streaming-maintenance shape — use [[appendPublish]] directly.
-    *
-    * The layout consequence of freezing: cell occupancy can drift
-    * from the trained balance as the distribution shifts — the
-    * standard IVF production trade; retrain on a cadence (full
-    * [[build]]) when drift materializes, append between cadences.
-    */
-  def append(spark: SparkSession, path: String, newVectors: DataFrame,
-      idCol: String, vecCol: String): Unit =
-    Artifacts.appendTarget(spark, path, CorpusDirs) match {
-      case (gen, Some(target)) =>
-        assign(newVectors, idCol, vecCol, centroidsOf(spark, gen))
-          .write.mode("append").partitionBy("cell").parquet(target)
-      case (_, None) => appendPublish(spark, path, newVectors, idCol, vecCol)
-    }
-
-  /** Incremental maintenance, GENERATION-PUBLISHED (VERDICT r12
-    * next-round #3 + ADVICE r12): same frozen-centroid Δ-assignment
-    * as [[append]], but the new codes land in a fresh immutable pool
-    * dir and a NEW generation is committed whose manifest = the
-    * parent's dirs + the Δ dir (tombstones carried forward). Write
-    * cost is still ∝ Δ — the frozen parts pass by reference — and a
-    * concurrent [[load]] resolves either the parent or the child
+    * A concurrent [[load]] resolves either the parent or the child
     * generation, never a mix and never a partial Δ: the per-trigger
     * ingest loop a serving index runs under live probes
     * (IndexMaintStreamSpec drives it from foreachBatch and asserts
     * mid-stream loads are always complete committed prefixes).
     * Long chains of appends accumulate manifest entries; [[compact]]
     * (or a retrain [[save]]) folds them back to one dir.
+    *
+    * The layout consequence of freezing: cell occupancy can drift
+    * from the trained balance as the distribution shifts — the
+    * standard IVF production trade; retrain on a cadence (full
+    * [[build]]) when drift materializes, append between cadences.
     */
   def appendPublish(spark: SparkSession, path: String,
       newVectors: DataFrame, idCol: String, vecCol: String,
       tag: Option[String] = None): Unit = {
     val gen = Artifacts.requireGen(spark, path)
-    val pool = Artifacts.writePool(
-      assign(newVectors, idCol, vecCol, centroidsOf(spark, gen)), path, "cell")
+    val pool = Artifacts.writePool(newVectors.select(col(idCol), col(vecCol))
+      .withColumn("cell", Similarity.cellColumn(col(vecCol), centroidsOf(spark, gen))),
+      path, "cell")
     Artifacts.publishGen(spark, path,
       Seq(CorpusDirs -> (Artifacts.dirsOf(spark, path, gen, CorpusDirs) :+ pool)),
       parent = Some(gen), copy = Seq("centroids"), tag = tag)
@@ -242,7 +211,7 @@ object IvfIndex {
   }
 
   /** Logical delete — the retraction half of index maintenance
-    * ([[append]] is the ingest half): [[graft.tools.Artifacts.delete]]
+    * ([[appendPublish]] is the ingest half): [[graft.tools.Artifacts.delete]]
     * appends the ids to the current generation's tombstone sidecar and
     * touches no corpus file (spec-asserted). A probe over the loaded
     * index then equals a probe over the SAME frozen centroids with the

@@ -110,7 +110,7 @@ object PqIndex {
     * ratio is maxN·k/nRows — ≈1–2 on a codebook that still describes
     * the data, climbing as drifted appends pile into few codes.
     * Production cadence mirrors [[IvfIndex.skewRatio]]: append
-    * ([[append]]) while the ratio holds, retrain ([[train]] + a
+    * ([[appendPublish]]) while the ratio holds, retrain ([[train]] + a
     * re-[[encode]]) when it crosses the caller's band. Bounded: one
     * aggregate over the m×k-row usage.
     */
@@ -233,15 +233,16 @@ object PqIndex {
     (cb, Artifacts.dropTombstoned(spark, gen, codes, idOf(codes)))
   }
 
-  /** Logical delete (takedowns — the maintenance operation [[append]]
-    * cannot express): [[graft.tools.Artifacts.delete]] appends the ids
-    * to the tombstone sidecar; no codes/codebook file is touched
+  /** Logical delete (takedowns — the maintenance operation
+    * [[appendPublish]] cannot express): [[graft.tools.Artifacts.delete]]
+    * appends the ids to the tombstone sidecar; no codes/codebook file
+    * is touched
     * (spec-asserted). A tombstoned id can never surface from
     * [[adcScores]]/[[topK]] over a loaded index; because [[encode]] is
     * per-row pure, delete-then-scan ≡ a re-encode without the ids at
     * the same codebook (the codebook itself stays frozen — a RETRAIN
-    * would move centroids, same caveat as [[append]]). [[compact]]
-    * folds the sidecar in on the retrain cadence.
+    * would move centroids, same caveat as [[appendPublish]]).
+    * [[compact]] folds the sidecar in on the retrain cadence.
     */
   def delete(spark: SparkSession, path: String,
       ids: DataFrame, idCol: String): Unit =
@@ -264,39 +265,20 @@ object PqIndex {
       parent = Some(gen), folded = snap.files, copy = Seq("codebook"))
   }
 
-  /** Incremental maintenance, the [[IvfIndex.append]] twin: encode
-    * ONLY the new vectors against the FROZEN codebook (read from the
-    * artifact, never retrained) and append their codes — cost ∝ Δ,
-    * no corpus re-encode. Because [[encode]] is a deterministic pure
-    * function of (vector, codebook), ADC scores over the appended
-    * codes table are EXACTLY those over a full re-encode of
-    * corpus ∪ Δ at the same codebook (spec-proven in PqIndexSpec).
-    * Same drift trade as the IVF append: codebook quality ages as
-    * the distribution shifts; retrain on a cadence, append between.
-    *
-    * IN-PLACE mutation with the [[IvfIndex.append]] concurrency
-    * contract (ADVICE r13): targets the newest dir EXCLUSIVE to the
-    * current generation, or degrades to one [[appendPublish]] when
-    * every dir is shared with the retained previous generation.
-    */
-  def append(spark: SparkSession, path: String,
-      newVectors: DataFrame, idCol: String, vecCol: String): Unit =
-    Artifacts.appendTarget(spark, path, CodesDirs) match {
-      case (gen, Some(target)) =>
-        encode(codebookOf(spark, gen), newVectors, idCol, vecCol)
-          .write.mode("append").parquet(target)
-      case (_, None) => appendPublish(spark, path, newVectors, idCol, vecCol)
-    }
-
-  /** Incremental maintenance, GENERATION-PUBLISHED (VERDICT r13
-    * next-round #4 — [[IvfIndex.appendPublish]] parity for the
-    * compressed index): same frozen-codebook Δ-encode as [[append]],
-    * but the new codes land in a fresh immutable pool dir and a NEW
-    * generation is committed whose manifest = the parent's dirs + the
-    * Δ dir (tombstones carried forward). Write cost ∝ Δ; a concurrent
-    * [[load]] resolves the parent or the child generation, never a
-    * mix — the per-trigger ingest shape
-    * [[graft.streaming.IndexMaintStream]] drives.
+  /** Incremental maintenance, the [[IvfIndex.appendPublish]] twin:
+    * encode ONLY the new vectors against the FROZEN codebook (read
+    * from the artifact, never retrained), write their codes into a
+    * fresh immutable pool dir and commit a NEW generation whose
+    * manifest = the parent's dirs + the Δ dir (codebook byte-copied,
+    * tombstones carried forward) — cost ∝ Δ, no corpus re-encode.
+    * Because [[encode]] is a deterministic pure function of (vector,
+    * codebook), ADC scores over the appended codes table are EXACTLY
+    * those over a full re-encode of corpus ∪ Δ at the same codebook
+    * (spec-proven in PqIndexSpec). A concurrent [[load]] resolves the
+    * parent or the child generation, never a mix — the per-trigger
+    * ingest shape [[graft.streaming.IndexMaintStream]] drives. Same
+    * drift trade as the IVF append: codebook quality ages as the
+    * distribution shifts; retrain on a cadence, append between.
     */
   def appendPublish(spark: SparkSession, path: String,
       newVectors: DataFrame, idCol: String, vecCol: String,

@@ -21,14 +21,18 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, MapType,
   * FileSystem, so the same maintenance code runs against HDFS/object
   * stores at cluster scale.
   *
-  * It also owns the generation LIFECYCLE the five serving indexes
-  * (IVF, PQ, MinHash, Semantic, Graph) share — [[publishGen]],
-  * [[dirsOf]], [[dropTombstoned]], [[delete]], [[snapshot]] and
-  * [[appendTarget]]. Each index keeps only its format: its frozen
-  * structure and how it assigns and reads Δ rows. Layout:
+  * It also owns the generation LIFECYCLE every durable artifact
+  * shares — the five serving indexes (IVF, PQ, MinHash, Semantic,
+  * Graph) and the CC label store: [[publishGen]], [[dirsOf]],
+  * [[dropTombstoned]], [[delete]] and [[snapshot]]. [[publishGen]] is
+  * the only writer of a generation; [[delete]]'s tombstone sidecar is
+  * the only file added to a committed one. Each artifact keeps only
+  * its format: its frozen structure and how it assigns and reads Δ
+  * rows. Layout:
   * {{{
   * root/pool/<token>/…             immutable data dirs, shared by reference
-  * root/g%08d/<name>_dirs          manifests: "ord\tpool/<token>" lines
+  * root/g%08d/<name>_dirs          manifests: "ord\tpool/<token>[/…]" lines
+  *                                 (e.g. corpus_dirs, bucket_dirs)
   * root/g%08d/tombstones/…parquet  deleted ids (column `id`)
   * root/g%08d/_TAG_<tag>           idempotency tag of the publish
   * root/g%08d/_COMMITTED           commit marker, created last
@@ -300,7 +304,7 @@ object Artifacts {
     * COMMITTED generation's manifest, so in-flight readers of the
     * retained previous generation keep a complete layout.
     */
-  def prunePool(spark: SparkSession, root: String,
+  private[graft] def prunePool(spark: SparkSession, root: String,
       referencedDirs: Iterable[String]): Unit = {
     val keep = referencedDirs
       .map(d => d.split("/pool/").last.split("/").head).toSet
@@ -401,7 +405,8 @@ object Artifacts {
     * generation's path. A crash inside `write` leaves an uncommitted
     * dir that no reader resolves and the next publish overwrites.
     */
-  def publish(spark: SparkSession, root: String)(write: String => Unit): String = {
+  private[graft] def publish(spark: SparkSession, root: String)(
+      write: String => Unit): String = {
     val gens = listGens(spark, root)
     val next = gens.lastOption.map(_._1 + 1).getOrElse(0L)
     val (f, _) = fs(spark, root)
@@ -551,23 +556,5 @@ object Artifacts {
       if (files.isEmpty) Nil
       else readParquet(spark, files.toSeq).select(col("id")).collect()
         .iterator.map(_.get(0)).filter(_ != null).toSeq.distinct)
-  }
-
-  /** (current generation, in-place append target) — the target is the
-    * newest dir of manifest `name` that holds rows and that the
-    * previous committed generation does NOT reference: the one place
-    * an in-place append is invisible to readers pinned to the
-    * retained previous generation (ADVICE r13). None when every dir
-    * is shared; the caller then publishes a generation instead.
-    */
-  private[graft] def appendTarget(spark: SparkSession, root: String,
-      name: String): (String, Option[String]) = {
-    val gens = committedGens(spark, root)
-    require(gens.nonEmpty,
-      s"no committed index generation under $root — publish (save) first")
-    val prev = gens.dropRight(1).lastOption
-      .map(dirsOf(spark, root, _, name).toSet).getOrElse(Set.empty[String])
-    (gens.last, dirsOf(spark, root, gens.last, name).filterNot(prev)
-      .reverseIterator.find(holdsRows(spark, _)))
   }
 }

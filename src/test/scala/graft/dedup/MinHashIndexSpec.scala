@@ -85,7 +85,7 @@ class MinHashIndexSpec extends SparkTestBase {
     val shinglesBefore = sideFiles(path, "shingles")
     val paramsBefore = allFiles(s"${gen(path)}/params")
 
-    MinHashIndex.append(spark, path, delta, "doc_id", "text")
+    MinHashIndex.appendPublish(spark, path, delta, "doc_id", "text")
 
     // frozen-layout economics: append writes Δ's rows as NEW files,
     // never rewriting the corpus's (path+size identical), and the

@@ -96,7 +96,7 @@ class SemanticIndexSpec extends SparkTestBase {
     val repsBefore = repsFiles(path)
     val centroidsBefore = allFiles(s"${gen(path)}/centroids")
 
-    SemanticIndex.append(spark, path, delta, "vec_id", "embedding")
+    SemanticIndex.appendPublish(spark, path, delta, "vec_id", "embedding")
 
     // frozen-structure economics: Δ's rows land as NEW corpus files;
     // nothing existing is rewritten and the trained halves
@@ -113,7 +113,7 @@ class SemanticIndexSpec extends SparkTestBase {
 
     // classify over the appended index ≡ the FROZEN corpus-trained
     // blocking applied to corpus ∪ Δ (NOT a retrain on the union —
-    // the IvfIndex.append contract)
+    // the IvfIndex.appendPublish contract)
     val appended = SemanticIndex.load(spark, path, "vec_id", "embedding")
     val viaAppended = rows(SemanticIndex.classify(appended, batch))
     val blocking = Dedup.semanticBlocking(corpus, "vec_id", "embedding", T)

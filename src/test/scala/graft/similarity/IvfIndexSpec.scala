@@ -196,7 +196,7 @@ class IvfIndexSpec extends SparkTestBase {
       .flatMap(d => dataFiles(d).map { case (f, sz) => (s"$d#$f", sz) }).toMap
     val before = corpusFiles()
 
-    IvfIndex.append(spark, path, delta, "vec_id", "embedding")
+    IvfIndex.appendPublish(spark, path, delta, "vec_id", "embedding")
 
     // --- scanned/written work ∝ Δ: every pre-existing corpus file is
     // untouched (same path, same size — append never rewrites the

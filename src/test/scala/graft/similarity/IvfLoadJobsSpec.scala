@@ -1,11 +1,12 @@
 package graft.similarity
 
 import graft.SparkTestBase
+import graft.dedup.LabelStore
 import graft.tools.{Artifacts, JobMeter, Scratch, ServingKinds}
 
 /** The Spark jobs a serving-index load starts, counted by a listener:
-  * a table over the five kinds of [[graft.tools.ServingKinds]], and
-  * the IVF probes over a load. The IVF fixture has 64 cells in each of
+  * a table over the five kinds of [[graft.tools.ServingKinds]] and the
+  * CC label store, and the IVF probes over a load. The IVF fixture has 64 cells in each of
   * two pool dirs: more cell dirs per pool than Spark's 32-path
   * threshold for listing a directory with a distributed job, had the
   * load listed them through Spark.
@@ -112,5 +113,21 @@ class IvfLoadJobsSpec extends SparkTestBase {
         assert((j0, j1) == (plain, sidecar))
       } finally Scratch.deleteRecursively(new java.io.File(r))
     }
+  }
+
+  test("label store load and loadBuckets over 64 buckets: 0 jobs") {
+    val r = java.nio.file.Files.createTempDirectory("load_jobs_labels")
+      .toAbsolutePath.toString
+    try {
+      // component c lands in bucket c: 64 bucket dirs of 10 rows each,
+      // more than Spark's 32-path threshold for a listing job
+      LabelStore.save((0L until 640L).map(i => (i, i % 64))
+        .toDF("id", "component"), r, nBuckets = 64)
+      assert(LabelStore.manifest(spark, r).size == 64)
+      val (all, j0) = jobsOf(LabelStore.load(spark, r))
+      val (some, j1) = jobsOf(LabelStore.loadBuckets(spark, r, Set(1, 2)))
+      assert((j0, j1) == (0, 0))
+      assert(all.count() == 640 && some.count() == 20)
+    } finally Scratch.deleteRecursively(new java.io.File(r))
   }
 }

@@ -80,7 +80,7 @@ class IvfServeSpec extends SparkTestBase {
     try assertServesAll(idx, queries) finally idx.unpersist()
   }
 
-  test("after a delete, an in-place append, an appendPublish and a compact") {
+  test("after a delete, two appendPublishes and a compact") {
     withRoot { root =>
       saved(root)
       val top = assertServes(load(root), queries.head, 5, 2)
@@ -90,11 +90,12 @@ class IvfServeSpec extends SparkTestBase {
       assertServesAll(deleted, queries)
       assert(!IvfIndex.topK(deleted, queries.head, 5, 2).collect()
         .exists(r => top.take(2).contains(r)))
-      IvfIndex.append(spark, root, vectors(300 until 340, 2), "vec_id", "embedding")
+      IvfIndex.appendPublish(spark, root, vectors(300 until 340, 2), "vec_id",
+        "embedding")
       assertServesAll(load(root), queries)
       IvfIndex.appendPublish(spark, root, vectors(400 until 440, 3), "vec_id",
         "embedding")
-      assert(IvfIndex.corpusDirs(spark, root).size == 2)
+      assert(IvfIndex.corpusDirs(spark, root).size == 3)
       assertServesAll(load(root), queries)
       IvfIndex.compact(spark, root, "vec_id", "embedding")
       assertServesAll(load(root), queries)

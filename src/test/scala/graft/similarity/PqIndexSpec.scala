@@ -75,7 +75,7 @@ class PqIndexSpec extends SparkTestBase {
 
       def files() = codesFiles(dir)
       val before = files()
-      PqIndex.append(spark, dir, delta, "vec_id", "embedding")
+      PqIndex.appendPublish(spark, dir, delta, "vec_id", "embedding")
       val after = files()
       // pre-existing code files untouched: append never re-encodes
       before.foreach { case (f, sz) =>

@@ -54,8 +54,8 @@ class IndexMaintStreamSpec extends SparkTestBase {
       // pair new corpus with different centroids)
       assert(seen.map(_._2).distinct.size == 1)
 
-      // stream of 3 triggers ≡ one batch append of the whole Δ
-      IvfIndex.append(spark, batched, delta, "vec_id", "embedding")
+      // stream of 3 triggers ≡ one appendPublish of the whole Δ
+      IvfIndex.appendPublish(spark, batched, delta, "vec_id", "embedding")
       val probes = emb.filter($"vec_id" % 17 === 0).limit(5)
         .select($"vec_id".as("query_id"), $"embedding".as("qv"))
         .localCheckpoint()
@@ -181,7 +181,7 @@ class IndexMaintStreamSpec extends SparkTestBase {
       assert(triggers == 2)
       assert(seen.map(_._1).toSeq == seen.map(_._2)
         .scanLeft(base.count())(_ + _).dropRight(1).toSeq)
-      // frozen blocking: maintained ≡ one-shot append of the union
+      // frozen blocking: maintained ≡ one appendPublish of the union
       val maintained = SemanticIndex.classify(
         SemanticIndex.load(spark, streamed, "vec_id", "embedding"), probe)
         .withColumn("cosine", round($"cosine", 6))
@@ -190,7 +190,7 @@ class IndexMaintStreamSpec extends SparkTestBase {
       try {
         SemanticIndex.save(SemanticIndex.build(base, "vec_id", "embedding",
           threshold = 0.35), oneShot)
-        SemanticIndex.append(spark, oneShot, delta, "vec_id", "embedding")
+        SemanticIndex.appendPublish(spark, oneShot, delta, "vec_id", "embedding")
         val want = SemanticIndex.classify(
           SemanticIndex.load(spark, oneShot, "vec_id", "embedding"), probe)
           .withColumn("cosine", round($"cosine", 6))
